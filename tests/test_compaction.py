@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from trail_condition_etl_spark.sinks import manifest as _manifest
 from trail_condition_etl_spark.sinks.manifest import (
     add_bloom_index,
     compact_buckets,
@@ -22,16 +23,21 @@ from trail_condition_etl_spark.sinks.manifest import (
 )
 
 
-def _frame(spark, lo: int, hi: int, parts: int = 6):
-    return (
-        spark.range(lo, hi)
-        .select(
-            F.col("id").alias("k"),
-            (F.col("id") * 3).alias("v"),
-            F.concat(F.lit("t"), F.col("id").cast("string")).alias("tag"),
-        )
-        .repartition(parts)  # several tasks => several files per bucket
+def _frame(spark, lo: int, hi: int):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 3).alias("v"),
+        F.concat(F.lit("t"), F.col("id").cast("string")).alias("tag"),
     )
+
+
+def _fragmented_upsert(spark, table, rows) -> None:
+    """Upsert under a tiny per-file row cap, so every touched bucket
+    lands as several small files (the small-file debt compaction pays
+    off; a commit otherwise writes one file per bucket)."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(_manifest, "_MAX_ROWS_PER_FILE", 3)
+        manifest_upsert(spark, table, rows, ["k"])
 
 
 def _files_per_bucket(table) -> dict[str, int]:
@@ -56,8 +62,8 @@ def table(spark, tmp_path):
 def test_compacts_multifile_buckets_and_carries_rest(spark, table):
     optimize_table(spark, table)  # clean 1-file baseline
     # dirty SOME buckets: a narrow upsert rewrites only touched buckets,
-    # multi-task so they land multi-file
-    manifest_upsert(spark, table, _frame(spark, 0, 40, parts=5), ["k"])
+    # capped so they land multi-file
+    _fragmented_upsert(spark, table, _frame(spark, 0, 40))
     before = _files_per_bucket(table)
     mf_before = read_manifest(table)
     dirty = {b for b, n in before.items() if n > 1}
@@ -103,7 +109,7 @@ def test_explicit_targets_leave_other_deletes_pending(spark, table):
 
 def test_maintain_uses_incremental_compaction(spark, table):
     optimize_table(spark, table)
-    manifest_upsert(spark, table, _frame(spark, 0, 40, parts=5), ["k"])
+    _fragmented_upsert(spark, table, _frame(spark, 0, 40))
     v = maintain_table(
         spark, table, max_files_per_bucket=1, max_bucket_bytes=None
     )
@@ -114,7 +120,7 @@ def test_maintain_uses_incremental_compaction(spark, table):
 
 def test_maintain_keeps_full_optimize_for_clustered_intent(spark, table):
     optimize_table(spark, table, cluster_by=["v"], files_per_bucket=2)
-    manifest_upsert(spark, table, _frame(spark, 0, 40, parts=5), ["k"])
+    _fragmented_upsert(spark, table, _frame(spark, 0, 40))
     v = maintain_table(
         spark, table, max_files_per_bucket=1, max_bucket_bytes=None
     )
@@ -130,10 +136,8 @@ def test_maintain_keeps_full_optimize_for_clustered_intent(spark, table):
 def test_compaction_respects_mapping_blooms_and_time_travel(spark, table):
     rename_column(spark, table, "v", "val")
     add_bloom_index(spark, table, "tag")
-    manifest_upsert(
-        spark, table,
-        _frame(spark, 0, 40, parts=5).withColumnRenamed("v", "val"),
-        ["k"],
+    _fragmented_upsert(
+        spark, table, _frame(spark, 0, 40).withColumnRenamed("v", "val")
     )
     v_before = read_manifest(table)["version"]
     compact_buckets(spark, table)

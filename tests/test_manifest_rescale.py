@@ -119,24 +119,29 @@ def test_maintain_table_compacts_only_past_thresholds(spark, tmp_path):
     assert mf.maintain_table(spark, table, max_delete_files=4) is None
 
 
-def test_maintain_table_compacts_scattered_small_files(spark, tmp_path):
+def test_maintain_table_compacts_scattered_small_files(
+    spark, tmp_path, monkeypatch
+):
     """The small-file trigger: a bucket dir holding more parquet files
-    than the threshold (the shape a many-task write leaves behind)
-    compacts to one file per bucket."""
+    than the threshold (the shape a small per-file row cap leaves
+    behind) compacts to one file per bucket."""
     import os as _os
 
     table = _table(spark, tmp_path, n=50, n_buckets=1)
     rows = spark.range(200, 400).select(
         F.col("id").cast("int").alias("k"), (F.col("id") * 10).alias("v")
-    ).repartition(12)  # multiple tasks -> multiple files in the bucket dir
-    mf.manifest_upsert(spark, table, rows, ["k"])
+    )
+    with monkeypatch.context() as m:
+        # a low row cap -> multiple files in the bucket dir
+        m.setattr(mf, "_MAX_ROWS_PER_FILE", 20)
+        mf.manifest_upsert(spark, table, rows, ["k"])
 
     def n_files():
         d = _os.path.join(table, mf.read_manifest(table)["buckets"]["0"])
         return sum(1 for f in _os.listdir(d) if f.endswith(".parquet"))
 
     frag = n_files()
-    assert frag > 1  # genuinely fragmented (AQE may coalesce, never to 1)
+    assert frag > 1  # genuinely fragmented
     # at-or-below threshold: untouched
     assert mf.maintain_table(spark, table, max_files_per_bucket=frag) is None
     # above threshold: compacted to one file per bucket

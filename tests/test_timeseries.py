@@ -127,3 +127,36 @@ def test_ewma_window_is_capped(spark):
     rows = {r.day: r for r in timeseries.ewma_daily(ev).collect()}
     last_day = (T0 + dt.timedelta(days=n)).strftime("%Y-%m-%d")
     assert rows[last_day].ewma == 0.0
+
+
+def test_filled_days_matches_spine_join_with_a_repeated_day(spark):
+    # user 1 repeats 03-02: lead(day) of the first copy is its own day,
+    # which must not run the date sequence backwards into 03-01
+    from pyspark.sql import functions as F
+
+    D = dt.date(2026, 3, 1)
+    daily = spark.createDataFrame(
+        [
+            (1, D, 1.0),
+            (1, D + dt.timedelta(days=1), 2.0),
+            (1, D + dt.timedelta(days=1), 3.0),
+            (1, D + dt.timedelta(days=4), 4.0),
+            (2, D + dt.timedelta(days=2), 5.0),
+            (2, D + dt.timedelta(days=2), 6.0),
+        ],
+        "user_id long, day date, v double",
+    )
+    spine = daily.groupBy("user_id").agg(
+        F.explode(F.sequence(F.min("day"), F.max("day"))).alias("day")
+    )
+    want = spine.join(daily, ["user_id", "day"], "left")
+    got = timeseries.filled_days(daily, "v")
+
+    def rows(df):
+        return sorted(
+            (r.user_id, r.day, -1.0 if r.v is None else r.v)
+            for r in df.select("user_id", "day", "v").collect()
+        )
+
+    assert rows(got) == rows(want)
+    assert len(rows(got)) == 8

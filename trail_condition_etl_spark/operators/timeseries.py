@@ -201,7 +201,13 @@ def filled_days(daily: DataFrame, value_col: str) -> DataFrame:
     (duplicated aggs were cheap concurrent work), -37% at sf1.0, and
     one fact pass instead of two at any scale."""
     lw = Window.partitionBy("user_id").orderBy("day")
-    seq_end = F.coalesce(F.date_sub(F.lead("day").over(lw), 1), F.col("day"))
+    # a repeated (user_id, day) leads to its own day: clamp so that row
+    # emits just itself instead of a backwards sequence (a phantom
+    # day-1 row) — each copy then pairs with its spine day like the join
+    seq_end = F.greatest(
+        F.col("day"),
+        F.coalesce(F.date_sub(F.lead("day").over(lw), 1), F.col("day")),
+    )
     return (
         daily.select(
             "user_id",

@@ -910,9 +910,9 @@ def q_bloom_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=manifest_sink.INCREMENTAL_COMPACTION_SQL,
 )
 def q_incremental_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # bucket-wise compaction: small-file debt rewrites ONLY the
-    # offending buckets (untouched dirs carry by path); the emitted op
-    # column pins that the incremental 'compact' path ran
+    # bucket-wise compaction: pending delete-file debt rewrites ONLY
+    # the offending buckets (untouched dirs carry by path); the emitted
+    # op column pins that the incremental 'compact' path ran
     ensure_engine_conf(spark)
     return manifest_sink.incremental_compaction_query(spark, sf_dir)
 

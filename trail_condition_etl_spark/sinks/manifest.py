@@ -14,8 +14,8 @@ window the way Delta/Iceberg do, reduced to its essential mechanics:
 * the table state is a MANIFEST (`_manifests/0000000N.json`): a map
   bucket -> its current segment dir, plus the schema, per-bucket-dir
   column STATS (min/max/null-count — Iceberg's metadata-skipping
-  essential, recorded at commit from the just-written segment and
-  consulted by `read_manifest_table(skip=...)` and
+  essential, read at commit from the just-written segment's parquet
+  footers and consulted by `read_manifest_table(skip=...)` and
   `read_manifest_lookup` so predicate reads never open bucket dirs
   that cannot match), optional PER-FILE stats written by a clustered
   `optimize_table(cluster_by=...)` (Delta's OPTIMIZE ZORDER — the
@@ -63,6 +63,7 @@ import json
 import os
 import shutil
 import uuid
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.errors import AnalysisException
@@ -669,13 +670,17 @@ def _delta_commit(
 
 # ---------------------------------------------------------------------------
 # Per-bucket-dir column stats: Iceberg's metadata skipping reduced to its
-# essentials. Recorded at commit (one narrow agg over the just-written
-# segment, grouped by pk_bucket — bounded by the touched buckets),
-# carried forward by reference for untouched buckets, and consulted at
-# read so a predicate scan opens only bucket dirs whose [min, max]
-# ranges can contain matching rows. The reference analog is the
-# per-city window read-back (categorize-trail-conditions/src/
-# client.py:31-56), which never scans other cities' data.
+# essentials. A commit clusters its segment write by pk_bucket, so each
+# touched bucket gets ONE data file (more only past _MAX_ROWS_PER_FILE),
+# then reads the stats from the just-written parquet footers on the
+# driver — no Spark job re-reads the segment. Timestamps are written as
+# INT64 microseconds (session.py) because parquet-java records no footer
+# bounds for INT96. Stats carry forward by reference for untouched
+# buckets and are consulted at read so a predicate scan opens only
+# bucket dirs whose [min, max] ranges can contain matching rows. The
+# reference analog is the per-city window read-back
+# (categorize-trail-conditions/src/client.py:31-56), which never scans
+# other cities' data.
 # ---------------------------------------------------------------------------
 
 #: types whose min/max are recorded (orderable scalars; complex/binary
@@ -689,6 +694,12 @@ _STAT_TYPES = {
 #: with upper-bound increment; omitting the column entirely is the
 #: simpler always-sound choice — that bucket just isn't prunable on it)
 _MAX_STAT_STRING = 64
+
+#: rows per segment data file (Spark's maxRecordsPerFile): a clustered
+#: write puts each touched bucket in one task, so a bucket stays one
+#: file up to this many rows and splits only past it — file size stays
+#: bounded however large a bucket grows
+_MAX_ROWS_PER_FILE = 1_000_000
 
 #: crashed-writer staging dirs younger than this survive `vacuum` — an
 #: in-flight DataFrameWriter job stages WITHOUT the table lease, so age
@@ -744,22 +755,14 @@ def _norm_stat(v):
     return v
 
 
-def _stat_aggs(cols: list[str]) -> list[F.Column]:
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"__mn_{c}"))
-        aggs.append(F.max(c).alias(f"__mx_{c}"))
-        aggs.append(
-            F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
-        )
-    return aggs
-
-
-def _row_col_stats(d: dict, cols: list[str]) -> dict[str, list]:
+def _row_col_stats(bounds: dict[str, tuple]) -> dict[str, list]:
+    """{col -> [min, max, null_count]} as recorded in the manifest, from
+    {col -> (min, max, null_count)} bounds: JSON-encoded, with columns
+    that must never prune (long strings, NaN bounds) left out."""
     col_stats: dict[str, list] = {}
-    for c in cols:
-        mn = _stat_json(d[f"__mn_{c}"])
-        mx = _stat_json(d[f"__mx_{c}"])
+    for c, (mn, mx, nulls) in bounds.items():
+        mn = _stat_json(mn)
+        mx = _stat_json(mx)
         if isinstance(mn, str) and len(mn) > _MAX_STAT_STRING:
             continue
         if isinstance(mx, str) and len(mx) > _MAX_STAT_STRING:
@@ -772,68 +775,142 @@ def _row_col_stats(d: dict, cols: list[str]) -> dict[str, list]:
             # wrongly prune ranges that DO match the bucket's
             # non-NaN rows — omit the column, never prune on it
             continue
-        col_stats[c] = [mn, mx, int(d[f"__nl_{c}"] or 0)]
+        col_stats[c] = [mn, mx, int(nulls or 0)]
     return col_stats
 
 
-def _collect_segment_stats(
-    spark: SparkSession, seg_abs: str, stat_cols: list[str]
-) -> tuple[dict[str, dict[str, list]], dict[str, int]]:
-    """({bucket -> {col -> [min, max, null_count]}}, {bucket -> rows})
-    for the freshly written segment: ONE agg job, partial+final, output
-    bounded by n_buckets * n_cols. The per-bucket row count rides the
-    same job — it feeds op_metrics and the metadata-only COUNT(*)
-    (`manifest_row_count`)."""
-    if not any(e.startswith("pk_bucket=") for e in os.listdir(seg_abs)):
-        return {}, {}  # delete-all commit: empty segment, nothing to profile
-    seg = spark.read.parquet(seg_abs)
-    cols = [c for c in stat_cols if c in seg.columns]
-    out: dict[str, dict[str, list]] = {}
-    counts: dict[str, int] = {}
-    aggs = _stat_aggs(cols) + [F.count(F.lit(1)).alias("__ct")]
-    for r in seg.groupBy("pk_bucket").agg(*aggs).collect():
-        d = r.asDict()
-        out[str(d["pk_bucket"])] = _row_col_stats(d, cols)
-        counts[str(d["pk_bucket"])] = int(d["__ct"])
-    return out, counts
+def _write_segment(df: DataFrame, seg_abs: str) -> None:
+    """Write a bucketed frame as a segment: one dir per pk_bucket, each
+    task's rows of a bucket split into files of at most
+    `_MAX_ROWS_PER_FILE` rows. Callers choose the distribution."""
+    df.write.option("maxRecordsPerFile", _MAX_ROWS_PER_FILE).partitionBy(
+        "pk_bucket"
+    ).mode("overwrite").parquet(seg_abs)
 
 
-def _collect_file_stats(
-    spark: SparkSession, seg_abs: str, stat_cols: list[str]
-) -> dict[str, dict[str, dict[str, list]]]:
-    """{bucket -> {file basename -> {col -> [min, max, null_count]}}}
-    for a freshly written clustered segment: one agg job keyed by the
-    physical file, output bounded by n_files * n_cols. Basenames (not
-    full paths) are recorded so carried buckets keep valid stats — the
-    manifest's bucket entry already pins the dir. The per-dir map is
-    COMPLETE (every data file gets an entry, even an all-excluded-cols
-    one) — the read path treats a missing basename as unprunable, so
-    completeness here is what lets an empty surviving-file list mean
-    'whole dir pruned'."""
-    if not stat_cols:
-        return {}
-    if not any(e.startswith("pk_bucket=") for e in os.listdir(seg_abs)):
-        return {}
-    seg = spark.read.parquet(seg_abs)
-    cols = [c for c in stat_cols if c in seg.columns]
-    if not cols:
-        return {}
-    rows = (
-        seg.groupBy(F.input_file_name().alias("__f"))
-        .agg(*_stat_aggs(cols))
-        .collect()
+@dataclass(frozen=True)
+class _SegmentFooters:
+    """A just-written segment as its parquet footers describe it.
+    `stats` ({bucket -> {col -> [min, max, null_count]}}) and
+    `file_stats` ({bucket -> {file basename -> {col -> ...}}}) follow
+    the `_row_col_stats` rules. Basenames (not full paths) are recorded
+    so carried buckets keep valid file stats — the manifest's bucket
+    entry already pins the dir — and the per-dir map is COMPLETE (every
+    data file gets an entry): the read path treats a missing basename
+    as unprunable, so completeness is what lets an empty surviving-file
+    list mean 'whole dir pruned'."""
+
+    stats: dict[str, dict[str, list]]
+    file_stats: dict[str, dict[str, dict[str, list]]]
+    row_counts: dict[str, int]
+    files_written: int
+    bytes_written: int
+
+
+def _footer_value(v):
+    """A footer bound in the stored-stat domain: parquet timestamps are
+    UTC instants, stored bounds are naive UTC (see `_norm_stat`)."""
+    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+        return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def _merge_bound(a, b, pick):
+    """`pick` (min or max) of two bounds, None meaning 'no non-null
+    value'. A NaN bound stays NaN, so `_row_col_stats` omits the column
+    — Spark orders NaN above every number, and parquet-java's bounds
+    agree, so a NaN anywhere in a file already shows in its max."""
+    if a is None:
+        return b
+    if b is None:
+        return a
+    if a != a or b != b:
+        return float("nan")
+    return pick(a, b)
+
+
+def _merge_col(a: tuple, b: tuple) -> tuple:
+    return (
+        _merge_bound(a[0], b[0], min),
+        _merge_bound(a[1], b[1], max),
+        a[2] + b[2],
     )
-    out: dict[str, dict[str, dict[str, list]]] = {}
-    for r in rows:
-        d = r.asDict()
-        path = d["__f"]
-        if path.startswith("file:"):
-            path = path[len("file:"):]
-        fname = os.path.basename(path)
-        part = os.path.basename(os.path.dirname(path))  # pk_bucket=N
-        bucket = part.split("=", 1)[1]
-        out.setdefault(bucket, {})[fname] = _row_col_stats(d, cols)
+
+
+def _file_bounds(md, cols: list[str]) -> dict[str, tuple]:
+    """{col -> (min, max, null_count)} over one file's row groups, for
+    the columns whose footer bounds every row group holding non-null
+    values. A column absent from the file, or without statistics where
+    it has values (INT96 timestamps, strings past parquet-java's stats
+    size limit), is left out — never prunable, always sound."""
+    idx = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.path == col.name:  # top-level leaf
+            idx[col.name] = i
+    out = {}
+    for c in cols:
+        i = idx.get(c)
+        if i is None:
+            continue
+        acc = (None, None, 0)
+        for r in range(md.num_row_groups):
+            rg = md.row_group(r)
+            st = rg.column(i).statistics
+            if st is None or not st.has_null_count:
+                break
+            if st.has_min_max:
+                part = (_footer_value(st.min), _footer_value(st.max))
+            elif st.null_count == rg.num_rows:
+                part = (None, None)  # all-null row group: no bounds
+            else:
+                break
+            acc = _merge_col(acc, (*part, st.null_count))
+        else:
+            out[c] = acc
     return out
+
+
+def _read_footers(seg_abs: str, stat_cols: list[str]) -> _SegmentFooters:
+    """Stats, row counts, file and byte totals for a freshly written
+    segment, read from its data files' parquet footers on the driver
+    (no Spark job; cost is one footer parse per written file). Pass
+    `stat_cols=[]` for counts only."""
+    import pyarrow.parquet as pq
+
+    stats: dict[str, dict[str, list]] = {}
+    file_stats: dict[str, dict[str, dict[str, list]]] = {}
+    row_counts: dict[str, int] = {}
+    n_files = n_bytes = 0
+    for e in sorted(os.listdir(seg_abs)):
+        if not e.startswith("pk_bucket="):
+            continue
+        bucket = e.split("=", 1)[1]
+        d = os.path.join(seg_abs, e)
+        merged: dict[str, tuple] | None = None
+        for fn in sorted(os.listdir(d)):
+            if not fn.endswith(".parquet"):
+                continue  # .crc checksums
+            path = os.path.join(d, fn)
+            md = pq.read_metadata(path)
+            n_files += 1
+            n_bytes += os.path.getsize(path)
+            row_counts[bucket] = row_counts.get(bucket, 0) + md.num_rows
+            fb = _file_bounds(md, stat_cols)
+            file_stats.setdefault(bucket, {})[fn] = _row_col_stats(fb)
+            # a bucket column is bounded only if every file bounds it
+            merged = (
+                fb
+                if merged is None
+                else {
+                    c: _merge_col(merged[c], fb[c])
+                    for c in merged
+                    if c in fb
+                }
+            )
+        if merged is not None:
+            stats[bucket] = _row_col_stats(merged)
+    return _SegmentFooters(stats, file_stats, row_counts, n_files, n_bytes)
 
 
 def _collect_blooms(
@@ -1077,22 +1154,15 @@ def delete_where(
         )
         rel = os.path.join("data", f"del-{uuid.uuid4().hex[:12]}")
         del_abs = os.path.join(table_path, rel)
-        matched.write.partitionBy("pk_bucket").mode("overwrite").parquet(
-            del_abs
-        )
+        _write_segment(matched.repartition("pk_bucket"), del_abs)
         hit = [
             e for e in os.listdir(del_abs) if e.startswith("pk_bucket=")
         ]
         if not hit:
             shutil.rmtree(del_abs, ignore_errors=True)
             return mf["version"]  # nothing matched: no empty commit
-        per_bucket = {
-            r["pk_bucket"]: r["n"]
-            for r in spark.read.parquet(del_abs)
-            .groupBy("pk_bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # bounded by n_buckets
-        }
+        footers = _read_footers(del_abs, [])
+        per_bucket = footers.row_counts
         deletes = {
             b: list(v) for b, v in mf.get("deletes", {}).items()
         }
@@ -1100,7 +1170,7 @@ def delete_where(
         for e in hit:
             b = e.split("=", 1)[1]
             deletes.setdefault(b, []).append(os.path.join(rel, e))
-            delete_counts[b] = delete_counts.get(b, 0) + per_bucket[int(b)]
+            delete_counts[b] = delete_counts.get(b, 0) + per_bucket[b]
         manifest = {
             "version": mf["version"] + 1,
             "token": token,
@@ -1131,6 +1201,8 @@ def delete_where(
                 "buckets_written": 0,
                 "buckets_carried": len(mf["buckets"]),
                 "rows_deleted": sum(per_bucket.values()),
+                "files_written": footers.files_written,
+                "bytes_written": footers.bytes_written,
                 "mode": "merge-on-read",
             },
         }
@@ -1800,9 +1872,13 @@ def manifest_upsert(
                     mapping[c] = fresh
         seg = os.path.join("data", f"seg-{uuid.uuid4().hex[:12]}")
         seg_abs = os.path.join(table_path, seg)
-        _to_physical_frame(merged, mapping).write.partitionBy(
-            "pk_bucket"
-        ).mode("overwrite").parquet(seg_abs)
+        # cluster by bucket: each touched bucket is written by ONE task,
+        # so it lands as one file (up to the row cap) instead of one per
+        # upstream partition holding its rows
+        _write_segment(
+            _to_physical_frame(merged, mapping).repartition("pk_bucket"),
+            seg_abs,
+        )
         buckets = dict(carried)
         for e in os.listdir(seg_abs):
             if e.startswith("pk_bucket="):
@@ -1818,23 +1894,23 @@ def manifest_upsert(
                 prev.fields + [f for f in schema.fields if f.name not in have]
             )
         # stats: carried buckets keep their recorded stats by reference;
-        # rewritten buckets get fresh stats from the new segment. A
-        # commit with collect_stats=False leaves its rewritten buckets
-        # stat-less (unprunable — sound, just slower to read).
+        # rewritten buckets get fresh stats from the new segment's
+        # footers. A commit with collect_stats=False leaves its rewritten
+        # buckets stat-less (unprunable — sound, just slower to read).
         prev_stats = mf.get("stats", {}) if mf is not None else {}
         stats = {b: prev_stats[b] for b in carried if b in prev_stats}
         prev_counts = mf.get("row_counts", {}) if mf is not None else {}
         row_counts = {b: prev_counts[b] for b in carried if b in prev_counts}
-        seg_counts: dict[str, int] = {}
+        # stats key by PHYSICAL name (they describe file contents)
+        footers = _read_footers(
+            seg_abs,
+            [mapping.get(c, c) for c in _stat_columns(schema)]
+            if collect_stats
+            else [],
+        )
         if collect_stats:
-            # stats key by PHYSICAL name (they describe file contents)
-            seg_stats, seg_counts = _collect_segment_stats(
-                spark,
-                seg_abs,
-                [mapping.get(c, c) for c in _stat_columns(schema)],
-            )
-            stats.update(seg_stats)
-            row_counts.update(seg_counts)
+            stats.update(footers.stats)
+            row_counts.update(footers.row_counts)
         # per-file stats (written by a clustered optimize) survive on
         # carried buckets — their dirs are immutable; rewritten buckets
         # lose clustering and fall back to dir-level stats until the
@@ -1892,9 +1968,9 @@ def manifest_upsert(
                     if delta_ok and mf is not None and not replace
                     else len(carried)
                 ),
-                "rows_written": (
-                    sum(seg_counts.values()) if collect_stats else None
-                ),
+                "rows_written": sum(footers.row_counts.values()),
+                "files_written": footers.files_written,
+                "bytes_written": footers.bytes_written,
             },
         }
         if delta_ok and mf is not None and not replace:
@@ -3198,13 +3274,14 @@ def manifest_row_count(
 ) -> int | None:
     """Exact COUNT(*) from metadata alone — zero data files opened
     (the Iceberg/Delta metadata-count shortcut). Per-bucket row counts
-    ride the commit-time stats job and carry by reference with their
-    buckets. Returns None when any referenced bucket lacks a count
-    (a commit made with collect_stats=False, or a pre-row_counts
-    manifest): an honest "must scan", never a wrong number. Pending
-    merge-on-read deletes subtract by their recorded per-bucket key
-    counts — exact because `delete_where` matches against the current
-    snapshot, so a key is counted in at most one delete file."""
+    are read from the written files' footers at commit and carry by
+    reference with their buckets. Returns None when any referenced
+    bucket lacks a count (a commit made with collect_stats=False, or a
+    pre-row_counts manifest): an honest "must scan", never a wrong
+    number. Pending merge-on-read deletes subtract by their recorded
+    per-bucket key counts — exact because `delete_where` matches
+    against the current snapshot, so a key is counted in at most one
+    delete file."""
     # slim-first (r11): publish stamps the precomputed exact count
     # into the slim manifest, so a sharded table's COUNT parses zero
     # sidecars. Pre-r11 manifests fall through to the assembled maps.
@@ -3234,9 +3311,10 @@ def manifest_row_count(
 def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
     """Commit log as a DataFrame (Delta's DESCRIBE HISTORY): one row per
     still-retained manifest version — operation, commit timestamp,
-    buckets written/carried, rows written, table row count at that
-    version. Vacuumed-away versions drop out; pre-metadata manifests
-    surface with null operation/timestamp rather than being hidden."""
+    buckets written/carried, rows/data files/bytes written, table row
+    count at that version. Vacuumed-away versions drop out;
+    pre-metadata manifests surface with null operation/timestamp rather
+    than being hidden."""
     rows = []
     for v in list_versions(table_path):
         # slim scalars only (r12): operation / timestamp / metrics /
@@ -3256,6 +3334,8 @@ def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
                 met.get("buckets_written"),
                 met.get("buckets_carried"),
                 met.get("rows_written"),
+                met.get("files_written"),
+                met.get("bytes_written"),
                 manifest_row_count(table_path, v),
             )
         )
@@ -3263,7 +3343,7 @@ def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
         rows,
         "version int, operation string, committed_at timestamp, "
         "buckets_written int, buckets_carried int, rows_written long, "
-        "table_rows long",
+        "files_written int, bytes_written long, table_rows long",
     )
 
 
@@ -3400,23 +3480,20 @@ def optimize_table(
         # endpoints must not re-key renamed columns. Dropped columns DO
         # purge here (`current` carries only live logical columns), so
         # retired_physical still clears below.
-        _to_physical_frame(merged, _mapping(mf)).write.partitionBy(
-            "pk_bucket"
-        ).mode("overwrite").parquet(seg_abs)
+        _write_segment(_to_physical_frame(merged, _mapping(mf)), seg_abs)
         buckets = {
             e.split("=", 1)[1]: os.path.join(seg, e)
             for e in os.listdir(seg_abs)
             if e.startswith("pk_bucket=")
         }
+        footers = _read_footers(seg_abs, stat_cols if collect_stats else [])
         stats, row_counts = (
-            _collect_segment_stats(spark, seg_abs, stat_cols)
+            (footers.stats, footers.row_counts)
             if collect_stats
             else ({}, {})
         )
         file_stats = (
-            _collect_file_stats(spark, seg_abs, stat_cols)
-            if collect_stats and cluster_by
-            else {}
+            footers.file_stats if collect_stats and cluster_by else {}
         )
         # bloom config keys by physical name and the rewrite preserved
         # physical names, so the config carries through unchanged
@@ -3451,9 +3528,9 @@ def optimize_table(
             "op_metrics": {
                 "buckets_written": len(buckets),
                 "buckets_carried": 0,
-                "rows_written": (
-                    sum(row_counts.values()) if collect_stats else None
-                ),
+                "rows_written": sum(footers.row_counts.values()),
+                "files_written": footers.files_written,
+                "bytes_written": footers.bytes_written,
                 "cluster_by": list(cluster_by) if cluster_by else None,
                 "n_buckets": new_n if n_buckets is not None else None,
             },
@@ -3641,9 +3718,7 @@ def compact_buckets(
         )
         seg = os.path.join("data", f"seg-{uuid.uuid4().hex[:12]}")
         seg_abs = os.path.join(table_path, seg)
-        _to_physical_frame(merged, _mapping(mf)).write.partitionBy(
-            "pk_bucket"
-        ).mode("overwrite").parquet(seg_abs)
+        _write_segment(_to_physical_frame(merged, _mapping(mf)), seg_abs)
         buckets = {
             b: d for b, d in mf["buckets"].items() if b not in targets
         }
@@ -3660,21 +3735,19 @@ def compact_buckets(
             _physical_name(mf, c)
             for c in _stat_columns(_data_schema(mf))
         ]
-        seg_stats, seg_counts = _collect_segment_stats(
-            spark, seg_abs, stat_cols
-        )
+        footers = _read_footers(seg_abs, stat_cols)
         stats = {
             b: v
             for b, v in mf.get("stats", {}).items()
             if b in carried
         }
-        stats.update(seg_stats)
+        stats.update(footers.stats)
         row_counts = {
             b: v
             for b, v in mf.get("row_counts", {}).items()
             if b in carried
         }
-        row_counts.update(seg_counts)
+        row_counts.update(footers.row_counts)
         blooms = {
             b: v
             for b, v in mf.get("blooms", {}).items()
@@ -3721,7 +3794,9 @@ def compact_buckets(
                 "buckets_written": len(written),
                 "buckets_carried": len(carried),
                 "buckets_targeted": len(targets),
-                "rows_written": sum(seg_counts.values()),
+                "rows_written": sum(footers.row_counts.values()),
+                "files_written": footers.files_written,
+                "bytes_written": footers.bytes_written,
             },
         }
         # the dirty set is exactly `targets` (rewritten or dropped):
@@ -4148,6 +4223,8 @@ def clone_table(
                 "buckets_written": 0,
                 "buckets_carried": len(mf["buckets"]),
                 "rows_written": 0,
+                "files_written": 0,
+                "bytes_written": 0,
             },
         }
         # zero-copy METADATA too (r12, VERDICT r11 directive 4): a
@@ -4850,13 +4927,14 @@ WHERE doc_id % 6 = 0 AND n_chars <> 0
 
 def incremental_compaction_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Incremental bucket-wise compaction as an oracle-checked
-    query: docs %3==0 land and a full optimize leaves one file per
-    bucket; docs %3==1 then upsert multi-task (small-file debt in
-    exactly the touched buckets); `compact_buckets` rewrites ONLY those
-    buckets (untouched dirs carry by path — pinned in
-    test_compaction.py). The emitted `op` column comes off the LIVE
-    manifest, so the oracle also pins that the incremental path (a
-    'compact' commit, not a full 'optimize') is what ran."""
+    query: docs %3==0 land, then docs %3==1 plus four %3==2 strays
+    (ids 2, 5, 8, 11); a merge-on-read DELETE of the strays leaves
+    delete-file debt in exactly their buckets, and `compact_buckets`
+    rewrites ONLY those buckets (untouched dirs carry by path — pinned,
+    with small-file debt, in test_compaction.py). The emitted `op`
+    column comes off the LIVE manifest, so the oracle also pins that
+    the incremental path (a 'compact' commit, not a full 'optimize')
+    is what ran."""
     docs = _docs_frame(spark, sf_dir)
 
     def build(table: str) -> None:
@@ -4864,13 +4942,16 @@ def incremental_compaction_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, table, docs.filter(F.col("doc_id") % 3 == 0),
             ["doc_id"], n_buckets=8,
         )
-        optimize_table(spark, table)
         manifest_upsert(
             spark,
             table,
-            docs.filter(F.col("doc_id") % 3 == 1).repartition(5),
+            docs.filter(
+                (F.col("doc_id") % 3 == 1)
+                | ((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < 12))
+            ),
             ["doc_id"],
         )
+        delete_where(spark, table, "doc_id % 3 = 2")
         compact_buckets(spark, table)
 
     table = _fixture_table(docs, "manifest_compact", build)
