@@ -155,3 +155,29 @@ def test_compaction_respects_mapping_blooms_and_time_travel(spark, table):
     assert read_manifest_table(
         spark, table, version=v_before
     ).count() == 400
+
+
+def test_cap_forced_files_are_not_debt(spark, tmp_path, monkeypatch):
+    """A bucket past the row cap is several files however it is
+    rewritten; the triggers count only files beyond that, so a
+    compacted table is left alone on the next pass instead of being
+    rewritten and re-published forever."""
+    monkeypatch.setattr(_manifest, "_MAX_ROWS_PER_FILE", 25)
+    t = str(tmp_path / "t")
+    manifest_upsert(spark, t, _frame(spark, 0, 200), ["k"], n_buckets=2)
+    rows = read_manifest(t)["row_counts"]
+    forced = {b: -(-n // 25) for b, n in rows.items()}
+    assert _files_per_bucket(t) == forced and min(forced.values()) > 1
+    assert compact_buckets(spark, t) is None
+    assert maintain_table(spark, t, max_files_per_bucket=1) is None
+    # real debt (a pending delete file) still compacts, exactly once
+    delete_where(spark, t, "k = 7")
+    v = compact_buckets(spark, t)
+    assert v == read_manifest(t)["version"]
+    assert _files_per_bucket(t) == {
+        b: -(-n // 25) for b, n in read_manifest(t)["row_counts"].items()
+    }
+    assert compact_buckets(spark, t) is None
+    assert maintain_table(spark, t, max_files_per_bucket=1) is None
+    assert read_manifest(t)["version"] == v
+    assert read_manifest_table(spark, t).count() == 199

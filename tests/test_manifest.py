@@ -845,11 +845,26 @@ def test_describe_history_and_metadata_count(spark, tmp_path):
 
 
 def test_metadata_count_refuses_to_guess_without_stats(spark, tmp_path):
+    """An unstatted commit still records its footer row counts, so the
+    metadata count stays exact; a manifest with no recorded counts
+    (an older writer's) gets an honest "must scan" None."""
+    import json as _json
+
     table = str(tmp_path / "t")
     mf.manifest_upsert(
         spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=2,
         collect_stats=False,
     )
+    assert mf.read_manifest(table)["stats"] == {}
+    assert mf.manifest_row_count(table) == 1
+    path = mf._manifest_path(table, 1)
+    with open(path) as f:
+        m = _json.load(f)
+    for k in ("row_counts", "total_rows"):
+        m.pop(k, None)
+    os.chmod(path, 0o644)
+    with open(path, "w") as f:
+        _json.dump(m, f)
     assert mf.manifest_row_count(table) is None  # honest "must scan"
     assert mf.read_manifest_table(spark, table).count() == 1
 

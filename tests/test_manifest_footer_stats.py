@@ -246,6 +246,9 @@ def test_collect_stats_false_still_reports_rows_written(
     m = mf.read_manifest(table)
     assert m["stats"] == {}
     assert m["op_metrics"]["rows_written"] == 50
+    # footer row counts are free, so the metadata count stays exact
+    assert sum(m["row_counts"].values()) == 50
+    assert mf.manifest_row_count(table) == 50
     assert m["op_metrics"]["files_written"] == len(m["buckets"])
     hist = mf.describe_history(spark, table).collect()
     assert [(h.rows_written, h.files_written) for h in hist] == [
@@ -260,30 +263,35 @@ def test_collect_stats_false_still_reports_rows_written(
     assert "files_written" in header and "bytes_written" in header
 
 
-def test_int96_segments_still_read_and_prune(spark, tmp_path):
+def test_int96_segments_still_read_and_prune(
+    spark, tmp_path, monkeypatch
+):
     """A table whose first commit stored INT96 timestamps (no footer
-    bounds) keeps working once later commits write INT64 micros."""
-    from trail_condition_etl_spark.session import ensure_engine_conf
-
+    bounds) keeps working once later commits write INT64 micros — and
+    they do even on a session left at Spark's INT96 default, which the
+    commit hands back unchanged."""
     table = str(tmp_path / "t")
-    key = "spark.sql.parquet.outputTimestampType"
-    assert spark.conf.get(key) == "TIMESTAMP_MICROS"  # get_spark path
-    spark.conf.set(key, "INT96")  # a session the engine did not build
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(mf, "_SEGMENT_TS_TYPE", "INT96")  # an older writer
         mf.manifest_upsert(
             spark, table, _rows(spark, 0, 400), ["k"], n_buckets=8
         )
-    finally:
-        ensure_engine_conf(spark)  # the driver-session path re-pins it
-    assert spark.conf.get(key) == "TIMESTAMP_MICROS"
     first = mf.read_manifest(table)
     b0, (f0, *_) = next(iter(_data_files(table).items()))
     md = pq.read_metadata(os.path.join(table, first["buckets"][b0], f0))
     ts_col = md.schema.names.index("ts")
     assert md.schema.column(ts_col).physical_type == "INT96"
     assert all("ts" not in st for st in first["stats"].values())
-    # rewrite some buckets: their new segment carries INT64 + bounds
-    mf.manifest_upsert(spark, table, _rows(spark, 0, 3), ["k"])
+    # rewrite some buckets from an INT96 session: their new segment
+    # still carries INT64 + bounds, and the session keeps its encoding
+    key = mf._TS_TYPE_CONF
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        mf.manifest_upsert(spark, table, _rows(spark, 0, 3), ["k"])
+        assert spark.conf.get(key) == "INT96"
+    finally:
+        spark.conf.set(key, prev)
     m = mf.read_manifest(table)
     rewritten = {
         b for b, d in m["buckets"].items() if d != first["buckets"][b]

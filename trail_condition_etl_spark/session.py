@@ -56,10 +56,6 @@ def get_spark(app_name: str = "trail-condition-etl-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # INT64 micros instead of the INT96 default: parquet-java keeps
-        # no footer min/max for INT96, and manifest commits take their
-        # column stats from the footers (sinks/manifest.py)
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -86,8 +82,4 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     # maps pushed Catalyst filters onto manifest stats pruning; the
     # pushdown path is conf-gated and off by default in Spark 4.1
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    # footer-recorded timestamp bounds (see get_spark)
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
     return spark

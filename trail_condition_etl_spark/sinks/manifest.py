@@ -471,7 +471,7 @@ def _bucket_agg(manifest: dict) -> dict:
     full maps. `live`/`dels` are bucket counts (op metrics, the MoR
     feature gate); `rows`/`drows` sum the recorded row/delete-key
     counts; `uncounted`/`undel` count buckets MISSING a count
-    (collect_stats=False commits) — total_rows is exact iff both are
+    (older format versions) — total_rows is exact iff both are
     zero, the same contract manifest_row_count honors."""
     counts = manifest.get("row_counts", {})
     bkts = manifest.get("buckets", {})
@@ -673,9 +673,9 @@ def _delta_commit(
 # essentials. A commit clusters its segment write by pk_bucket, so each
 # touched bucket gets ONE data file (more only past _MAX_ROWS_PER_FILE),
 # then reads the stats from the just-written parquet footers on the
-# driver — no Spark job re-reads the segment. Timestamps are written as
-# INT64 microseconds (session.py) because parquet-java records no footer
-# bounds for INT96. Stats carry forward by reference for untouched
+# driver — no Spark job re-reads the segment. Segment timestamps are
+# written as INT64 microseconds (`_write_segment`) because parquet-java
+# records no footer bounds for INT96. Stats carry forward by reference for untouched
 # buckets and are consulted at read so a predicate scan opens only
 # bucket dirs whose [min, max] ranges can contain matching rows. The
 # reference analog is the per-city window read-back
@@ -700,6 +700,11 @@ _MAX_STAT_STRING = 64
 #: file up to this many rows and splits only past it — file size stays
 #: bounded however large a bucket grows
 _MAX_ROWS_PER_FILE = 1_000_000
+
+#: parquet timestamp encoding of segment files: INT64 micros carry
+#: footer min/max, Spark's INT96 default carries none
+_SEGMENT_TS_TYPE = "TIMESTAMP_MICROS"
+_TS_TYPE_CONF = "spark.sql.parquet.outputTimestampType"
 
 #: crashed-writer staging dirs younger than this survive `vacuum` — an
 #: in-flight DataFrameWriter job stages WITHOUT the table lease, so age
@@ -779,13 +784,36 @@ def _row_col_stats(bounds: dict[str, tuple]) -> dict[str, list]:
     return col_stats
 
 
+def _file_debt_floor(mf: dict, bucket: str, max_files: int) -> int:
+    """Data files bucket `bucket` may hold before it is small-file
+    debt: `max_files`, or more when the row cap forces them — a rewrite
+    of R rows still leaves ceil(R / _MAX_ROWS_PER_FILE) files, and
+    counting those as debt would rewrite the bucket on every pass.
+    Uses the manifest's recorded row count (no IO); a bucket without
+    one is held to `max_files`."""
+    rows = mf.get("row_counts", {}).get(bucket, 0)
+    return max(max_files, -(-rows // _MAX_ROWS_PER_FILE))
+
+
 def _write_segment(df: DataFrame, seg_abs: str) -> None:
     """Write a bucketed frame as a segment: one dir per pk_bucket, each
     task's rows of a bucket split into files of at most
-    `_MAX_ROWS_PER_FILE` rows. Callers choose the distribution."""
-    df.write.option("maxRecordsPerFile", _MAX_ROWS_PER_FILE).partitionBy(
-        "pk_bucket"
-    ).mode("overwrite").parquet(seg_abs)
+    `_MAX_ROWS_PER_FILE` rows. Callers choose the distribution.
+
+    The timestamp encoding is a session conf, not a write option, so it
+    is set for this write only and restored after: other parquet the
+    session writes keeps the caller's encoding. A concurrent write on
+    the same session that races the restore can at worst land INT96,
+    whose timestamp column `_read_footers` then leaves unbounded."""
+    conf = df.sparkSession.conf
+    prev = conf.get(_TS_TYPE_CONF)
+    conf.set(_TS_TYPE_CONF, _SEGMENT_TS_TYPE)
+    try:
+        df.write.option("maxRecordsPerFile", _MAX_ROWS_PER_FILE).partitionBy(
+            "pk_bucket"
+        ).mode("overwrite").parquet(seg_abs)
+    finally:
+        conf.set(_TS_TYPE_CONF, prev)
 
 
 @dataclass(frozen=True)
@@ -1896,7 +1924,8 @@ def manifest_upsert(
         # stats: carried buckets keep their recorded stats by reference;
         # rewritten buckets get fresh stats from the new segment's
         # footers. A commit with collect_stats=False leaves its rewritten
-        # buckets stat-less (unprunable — sound, just slower to read).
+        # buckets stat-less (unprunable — sound, just slower to read);
+        # row counts come with every footer, so they are always recorded.
         prev_stats = mf.get("stats", {}) if mf is not None else {}
         stats = {b: prev_stats[b] for b in carried if b in prev_stats}
         prev_counts = mf.get("row_counts", {}) if mf is not None else {}
@@ -1910,7 +1939,7 @@ def manifest_upsert(
         )
         if collect_stats:
             stats.update(footers.stats)
-            row_counts.update(footers.row_counts)
+        row_counts.update(footers.row_counts)
         # per-file stats (written by a clustered optimize) survive on
         # carried buckets — their dirs are immutable; rewritten buckets
         # lose clustering and fall back to dir-level stats until the
@@ -3274,11 +3303,11 @@ def manifest_row_count(
 ) -> int | None:
     """Exact COUNT(*) from metadata alone — zero data files opened
     (the Iceberg/Delta metadata-count shortcut). Per-bucket row counts
-    are read from the written files' footers at commit and carry by
-    reference with their buckets. Returns None when any referenced
-    bucket lacks a count (a commit made with collect_stats=False, or a
-    pre-row_counts manifest): an honest "must scan", never a wrong
-    number. Pending merge-on-read deletes subtract by their recorded
+    are read from the written files' footers at every commit
+    (collect_stats=False included) and carry by reference with their
+    buckets. Returns None when any referenced bucket lacks a count (a
+    bucket written by an older format version that recorded none): an
+    honest "must scan", never a wrong number. Pending merge-on-read deletes subtract by their recorded
     per-bucket key counts — exact because `delete_where` matches
     against the current snapshot, so a key is counted in at most one
     delete file."""
@@ -3487,11 +3516,8 @@ def optimize_table(
             if e.startswith("pk_bucket=")
         }
         footers = _read_footers(seg_abs, stat_cols if collect_stats else [])
-        stats, row_counts = (
-            (footers.stats, footers.row_counts)
-            if collect_stats
-            else ({}, {})
-        )
+        stats = footers.stats if collect_stats else {}
+        row_counts = footers.row_counts
         file_stats = (
             footers.file_stats if collect_stats and cluster_by else {}
         )
@@ -3654,7 +3680,9 @@ def compact_buckets(
 ) -> int | None:
     """INCREMENTAL compaction: rewrite ONLY the named buckets (or,
     with `bucket_ids=None`, exactly the buckets holding more than
-    `max_files_per_bucket` data files or any pending MoR delete file),
+    `max_files_per_bucket` data files — or than the row cap forces on
+    them, so a compacted table stays compacted — or any pending MoR
+    delete file),
     carrying every other bucket by reference — IO proportional to the
     OFFENDING buckets, never the table. `optimize_table` is the full
     rewrite (clustering, rescale, physical-name normalization, dropped
@@ -3696,7 +3724,7 @@ def compact_buckets(
                     )
                 except OSError:
                     continue
-                if n_files > max_files_per_bucket:
+                if n_files > _file_debt_floor(mf, b, max_files_per_bucket):
                     targets.add(b)
             targets |= set(mf.get("deletes", {}))
         if not targets:
@@ -3890,11 +3918,11 @@ def maintain_table(
                 cluster_by = past.get("op_metrics", {}).get("cluster_by")
                 break
     size_policy = max_bucket_bytes is not None
-    worst_files = 0
+    file_debt = False
     worst_bytes = 0
     worst_dir = None
     total_bytes = 0
-    for d in mf["buckets"].values():
+    for b, d in mf["buckets"].items():
         n = 0
         b_bytes = 0
         try:
@@ -3910,7 +3938,7 @@ def maintain_table(
                             pass
         except OSError:
             pass
-        worst_files = max(worst_files, n)
+        file_debt |= n > _file_debt_floor(mf, b, max_files_per_bucket)
         if b_bytes > worst_bytes:
             worst_bytes = b_bytes
             worst_dir = d
@@ -3949,7 +3977,7 @@ def maintain_table(
     n_delete_files = sum(len(v) for v in mf.get("deletes", {}).values())
     if (
         rescale_to is None
-        and worst_files <= max_files_per_bucket
+        and not file_debt
         and n_delete_files <= max_delete_files
     ):
         return None
