@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from trail_condition_etl_spark.streaming import broker, pipeline
-from trail_condition_etl_spark.sinks import upsert as upsert_sink
+from trail_condition_etl_spark.sinks.manifest import read_manifest_table
 
 
 def _tasks(spark, n=40):
@@ -39,7 +39,7 @@ def _run(spark, stream, root, tag):
     q.awaitTermination()
     return {
         (r.task_id, r.city_id)
-        for r in upsert_sink.read_upsert_table(spark, out).collect()
+        for r in read_manifest_table(spark, out).collect()
     }
 
 

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from trail_condition_etl_spark.sinks import manifest as mf
-from trail_condition_etl_spark.sinks import upsert
+from trail_condition_etl_spark.sinks import lease
 
 
 def _df(spark, rows):
@@ -48,7 +48,7 @@ def test_new_rows_win_and_rerun_is_idempotent(spark, tmp_path):
 def test_failed_write_changes_nothing(spark, tmp_path, monkeypatch):
     """A writer that dies ANYWHERE before the manifest publish leaves
     the table byte-identical — the half-written segment is orphan data
-    no manifest references (the window compact-then-swap cannot close)."""
+    no manifest references."""
     table = str(tmp_path / "t")
     mf.manifest_upsert(spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=4)
     before = _state(spark, table)
@@ -74,12 +74,12 @@ def test_failed_write_changes_nothing(spark, tmp_path, monkeypatch):
 
 def test_fenced_writer_aborts_totally(spark, tmp_path):
     """A stale writer (lease stolen, newer commit landed) must abort
-    with ZERO table effect — unlike the parquet-overwrite path, not
-    even a transient interleaving is possible."""
+    with ZERO table effect — not even a transient interleaving is
+    possible."""
     table = str(tmp_path / "t")
     mf.manifest_upsert(spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=4)
-    upsert.record_commit(table, 99)  # a newer writer committed out-of-band
-    with pytest.raises(upsert.WriterFencedError):
+    lease.record_commit(table, 99)  # a newer writer committed out-of-band
+    with pytest.raises(lease.WriterFencedError):
         mf.manifest_upsert(
             spark, table, _df(spark, [(2, "b")]), ["k"], n_buckets=4
         )
@@ -96,7 +96,7 @@ def test_publish_never_clobbers_an_existing_version(spark, tmp_path):
     mf.manifest_upsert(spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=4)
     winner = mf.read_manifest(table, 1)
     loser = dict(winner, token=999, buckets={"0": "data/seg-bogus/pk_bucket=0"})
-    with pytest.raises(upsert.WriterFencedError):
+    with pytest.raises(lease.WriterFencedError):
         mf._publish_manifest(table, loser, token=999)
     assert mf.read_manifest(table, 1) == winner  # untouched
     # and the temp file was cleaned up either way
@@ -445,7 +445,7 @@ def _bucket_correlated_table(spark, tmp_path, n_buckets=4, n_keys=200):
     (val = pk_bucket * 1000 + small), so range predicates provably
     prune: bucket b holds exactly [b*1000, b*1000+999]."""
     keyed = spark.range(n_keys).select(F.col("id").cast("int").alias("k"))
-    with_b = upsert._with_bucket(keyed, ["k"], n_buckets)
+    with_b = mf._with_bucket(keyed, ["k"], n_buckets)
     rows = with_b.select(
         "k", (F.col("pk_bucket") * 1000 + F.col("k") % 1000).alias("val")
     )
@@ -516,7 +516,7 @@ def test_lookup_opens_only_key_bucket_dirs(spark, tmp_path):
     looked = mf.read_manifest_lookup(spark, table, {"k": 5})
     got = [(r.k, r.v) for r in looked.collect()]
     assert got == [(5, "v5")]
-    b5 = upsert._with_bucket(
+    b5 = mf._with_bucket(
         spark.createDataFrame([(5,)], "k int"), ["k"], 8
     ).collect()[0].pk_bucket
     assert _dirs_of(looked) == {
@@ -539,7 +539,7 @@ def test_stats_carried_for_untouched_buckets(spark, tmp_path):
     one_key = spark.createDataFrame([(0, 999_999)], "k int, val int")
     mf.manifest_upsert(spark, table, one_key, ["k"])
     v2 = mf.read_manifest(table)
-    b0 = upsert._with_bucket(
+    b0 = mf._with_bucket(
         spark.createDataFrame([(0,)], "k int"), ["k"], 4
     ).collect()[0].pk_bucket
     for b in v1["buckets"]:
@@ -549,17 +549,31 @@ def test_stats_carried_for_untouched_buckets(spark, tmp_path):
     assert v2["stats"][str(b0)]["val"][1] == 999_999
 
 
+def _strip_manifest_keys(table, version, *keys):
+    """Rewrite a committed inline manifest without `keys` — what a
+    manifest from a writer that recorded none of them looks like."""
+    import json as _json
+
+    path = mf._manifest_path(table, version)
+    with open(path) as f:
+        m = _json.load(f)
+    for k in keys:
+        m.pop(k, None)
+    os.chmod(path, 0o644)
+    with open(path, "w") as f:
+        _json.dump(m, f)
+
+
 def test_missing_stats_never_prune(spark, tmp_path):
-    """Stats are an optimization: a commit with collect_stats=False
-    leaves its buckets unprunable but every skip read stays exact."""
+    """Stats are an optimization: buckets with no recorded stats stay
+    unprunable but every skip read stays exact."""
     table = str(tmp_path / "t")
     rows = spark.range(50).select(
         F.col("id").cast("int").alias("k"), F.col("id").alias("val")
     )
-    mf.manifest_upsert(
-        spark, table, rows, ["k"], n_buckets=4, collect_stats=False
-    )
-    assert mf.read_manifest(table)["stats"] == {}
+    mf.manifest_upsert(spark, table, rows, ["k"], n_buckets=4)
+    _strip_manifest_keys(table, 1, "stats")
+    assert mf.read_manifest(table).get("stats", {}) == {}
     df = mf.read_manifest_table(spark, table, skip=[("val", "<", 10)])
     assert {r.val for r in df.collect()} == set(range(10))
 
@@ -648,7 +662,7 @@ def test_timestamp_stats_prune_with_aware_and_naive_predicates(spark, tmp_path):
 
     table = str(tmp_path / "t")
     keyed = spark.range(40).select(F.col("id").cast("int").alias("k"))
-    with_b = upsert._with_bucket(keyed, ["k"], 2)
+    with_b = mf._with_bucket(keyed, ["k"], 2)
     rows = with_b.select(
         "k",
         F.timestamp_seconds(
@@ -767,7 +781,7 @@ def test_upsert_after_cluster_carries_file_stats_by_reference(spark, tmp_path):
     after = mf.read_manifest(table)
     touched = {
         r.pk_bucket
-        for r in upsert._with_bucket(one, ["k"], after["n_buckets"])
+        for r in mf._with_bucket(one, ["k"], after["n_buckets"])
         .select("pk_bucket").collect()
     }
     for b in after["buckets"]:
@@ -821,7 +835,9 @@ def test_plain_optimize_resets_file_stats(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_describe_history_and_metadata_count(spark, tmp_path):
+def test_describe_history_and_metadata_count(spark, tmp_path, capsys):
+    from trail_condition_etl_spark.__main__ import main
+
     table = str(tmp_path / "t")
     mf.manifest_upsert(spark, table, _df(spark, [(1, "a"), (2, "b")]), ["k"], n_buckets=4)
     mf.manifest_upsert(spark, table, _df(spark, [(2, "B"), (3, "c")]), ["k"])
@@ -834,6 +850,18 @@ def test_describe_history_and_metadata_count(spark, tmp_path):
     assert hist[2].table_rows == 3
     assert hist[3].table_rows == 3
     assert hist[1].committed_at <= hist[2].committed_at <= hist[3].committed_at
+    # history carries each commit's own write metrics
+    m1 = mf.read_manifest(table, 1)
+    assert (hist[1].rows_written, hist[1].files_written) == (
+        2, m1["op_metrics"]["files_written"]
+    )
+    assert hist[1].bytes_written == m1["op_metrics"]["bytes_written"] > 0
+    # the operator console shows the same record
+    assert main(["table", "history", table]) == 0
+    header = next(
+        ln for ln in capsys.readouterr().out.splitlines() if "version" in ln
+    )
+    assert "files_written" in header and "bytes_written" in header
     # metadata-only count agrees with the scan, at every version
     for v, n in ((1, 2), (2, 3), (3, 3)):
         assert mf.manifest_row_count(table, v) == n
@@ -845,26 +873,13 @@ def test_describe_history_and_metadata_count(spark, tmp_path):
 
 
 def test_metadata_count_refuses_to_guess_without_stats(spark, tmp_path):
-    """An unstatted commit still records its footer row counts, so the
-    metadata count stays exact; a manifest with no recorded counts
-    (an older writer's) gets an honest "must scan" None."""
-    import json as _json
-
+    """A commit records its footer row counts, so the metadata count is
+    exact; a manifest with no recorded counts (an older writer's) gets
+    an honest "must scan" None."""
     table = str(tmp_path / "t")
-    mf.manifest_upsert(
-        spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=2,
-        collect_stats=False,
-    )
-    assert mf.read_manifest(table)["stats"] == {}
+    mf.manifest_upsert(spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=2)
     assert mf.manifest_row_count(table) == 1
-    path = mf._manifest_path(table, 1)
-    with open(path) as f:
-        m = _json.load(f)
-    for k in ("row_counts", "total_rows"):
-        m.pop(k, None)
-    os.chmod(path, 0o644)
-    with open(path, "w") as f:
-        _json.dump(m, f)
+    _strip_manifest_keys(table, 1, "row_counts", "total_rows")
     assert mf.manifest_row_count(table) is None  # honest "must scan"
     assert mf.read_manifest_table(spark, table).count() == 1
 
@@ -1033,7 +1048,7 @@ def test_merge_into_without_update_leaves_matched_rows_unwritten(spark, tmp_path
     ins_only = spark.createDataFrame([(1000,)], "k int")
     touched = {
         str(r.pk_bucket)
-        for r in upsert._with_bucket(ins_only, ["k"], 8)
+        for r in mf._with_bucket(ins_only, ["k"], 8)
         .select("pk_bucket").collect()
     }
     assert changed == touched

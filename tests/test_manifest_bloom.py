@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from trail_condition_etl_spark.sinks import bloom as B
 from trail_condition_etl_spark.sinks.manifest import (
+    _manifest_path,
     add_bloom_index,
     clone_table,
     delete_where,
@@ -110,12 +111,25 @@ def test_upsert_maintains_bitmaps_no_false_negative(spark, table):
 
 
 def test_unstatted_commit_drops_rewritten_bitmaps_soundly(spark, table):
-    manifest_upsert(
-        spark, table, _frame(spark, 300, 310), ["doc_id"],
-        collect_stats=False,
+    """A bucket whose bitmap is absent from the manifest (a writer that
+    recorded none) is never pruned by the bloom index."""
+    import json
+
+    version = manifest_upsert(
+        spark, table, _frame(spark, 300, 310), ["doc_id"]
     )
+    prev = read_manifest(table, version - 1)["buckets"]
+    path = _manifest_path(table, version)
+    with open(path) as f:
+        m = json.load(f)
+    for b, d in m["buckets"].items():
+        if d != prev.get(b):  # rewritten by this commit
+            del m["blooms"][b]
+    os.chmod(path, 0o644)
+    with open(path, "w") as f:
+        json.dump(m, f)
     mf = read_manifest(table)
-    # at least one bucket was rewritten without stats: bitmap gone
+    # at least one bucket was rewritten and lost its bitmap
     assert set(mf["blooms"]) < set(mf["buckets"])
     # absent-value probe now opens the unprunable buckets — but stays
     # exact, and present values in them are found

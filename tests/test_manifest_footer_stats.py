@@ -233,36 +233,6 @@ def _by_bucket(spark, table):
     return out
 
 
-def test_collect_stats_false_still_reports_rows_written(
-    spark, tmp_path, capsys
-):
-    from trail_condition_etl_spark.__main__ import main
-
-    table = str(tmp_path / "t")
-    mf.manifest_upsert(
-        spark, table, _rows(spark, 0, 50), ["k"], n_buckets=4,
-        collect_stats=False,
-    )
-    m = mf.read_manifest(table)
-    assert m["stats"] == {}
-    assert m["op_metrics"]["rows_written"] == 50
-    # footer row counts are free, so the metadata count stays exact
-    assert sum(m["row_counts"].values()) == 50
-    assert mf.manifest_row_count(table) == 50
-    assert m["op_metrics"]["files_written"] == len(m["buckets"])
-    hist = mf.describe_history(spark, table).collect()
-    assert [(h.rows_written, h.files_written) for h in hist] == [
-        (50, len(m["buckets"]))
-    ]
-    assert hist[0].bytes_written == m["op_metrics"]["bytes_written"] > 0
-    # the operator console shows the same record
-    assert main(["table", "history", table]) == 0
-    header = next(
-        ln for ln in capsys.readouterr().out.splitlines() if "version" in ln
-    )
-    assert "files_written" in header and "bytes_written" in header
-
-
 def test_int96_segments_still_read_and_prune(
     spark, tmp_path, monkeypatch
 ):

@@ -323,8 +323,8 @@ def test_cdc_stream_plans_from_changed_ranges_only(
 def test_metadata_count_parses_zero_sidecars(spark, tmp_path, small_range):
     """r11: publish stamps the exact COUNT(*) into the slim manifest,
     so a sharded table's metadata count never loads a sidecar; MoR
-    deletes subtract; an unstatted commit still counts exactly (its
-    row counts come from the footers)."""
+    deletes subtract; a later commit counts exactly (its row counts
+    come from the footers)."""
     t = str(tmp_path / "cnt")
     mfm.manifest_upsert(spark, t, _frame(spark, 0, 80), ["k"], n_buckets=16)
     mfm._load_sidecar.cache_clear()
@@ -334,9 +334,7 @@ def test_metadata_count_parses_zero_sidecars(spark, tmp_path, small_range):
     assert mfm.manifest_row_count(t) == 70
     # time travel still counts the old snapshot
     assert mfm.manifest_row_count(t, version=1) == 80
-    mfm.manifest_upsert(
-        spark, t, _one_key(spark, 200, 1), ["k"], collect_stats=False
-    )
+    mfm.manifest_upsert(spark, t, _one_key(spark, 200, 1), ["k"])
     mfm._load_sidecar.cache_clear()
     assert mfm.manifest_row_count(t) == 71
     assert mfm._load_sidecar.cache_info().misses == 0

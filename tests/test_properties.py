@@ -17,7 +17,7 @@ from trail_condition_etl_spark.operators.pipeline import (
     MAX_DELIVERY_COUNT,
 )
 from trail_condition_etl_spark.operators import relational
-from trail_condition_etl_spark.sinks import upsert
+from trail_condition_etl_spark.sinks import lease
 from trail_condition_etl_spark.streaming import pipeline as streaming_pipeline
 
 T0 = dt.datetime(2026, 3, 1, 0, 0, 0)
@@ -86,30 +86,6 @@ def test_envelope_routing_policy_total_and_exclusive(spark, dcs, ages):
             assert r.route == "dlq_expired"
         else:
             assert r.route == "process"
-
-
-@given(
-    keys=st.lists(
-        st.integers(min_value=0, max_value=9), min_size=1, max_size=20
-    ),
-)
-@SETTINGS
-def test_upsert_is_idempotent_and_last_writer_wins(spark, tmp_path_factory, keys):
-    table = str(tmp_path_factory.mktemp("prop_upsert") / "t")
-    base = spark.createDataFrame(
-        [(k, f"v0-{k}") for k in set(keys)], "id int, val string"
-    )
-    upsert.upsert_parquet(spark, table, base, ["id"])
-    update = spark.createDataFrame(
-        [(k, f"v1-{k}") for k in keys], "id int, val string"
-    ).dropDuplicates(["id"])
-    upsert.upsert_parquet(spark, table, update, ["id"])
-    once = sorted(map(tuple, upsert.read_upsert_table(spark, table).collect()))
-    # replaying the SAME batch (crash-recovery redelivery) changes nothing
-    upsert.upsert_parquet(spark, table, update, ["id"])
-    twice = sorted(map(tuple, upsert.read_upsert_table(spark, table).collect()))
-    assert once == twice
-    assert once == sorted((k, f"v1-{k}") for k in set(keys))
 
 
 # printable-ASCII token domain — the documented domain of the cross-engine
@@ -465,13 +441,11 @@ def test_manifest_merge_matches_dict_model(spark, tmp_path_factory, batches):
 def test_lease_tokens_strictly_increase(tmp_path_factory, n):
     """Fencing tokens are strictly monotone across any acquire/release
     sequence — the property the stale-writer detection rests on."""
-    from trail_condition_etl_spark.sinks import upsert as u
-
     table = str(tmp_path_factory.mktemp("lease") / "t")
     tokens = []
     for _ in range(n):
-        tokens.append(u.acquire_table_lease(table))
-        u.release_table_lease(table)
+        tokens.append(lease.acquire_table_lease(table))
+        lease.release_table_lease(table)
     assert tokens == sorted(set(tokens))
     assert tokens[0] >= 1 and tokens[-1] == tokens[0] + n - 1
 
@@ -813,21 +787,21 @@ def _forge_crashed_lease(table: str) -> bool:
     import os
     import time
 
-    lock = upsert._lock_dir(table)
+    lock = lease._lock_dir(table)
     try:
         os.mkdir(lock)
     except FileExistsError:
         return False
     with open(os.path.join(lock, "owner"), "w") as f:
         f.write("0")
-    old = time.time() - 3 * upsert.LOCK_LEASE_TTL_S
+    old = time.time() - 3 * lease.LOCK_LEASE_TTL_S
     os.utime(lock, (old, old))
     return True
 
 
 def _fence_token(table: str) -> int:
     try:
-        with open(upsert._fence_path(table)) as f:
+        with open(lease._fence_path(table)) as f:
             return int(f.read().strip() or "0")
     except (OSError, ValueError):
         return 0
@@ -1086,8 +1060,8 @@ def _run_two_writer_model(spark, tmp_path_factory, ops):
     for tok in stale_tokens:
         import pytest as _pt
 
-        with _pt.raises(upsert.WriterFencedError):
-            upsert.check_fence(table, tok)
+        with _pt.raises(lease.WriterFencedError):
+            lease.check_fence(table, tok)
 
 
 # --- clone/vacuum lifecycle model ------------------------------------------

@@ -8,7 +8,8 @@ import datetime as dt
 
 import pytest
 
-from trail_condition_etl_spark.sinks import upsert
+from trail_condition_etl_spark.sinks import dlq as dlq_sink
+from trail_condition_etl_spark.sinks import manifest
 from trail_condition_etl_spark.sinks.ratelimit import DailyRateLimiter
 from trail_condition_etl_spark.streaming import pipeline
 
@@ -78,7 +79,7 @@ def test_pipeline_admits_quota_and_dlqs_overflow(spark, tmp_path):
 
     # the 5 smallest task_ids were admitted (deterministic prefix)
     facts = sorted(
-        r.task_id for r in upsert.read_upsert_table(spark, str(out)).collect()
+        r.task_id for r in manifest.read_manifest_table(spark, str(out)).collect()
     )
     assert facts == [f"t-{i:02d}" for i in range(5)]
     # overflow is in the DLQ, marked retryable so redrive picks it up
@@ -87,7 +88,7 @@ def test_pipeline_admits_quota_and_dlqs_overflow(spark, tmp_path):
     assert all(r.error.exception_type == "rate_limited" for r in dlq_rows)
     assert all(r.error.safe_to_retry for r in dlq_rows)
     assert limiter.remaining == 0
-    redrivable = upsert.redrive_candidates(spark, str(dlq))
+    redrivable = dlq_sink.redrive_candidates(spark, str(dlq))
     assert redrivable.count() == 3
 
     # quota resets at the day boundary: the next incremental run (same
@@ -108,7 +109,7 @@ def test_pipeline_admits_quota_and_dlqs_overflow(spark, tmp_path):
     )
     q2.awaitTermination(120)
     facts2 = sorted(
-        r.task_id for r in upsert.read_upsert_table(spark, str(out)).collect()
+        r.task_id for r in manifest.read_manifest_table(spark, str(out)).collect()
     )
     assert facts2 == [f"t-{i:02d}" for i in range(5)] + [f"t-1{i}" for i in range(3)]
     assert spark.read.parquet(str(dlq)).count() == 3  # unchanged

@@ -8,7 +8,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from trail_condition_etl_spark.sinks import upsert
+from trail_condition_etl_spark.sinks import dlq as dlq_sink
+from trail_condition_etl_spark.sinks import manifest
 from trail_condition_etl_spark.streaming import joins, pipeline
 from conftest import SF_DIR
 
@@ -46,7 +47,7 @@ def test_end_to_end_policy_dedup_and_resume(spark, tmp_path):
     batch1.write.mode("append").parquet(str(staging))
     _run(spark, staging, out, dlq, ckpt)
 
-    facts = upsert.read_upsert_table(spark, str(out))
+    facts = manifest.read_manifest_table(spark, str(out))
     assert sorted(r.task_id for r in facts.collect()) == ["t-1"]
     dlq_rows = spark.read.parquet(str(dlq))
     routes = {r.error.exception_type for r in dlq_rows.collect()}
@@ -63,7 +64,7 @@ def test_end_to_end_policy_dedup_and_resume(spark, tmp_path):
     batch2.write.mode("append").parquet(str(staging))
     _run(spark, staging, out, dlq, ckpt)
 
-    facts2 = upsert.read_upsert_table(spark, str(out))
+    facts2 = manifest.read_manifest_table(spark, str(out))
     assert sorted(r.task_id for r in facts2.collect()) == ["t-1", "t-4"]
     # DLQ unchanged by the clean second batch
     assert spark.read.parquet(str(dlq)).count() == 2
@@ -86,7 +87,7 @@ def test_transform_hook_applies(spark, tmp_path):
         ),
     )
     q.awaitTermination(120)
-    rows = upsert.read_upsert_table(spark, str(tmp_path / "out")).collect()
+    rows = manifest.read_manifest_table(spark, str(tmp_path / "out")).collect()
     assert rows[0].city_sq == 81
 
 
@@ -320,7 +321,6 @@ def test_scd2_maintenance_merges_across_batches(spark, tmp_path):
     CONTINUES across the boundary must not fork a new interval, a regime
     superseded in run 2 must close at the new type's first event."""
     from trail_condition_etl_spark.streaming import scd2
-    from trail_condition_etl_spark.sinks import upsert
 
     staging = tmp_path / "staging"
     dim = tmp_path / "dim"
@@ -349,7 +349,7 @@ def test_scd2_maintenance_merges_across_batches(spark, tmp_path):
         (
             (r.user_id, r.event_type, r.valid_from.minute,
              None if r.valid_to is None else r.valid_to.minute, r.is_current)
-            for r in upsert.read_upsert_table(spark, str(dim)).collect()
+            for r in manifest.read_manifest_table(spark, str(dim)).collect()
         )
     )
     assert rows == [
@@ -364,7 +364,6 @@ def test_scd2_maintenance_replay_is_idempotent(spark, tmp_path):
     the already-merged dimension (fresh checkpoint, same staging) must
     leave the table unchanged — the effectively-once contract."""
     from trail_condition_etl_spark.streaming import scd2
-    from trail_condition_etl_spark.sinks import upsert
 
     staging = tmp_path / "staging"
     dim = tmp_path / "dim"
@@ -380,7 +379,7 @@ def test_scd2_maintenance_replay_is_idempotent(spark, tmp_path):
     def snapshot():
         return sorted(
             (r.user_id, r.event_type, r.valid_from, r.valid_to, r.is_current)
-            for r in upsert.read_upsert_table(spark, str(dim)).collect()
+            for r in manifest.read_manifest_table(spark, str(dim)).collect()
         )
 
     scd2.run_scd2_maintenance(
@@ -396,11 +395,33 @@ def test_scd2_maintenance_replay_is_idempotent(spark, tmp_path):
     assert snapshot() == first
 
 
+def test_scd2_merge_after_crashed_first_commit(spark, tmp_path):
+    """A first commit that died after its segment write leaves the
+    dimension directory with no manifest: the next merge must treat the
+    dimension as empty, not try to read it."""
+    from trail_condition_etl_spark.streaming import scd2
+
+    dim = tmp_path / "dim"
+    (dim / "data" / "seg-orphan" / "pk_bucket=0").mkdir(parents=True)
+    batch = spark.createDataFrame(
+        [
+            (0, dt.datetime(2024, 1, 1, 0, 0), 1, "click"),
+            (1, dt.datetime(2024, 1, 1, 0, 3), 1, "view"),
+        ],
+        scd2.EVENT_SCHEMA,
+    )
+    scd2.merge_scd2_batch(spark, str(dim), batch)
+    rows = sorted(
+        (r.event_type, r.valid_from.minute, r.is_current)
+        for r in manifest.read_manifest_table(spark, str(dim)).collect()
+    )
+    assert rows == [("click", 0, False), ("view", 3, True)]
+
+
 def test_scd2_maintenance_repairs_history_on_late_event(spark, tmp_path):
     """An out-of-order event older than the open interval must split the
     correct historical interval, not corrupt the tail."""
     from trail_condition_etl_spark.streaming import scd2
-    from trail_condition_etl_spark.sinks import upsert
 
     staging = tmp_path / "staging"
     dim = tmp_path / "dim"
@@ -424,7 +445,7 @@ def test_scd2_maintenance_repairs_history_on_late_event(spark, tmp_path):
     rows = sorted(
         (r.event_type, r.valid_from.minute,
          None if r.valid_to is None else r.valid_to.minute, r.is_current)
-        for r in upsert.read_upsert_table(spark, str(dim)).collect()
+        for r in manifest.read_manifest_table(spark, str(dim)).collect()
     )
     assert rows == [
         ("click", 0, 5, False),
@@ -480,12 +501,12 @@ def test_dlq_redrive_reprocesses_to_convergence(spark, tmp_path):
         max_files_per_trigger=None,
     )
     q.awaitTermination()
-    assert {r.task_id for r in upsert.read_upsert_table(spark, out).collect()} == {"t1"}
+    assert {r.task_id for r in manifest.read_manifest_table(spark, out).collect()} == {"t1"}
 
     # redrive: eligible rows re-enter the staging dir as FRESH tasks
     # (new enqueue time, delivery count reset — the reference's redrive
     # contract), consumed by a new checkpoint epoch
-    redrive = upsert.redrive_candidates(spark, dlq).select(
+    redrive = dlq_sink.redrive_candidates(spark, dlq).select(
         "task_id",
         "city_id",
         F.to_timestamp(
@@ -503,10 +524,10 @@ def test_dlq_redrive_reprocesses_to_convergence(spark, tmp_path):
         max_files_per_trigger=None,
     )
     q2.awaitTermination()
-    final = {r.task_id for r in upsert.read_upsert_table(spark, out).collect()}
+    final = {r.task_id for r in manifest.read_manifest_table(spark, out).collect()}
     assert final == {"t1", "t2"}
     # poison stays dead: not redriven, not in the table
     assert {
         r.task_id
-        for r in upsert.redrive_candidates(spark, dlq).collect()
+        for r in dlq_sink.redrive_candidates(spark, dlq).collect()
     } == {"t2"}  # t3 is safe_to_retry=false, never eligible

@@ -324,13 +324,13 @@ def dlq_redrive_query(spark, sf_dir: str) -> DataFrame:
     redrive-eligible rows (`error.safe_to_retry` — expiry is retryable,
     poison is not) and summarize them. The oracle replays the routing
     and keeps only the expired set; the write/read roundtrip through
-    sinks/upsert.append_dlq + redrive_candidates is what's under test.
+    sinks/dlq.append_dlq + redrive_candidates is what's under test.
     """
     import os
 
     from .. import catalog
     from . import artifacts
-    from ..sinks import upsert as upsert_sink
+    from ..sinks import dlq as dlq_sink
 
     events = catalog.load_table(spark, sf_dir, "events")
     anchor = events.agg(F.max("ts").alias("anchor_ts"))
@@ -363,9 +363,9 @@ def dlq_redrive_query(spark, sf_dir: str) -> DataFrame:
         )
     )
     dlq = os.path.join(artifacts.scratch_dir("dlq_redrive_"), "dlq")
-    upsert_sink.append_dlq(spark, dlq, rejects)
+    dlq_sink.append_dlq(spark, dlq, rejects)
     return (
-        upsert_sink.redrive_candidates(spark, dlq)
+        dlq_sink.redrive_candidates(spark, dlq)
         .groupBy(F.col("raw_payload").alias("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_redrive"),

@@ -10,7 +10,7 @@ that state matters at scale:
   (the bucket id is a narrow per-row expression; no shuffle before the
   11-group agg);
 * `snapshot_diff` — full-outer key reconciliation between two table
-  versions, the audit for any idempotent-upsert sink (sinks/upsert.py):
+  versions, the audit for any idempotent-upsert sink (sinks/manifest.py):
   one co-partitioned join on the key, classification is a narrow CASE;
 * `scd2_build` — type-2 slowly-changing dimension from an event log:
   change-point detection (lag) + validity intervals (lead) in two window

@@ -813,8 +813,8 @@ def q_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("manifest_merge", oracle=manifest_sink.MANIFEST_MERGE_SQL)
 def q_manifest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ACID table format (manifest-committed copy-on-write parquet):
-    # two MERGE commits + time-travel read of both versions, the atomic
-    # alternative to the compact-then-swap upsert (sinks/manifest.py)
+    # two MERGE commits + time-travel read of both versions
+    # (sinks/manifest.py)
     ensure_engine_conf(spark)
     return manifest_sink.manifest_merge_query(spark, sf_dir)
 

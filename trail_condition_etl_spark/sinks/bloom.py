@@ -16,8 +16,9 @@ the residual filter keeps results exact), never false-negative, because
 every value written into a bucket sets its bits at commit time and
 merge-on-read deletes leave the bitmap untouched (rows only disappear;
 a stale 'maybe' is a wasted read, a stale 'absent' would be a wrong
-result). A commit with `collect_stats=False` DROPS the rewritten
-buckets' bitmaps (absent = unprunable = sound).
+result). Every commit that rewrites a bucket records its fresh bitmap;
+a bucket with no recorded bitmap is never pruned by it (absent =
+unprunable = sound).
 
 Hash contract: positions are `pmod(xxhash64(col, seed_i), m)` computed
 JVM-side at commit (`F.xxhash64` chains the column value then the seed

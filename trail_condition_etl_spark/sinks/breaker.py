@@ -9,7 +9,7 @@ DRIVER (one per streaming query — exactly one instance runs per query,
 so driver-local state is correct) and short-circuits sink calls while
 open, letting micro-batches fail fast until the cooldown probe.
 
-Composes with `upsert.retry_with_backoff`: retries absorb transient
+Composes with `lease.retry_with_backoff`: retries absorb transient
 blips inside one batch; the breaker stops repeated whole-batch failures
 across batches.
 """

@@ -2,7 +2,7 @@
 
 `read_manifest_lookup` must know which bucket dirs the requested keys
 hash into. The table's layout is written with
-`pmod(xxhash64(*keys), n_buckets)` (sinks/upsert.py `_with_bucket`), so
+`pmod(xxhash64(*keys), n_buckets)` (sinks/manifest.py `_with_bucket`), so
 planning previously ran a whole Spark job — createDataFrame over the
 requested keys, hash, distinct, collect — BEFORE the actual read. For a
 point lookup of a handful of keys that job IS the latency (~300 ms of

@@ -1,12 +1,7 @@
 """Manifest-committed table format: ACID upsert over plain parquet.
 
-The compact-then-swap upsert (sinks/upsert.py) rewrites bucket
-directories IN PLACE under a lease — correct for a single writer, and
-fencing DETECTS a stolen lease, but plain dynamic-partition overwrite
-has no atomic data+token commit, so a fenced writer that dies between
-its fence check and its job commit can still interleave (the documented
-honest-limit window; upsert.py module banner). This module closes that
-window the way Delta/Iceberg do, reduced to its essential mechanics:
+This is the engine's only keyed-table format. Every commit is atomic,
+the way Delta/Iceberg make it, reduced to their essential mechanics:
 
 * data files are IMMUTABLE. Each commit writes its output to a private
   segment directory (`data/seg-<nonce>/pk_bucket=N/...`) that no reader
@@ -44,11 +39,11 @@ made transactional at the storage layer. IO stays proportional to the
 touched buckets (copy-on-write per bucket, untouched buckets' segment
 dirs carry over into the next manifest by reference, zero bytes moved).
 
-Concurrency: commits run under the SAME lease + fencing protocol as
-upsert.py (`acquire_table_lease` / `check_fence` / `record_commit`),
-but here a fenced abort is total — the stale writer's segment is
-orphaned data no manifest references, swept by `vacuum`, and the table
-never saw a byte of it.
+Concurrency: commits run under the lease + fencing protocol of
+sinks/lease.py (`acquire_table_lease` / `check_fence` /
+`record_commit`), and a fenced abort is total — the stale writer's
+segment is orphaned data no manifest references, swept by `vacuum`,
+and the table never saw a byte of it.
 
 Full format spec (layout, manifest fields, DML matrix, 100 TB notes
 incl. "Bucket sizing at scale" — target bytes/bucket, when
@@ -72,16 +67,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import bloom as _bloom
-from .upsert import (
-    DEFAULT_BUCKETS,
+from .lease import (
     WriterFencedError,
-    _with_bucket,
     acquire_table_lease,
     check_fence,
     record_commit,
     release_table_lease,
     retry_with_backoff,
 )
+
+DEFAULT_BUCKETS = 64
+
+
+def _with_bucket(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
+    return df.withColumn(
+        "pk_bucket", F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
+    )
 
 
 def _manifest_dir(table_path: str) -> str:
@@ -1572,7 +1573,6 @@ def manifest_upsert(
     keys: list[str],
     n_buckets: int | None = None,
     tombstone_col: str | None = None,
-    collect_stats: bool = True,
     operation: str = "upsert",
     replace: bool = False,
     txn: tuple[str, int] | None = None,
@@ -1581,8 +1581,7 @@ def manifest_upsert(
     """MERGE-style upsert with an atomic commit: new rows win over
     existing rows with the same key; untouched buckets carry over by
     reference. With `tombstone_col`, rows flagged true DELETE their key
-    instead (the full insert/update/delete MERGE triad, mirroring
-    `upsert.upsert_parquet_with_deletes` on the ACID path — a bucket
+    instead (the full insert/update/delete MERGE triad — a bucket
     whose rows all die simply drops out of the next manifest). Returns
     the committed version. A failure ANYWHERE before the manifest
     publish leaves the table byte-identical (the segment dir is
@@ -1922,23 +1921,17 @@ def manifest_upsert(
                 prev.fields + [f for f in schema.fields if f.name not in have]
             )
         # stats: carried buckets keep their recorded stats by reference;
-        # rewritten buckets get fresh stats from the new segment's
-        # footers. A commit with collect_stats=False leaves its rewritten
-        # buckets stat-less (unprunable — sound, just slower to read);
-        # row counts come with every footer, so they are always recorded.
+        # rewritten buckets get fresh stats and row counts from the new
+        # segment's footers.
         prev_stats = mf.get("stats", {}) if mf is not None else {}
         stats = {b: prev_stats[b] for b in carried if b in prev_stats}
         prev_counts = mf.get("row_counts", {}) if mf is not None else {}
         row_counts = {b: prev_counts[b] for b in carried if b in prev_counts}
         # stats key by PHYSICAL name (they describe file contents)
         footers = _read_footers(
-            seg_abs,
-            [mapping.get(c, c) for c in _stat_columns(schema)]
-            if collect_stats
-            else [],
+            seg_abs, [mapping.get(c, c) for c in _stat_columns(schema)]
         )
-        if collect_stats:
-            stats.update(footers.stats)
+        stats.update(footers.stats)
         row_counts.update(footers.row_counts)
         # per-file stats (written by a clustered optimize) survive on
         # carried buckets — their dirs are immutable; rewritten buckets
@@ -1956,13 +1949,11 @@ def manifest_upsert(
             b: prev_dcnt[b] for b in carried if b in prev_dcnt
         }
         # bloom bitmaps: carried buckets keep theirs by reference;
-        # rewritten buckets get fresh bitmaps (or none, when
-        # collect_stats=False — absent = unprunable, sound)
+        # rewritten buckets get fresh bitmaps
         bloom_cfg = mf.get("bloom", {}) if mf is not None else {}
         prev_blooms = mf.get("blooms", {}) if mf is not None else {}
         blooms = {b: prev_blooms[b] for b in carried if b in prev_blooms}
-        if collect_stats and bloom_cfg:
-            blooms.update(_collect_blooms(spark, seg_abs, bloom_cfg))
+        blooms.update(_collect_blooms(spark, seg_abs, bloom_cfg))
         manifest = {
             "version": (mf["version"] if mf else 0) + 1,
             "token": token,
@@ -3303,11 +3294,11 @@ def manifest_row_count(
 ) -> int | None:
     """Exact COUNT(*) from metadata alone — zero data files opened
     (the Iceberg/Delta metadata-count shortcut). Per-bucket row counts
-    are read from the written files' footers at every commit
-    (collect_stats=False included) and carry by reference with their
-    buckets. Returns None when any referenced bucket lacks a count (a
-    bucket written by an older format version that recorded none): an
-    honest "must scan", never a wrong number. Pending merge-on-read deletes subtract by their recorded
+    are read from the written files' footers at every commit and carry
+    by reference with their buckets. Returns None when any referenced
+    bucket lacks a count (a bucket written by an older format version
+    that recorded none): an honest "must scan", never a wrong number.
+    Pending merge-on-read deletes subtract by their recorded
     per-bucket key counts — exact because `delete_where` matches
     against the current snapshot, so a key is counted in at most one
     delete file."""
@@ -3379,7 +3370,6 @@ def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
 def optimize_table(
     spark: SparkSession,
     table_path: str,
-    collect_stats: bool = True,
     cluster_by: list[str] | None = None,
     files_per_bucket: int = 4,
     n_buckets: int | None = None,
@@ -3515,12 +3505,7 @@ def optimize_table(
             for e in os.listdir(seg_abs)
             if e.startswith("pk_bucket=")
         }
-        footers = _read_footers(seg_abs, stat_cols if collect_stats else [])
-        stats = footers.stats if collect_stats else {}
-        row_counts = footers.row_counts
-        file_stats = (
-            footers.file_stats if collect_stats and cluster_by else {}
-        )
+        footers = _read_footers(seg_abs, stat_cols)
         # bloom config keys by physical name and the rewrite preserved
         # physical names, so the config carries through unchanged
         bloom_cfg = dict(mf.get("bloom", {}))
@@ -3531,15 +3516,11 @@ def optimize_table(
             "keys": mf["keys"],
             "schema": mf["schema"],
             "buckets": buckets,
-            "stats": stats,
-            "file_stats": file_stats,
-            "row_counts": row_counts,
+            "stats": footers.stats,
+            "file_stats": footers.file_stats if cluster_by else {},
+            "row_counts": footers.row_counts,
             "bloom": bloom_cfg,
-            "blooms": (
-                _collect_blooms(spark, seg_abs, bloom_cfg)
-                if collect_stats
-                else {}
-            ),
+            "blooms": _collect_blooms(spark, seg_abs, bloom_cfg),
             # physical names survive the rewrite (stable field identity,
             # like Delta REORG keeping field IDs); dropped columns are
             # physically purged — APPLY (PURGE) folded into optimize —

@@ -18,7 +18,7 @@ carries:
 * streaming/micro-batch appends leave many small files per partition;
   `compact_day_partitions` rewrites each day to one file per partition
   clustered task (compact-then-swap, same crash-safe pattern as
-  sinks/upsert.trim_dlq) without changing table contents.
+  sinks/dlq.trim_dlq) without changing table contents.
 
 tests/test_sinks.py pins the behaviors; tests/test_plans.py pins the
 pruned plan shape (PartitionFilters non-empty, only matching days read).

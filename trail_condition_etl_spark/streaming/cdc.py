@@ -24,9 +24,9 @@ One pass = one AvailableNow trigger:
 
 Delivery is therefore AT-LEAST-ONCE: a crash between apply and the
 cursor write replays the same span on the next pass. The downstream
-sinks this feeds (`manifest_upsert`, `upsert_parquet_with_deletes`)
-are idempotent MERGEs, so replay converges — the same contract the
-streaming pipeline's foreachBatch sinks rely on.
+sink this feeds (`manifest_upsert`, with or without a tombstone
+column) is an idempotent MERGE, so replay converges — the same
+contract the streaming pipeline's foreachBatch sinks rely on.
 
 Retention contract: the cursor pins `from_version`, so `vacuum`'s
 `keep_last` horizon must cover the slowest consumer's lag (exactly

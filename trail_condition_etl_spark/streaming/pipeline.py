@@ -21,9 +21,9 @@ The task envelope (_enqueued_ts, _delivery_count) is carried as columns;
 `route_envelope` is the same CASE policy as the batch operator
 (operators/pipeline.py), applied inside the stream.
 
-Sinks go through `foreachBatch` -> idempotent upsert (sinks/upsert.py),
-giving end-to-end effectively-once on top of the at-least-once replay of
-a restarted micro-batch (T1).
+Sinks go through `foreachBatch` -> idempotent manifest-table upsert
+(sinks/manifest.py), giving end-to-end effectively-once on top of the
+at-least-once replay of a restarted micro-batch (T1).
 """
 
 from __future__ import annotations
@@ -36,7 +36,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..operators.pipeline import EXPIRED_TASK_SECONDS, MAX_DELIVERY_COUNT
-from ..sinks import upsert as upsert_sink
+from ..sinks import dlq as dlq_sink
+from ..sinks import manifest as manifest_sink
 from ..sinks.breaker import CircuitBreaker
 from ..sinks.ratelimit import DailyRateLimiter
 
@@ -143,7 +144,7 @@ def run_pipeline_available_now(
     breaker: CircuitBreaker | None = None,
     rate_limiter: DailyRateLimiter | None = None,
     metrics_path: str | None = None,
-    table_format: str = "parquet",
+    table_format: str = "manifest",
 ) -> StreamingQuery:
     """EP2/EP3 skeleton as one incremental pass (T9 Trigger.AvailableNow):
     staged tasks -> watermark dedup -> envelope routing -> foreachBatch
@@ -181,7 +182,7 @@ def run_pipeline_from_stream(
     breaker: CircuitBreaker | None = None,
     rate_limiter: DailyRateLimiter | None = None,
     metrics_path: str | None = None,
-    table_format: str = "parquet",
+    table_format: str = "manifest",
 ) -> StreamingQuery:
     """Transport-agnostic core of the pipeline: takes an already-decoded
     streaming envelope frame (any streaming/broker.py transport — files,
@@ -189,22 +190,15 @@ def run_pipeline_from_stream(
     envelope routing, and the foreachBatch sinks. This is the seam a
     Kafka deployment calls directly.
 
-    `table_format="manifest"` lands micro-batches in the ACID table
-    (sinks/manifest.py) instead of the in-place parquet upsert: each
-    epoch becomes one atomic manifest commit, so a crash mid-epoch
-    leaves the previous snapshot intact and checkpoint replay of the
-    same batch converges (idempotent MERGE) — exactly-once end-to-end
-    with readers snapshot-isolated from in-flight epochs."""
-    keys = upsert_keys or ["task_id"]
-    if table_format == "manifest":
-        from ..sinks import manifest as manifest_sink
-
-        def sink_upsert(sess, path, df, ks):
-            manifest_sink.manifest_upsert(sess, path, df, ks)
-    elif table_format == "parquet":
-        sink_upsert = upsert_sink.upsert_parquet
-    else:
+    Micro-batches land in the ACID manifest table (sinks/manifest.py,
+    the only `table_format`): each epoch becomes one atomic manifest
+    commit, so a crash mid-epoch leaves the previous snapshot intact
+    and checkpoint replay of the same batch converges (idempotent
+    MERGE) — exactly-once end-to-end with readers snapshot-isolated
+    from in-flight epochs."""
+    if table_format != "manifest":
         raise ValueError(f"unknown table_format: {table_format!r}")
+    keys = upsert_keys or ["task_id"]
     stream = deduped_task_stream(task_stream)
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -230,7 +224,7 @@ def run_pipeline_from_stream(
             guard = breaker.call if breaker is not None else (lambda fn: fn())
             if not rejects.isEmpty():
                 guard(
-                    lambda: upsert_sink.append_dlq(
+                    lambda: dlq_sink.append_dlq(
                         batch.sparkSession, dlq_path, rejects
                     )
                 )
@@ -246,7 +240,7 @@ def run_pipeline_from_stream(
                 good, throttled = _admit_within_quota(good, keys, rate_limiter)
                 if throttled is not None and not throttled.isEmpty():
                     guard(
-                        lambda: upsert_sink.append_dlq(
+                        lambda: dlq_sink.append_dlq(
                             batch.sparkSession, dlq_path, throttled
                         )
                     )
@@ -254,7 +248,7 @@ def run_pipeline_from_stream(
                 good = transform(good)
             if not good.isEmpty():
                 guard(
-                    lambda: sink_upsert(
+                    lambda: manifest_sink.manifest_upsert(
                         batch.sparkSession, out_table, good, keys
                     )
                 )
@@ -304,10 +298,8 @@ def streaming_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependent way — the multi-batch path stays covered by the streaming
     unit tests.
 
-    The processed-rows sink is the MANIFEST table (table_format=
-    "manifest", VERDICT r5 directive 5): each epoch is one atomic
-    commit, closing the compact-then-swap path's documented non-atomic
-    window; the oracle is unchanged — only the storage layer moved."""
+    The processed-rows sink is the MANIFEST table: each epoch is one
+    atomic commit."""
     import os
 
     from .. import catalog
@@ -336,7 +328,6 @@ def streaming_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         ckpt,
         now=F.lit(anchor),
         max_files_per_trigger=None,
-        table_format="manifest",
     )
     q.awaitTermination()
     processed = read_manifest_table(spark, out).select(
@@ -398,9 +389,9 @@ def streaming_roundtrip_multibatch_query(
     The summary adds `n_batches` (non-empty epochs observed via the
     metrics table): staging is written as 6 files, maxFilesPerTrigger=2,
     so exactly 3 — the oracle pins it, proving the run was multi-batch.
-    Each epoch lands as one atomic manifest commit (table_format=
-    "manifest"), so the final table is also the multi-commit ACID path
-    exercised under real micro-batch cadence."""
+    Each epoch lands as one atomic manifest commit, so the final table
+    is also the multi-commit ACID path exercised under real micro-batch
+    cadence."""
     import os
 
     from .. import catalog
@@ -436,7 +427,6 @@ def streaming_roundtrip_multibatch_query(
         now=anchor,
         max_files_per_trigger=2,
         metrics_path=metrics,
-        table_format="manifest",
     )
     q.awaitTermination()
     n_batches = (

@@ -14,8 +14,8 @@ resulting rows upsert keyed on (user_id, valid_from):
 * new regimes insert.
 
 Closed history is immutable — the upsert never touches it, and the
-bucket-partitioned sink (sinks/upsert.py) rewrites only the touched
-hash buckets. At 100 TB the dimension stays bucketed by user hash, the
+manifest table (sinks/manifest.py) rewrites only the touched hash
+buckets. At 100 TB the dimension stays bucketed by user hash, the
 batch side is the small side (one micro-batch), and the open-row lookup
 is a semi-join on the batch's user set.
 
@@ -36,7 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import artifacts
 from ..operators.warehouse import TS_US_FMT
-from ..sinks import upsert as upsert_sink
+from ..sinks import manifest
 
 EVENT_SCHEMA = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING"
 DIM_KEYS = ["user_id", "valid_from"]
@@ -74,8 +74,9 @@ def merge_scd2_batch(
 ) -> None:
     """Merge one micro-batch of events into the dimension table."""
     users = batch.select("user_id").distinct()
-    if os.path.exists(dim_path):
-        dim = upsert_sink.read_upsert_table(spark, dim_path)
+    # a crashed first commit leaves the directory but no manifest
+    if manifest.read_manifest(dim_path) is not None:
+        dim = manifest.read_manifest_table(spark, dim_path)
         # ALL of each touched user's intervals become pseudo-rows, not
         # just the open one: the regimes of the interval set alone are
         # exactly the current intervals (adjacent intervals differ in
@@ -99,7 +100,7 @@ def merge_scd2_batch(
     else:
         merged_events = batch.select("event_id", "ts", "user_id", "event_type")
     out = _regimes(merged_events)
-    upsert_sink.upsert_parquet(spark, dim_path, out, DIM_KEYS)
+    manifest.manifest_upsert(spark, dim_path, out, DIM_KEYS)
 
 
 def run_scd2_maintenance(
@@ -156,7 +157,7 @@ def stream_scd2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, staging, dim, os.path.join(root, "ckpt")
         )
         q.awaitTermination()
-    final = upsert_sink.read_upsert_table(spark, dim)
+    final = manifest.read_manifest_table(spark, dim)
     return final.select(
         "user_id",
         "event_type",

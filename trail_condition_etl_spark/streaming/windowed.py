@@ -190,7 +190,7 @@ GROUP BY 1, 2
 
 
 # ---------------------------------------------------------------------------
-# update-mode counts maintained through the idempotent upsert sink
+# update-mode counts maintained through the idempotent manifest sink
 # ---------------------------------------------------------------------------
 
 
@@ -204,9 +204,9 @@ def run_windowed_update_available_now(
     re-emits the windows it changed, and foreachBatch upserts them keyed
     on (window_start_s, event_type) — the running-totals dashboard
     pattern. The state store carries the running aggregates across
-    batches AND restarts; the upsert sink makes re-emission idempotent,
-    so the table always holds the latest total per window."""
-    from ..sinks import upsert as upsert_sink
+    batches AND restarts; the manifest upsert makes re-emission
+    idempotent, so the table always holds the latest total per window."""
+    from ..sinks import manifest as manifest_sink
 
     stream = spark.readStream.schema(
         "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
@@ -224,7 +224,7 @@ def run_windowed_update_available_now(
 
     def upsert_batch(batch, epoch_id):
         if not batch.isEmpty():
-            upsert_sink.upsert_parquet(
+            manifest_sink.manifest_upsert(
                 batch.sparkSession,
                 table_path,
                 batch,
@@ -246,7 +246,7 @@ def stream_windowed_update_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain batch GROUP BY — update-mode re-emission through
     the keyed upsert must converge to exactly the full-data totals."""
     from .. import catalog
-    from ..sinks import upsert as upsert_sink
+    from ..sinks.manifest import read_manifest_table
 
     events = catalog.load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -263,7 +263,7 @@ def stream_windowed_update_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         part.write.mode("append").parquet(staging)
         q = run_windowed_update_available_now(spark, staging, table, ckpt)
         q.awaitTermination()
-    return upsert_sink.read_upsert_table(spark, table)
+    return read_manifest_table(spark, table)
 
 
 STREAM_WINDOWED_UPDATE_SQL = """
