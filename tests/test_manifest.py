@@ -45,31 +45,81 @@ def test_new_rows_win_and_rerun_is_idempotent(spark, tmp_path):
     assert _state(spark, table) == first == {(1, "A"), (2, "b")}
 
 
-def test_failed_write_changes_nothing(spark, tmp_path, monkeypatch):
-    """A writer that dies ANYWHERE before the manifest publish leaves
-    the table byte-identical — the half-written segment is orphan data
-    no manifest references."""
+#: one writer per commit shape, each crashed at the link-publish below
+_CRASH_WRITERS = {
+    "manifest_upsert": lambda spark, t: mf.manifest_upsert(
+        spark, t, _df(spark, [(9, "x")]), ["k"]
+    ),
+    "delete_where": lambda spark, t: mf.delete_where(spark, t, "k = 1"),
+    "compact_buckets": lambda spark, t: mf.compact_buckets(
+        spark, t, bucket_ids=[int(b) for b in mf.read_manifest(t)["buckets"]]
+    ),
+    "restore_table": lambda spark, t: mf.restore_table(spark, t, version=1),
+    "add_table_constraint": lambda spark, t: mf.add_table_constraint(
+        spark, t, "k_pos", "k > 0"
+    ),
+    "optimize_table": lambda spark, t: mf.optimize_table(spark, t),
+}
+
+
+@pytest.mark.parametrize("layout", ["inline", "sharded"])
+@pytest.mark.parametrize("writer", list(_CRASH_WRITERS))
+def test_failed_write_changes_nothing(
+    spark, tmp_path, monkeypatch, writer, layout
+):
+    """A writer that dies at the manifest link-publish — the one commit
+    point, after its segment, delete file and sidecars are written —
+    leaves the table byte-identical: the same versions, the same
+    manifest, the same rows. What it wrote is orphan data no manifest
+    references: `vacuum` reclaims every orphan segment, delete dir and
+    `_meta/` sidecar, and the next commit lands as exactly v+1. Both
+    metadata layouts (sharded = SIDECAR_RANGE 2 on a 4-bucket table)."""
+    if layout == "sharded":
+        monkeypatch.setattr(mf, "SIDECAR_RANGE", 2)
     table = str(tmp_path / "t")
-    mf.manifest_upsert(spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=4)
+    mf.manifest_upsert(
+        spark, table, _df(spark, [(1, "a"), (2, "b")]), ["k"], n_buckets=4
+    )
+    mf.manifest_upsert(spark, table, _df(spark, [(2, "B"), (3, "c")]), ["k"])
     before = _state(spark, table)
+    versions = mf.list_versions(table)
+    slim = mf._read_slim(table, versions[-1])
 
-    def boom(table_path, manifest, token):
-        raise IOError("died between data write and manifest publish")
+    def listing(sub):
+        try:
+            return set(os.listdir(os.path.join(table, sub)))
+        except OSError:
+            return set()
 
-    monkeypatch.setattr(mf, "_publish_manifest", boom)
+    data_before, meta_before = listing("data"), listing("_meta")
+    orphan_meta = []
+    publish = mf._atomic_publish
+
+    def boom(table_path, to_write, version):
+        orphan_meta.append(listing("_meta") - meta_before)
+        raise IOError("died at the manifest link-publish")
+
+    monkeypatch.setattr(mf, "_atomic_publish", boom)
     with pytest.raises(IOError):
-        mf.manifest_upsert(
-            spark, table, _df(spark, [(9, "x")]), ["k"], n_buckets=4
-        )
-    monkeypatch.undo()
+        _CRASH_WRITERS[writer](spark, table)
+    monkeypatch.setattr(mf, "_atomic_publish", publish)
+    assert orphan_meta, "the crash point was never reached"
+    assert mf.list_versions(table) == versions
+    assert mf._read_slim(table, versions[-1]) == slim
     assert _state(spark, table) == before
-    assert mf.list_versions(table) == [1]
-    # the orphan segment exists until vacuum sweeps it
-    segs = os.listdir(os.path.join(table, "data"))
-    assert len(segs) > 1
-    removed = mf.vacuum(table)
-    assert removed >= 1
+    assert mf.manifest_row_count(table) == len(before)
+    if writer not in ("restore_table", "add_table_constraint"):
+        # a data writer's orphans exist until vacuum: its segment or
+        # delete dir, and on the sharded layout its new sidecars
+        assert listing("data") > data_before
+        assert bool(orphan_meta[0]) == (layout == "sharded")
+    mf.vacuum(table, keep_last=len(versions))
+    assert listing("data") == data_before
+    assert listing("_meta") == meta_before
     assert _state(spark, table) == before  # vacuum never touches live data
+    v = _CRASH_WRITERS[writer](spark, table)
+    assert v == versions[-1] + 1
+    assert mf.list_versions(table) == versions + [v]
 
 
 def test_fenced_writer_aborts_totally(spark, tmp_path):
@@ -95,9 +145,11 @@ def test_publish_never_clobbers_an_existing_version(spark, tmp_path):
     table = str(tmp_path / "t")
     mf.manifest_upsert(spark, table, _df(spark, [(1, "a")]), ["k"], n_buckets=4)
     winner = mf.read_manifest(table, 1)
-    loser = dict(winner, token=999, buckets={"0": "data/seg-bogus/pk_bucket=0"})
+    loser = {"0": {"buckets": "data/seg-bogus/pk_bucket=0"}}
     with pytest.raises(lease.WriterFencedError):
-        mf._publish_manifest(table, loser, token=999)
+        mf._commit_manifest(
+            table, 999, mf._read_slim(table, 1), {"version": 1}, loser
+        )
     assert mf.read_manifest(table, 1) == winner  # untouched
     # and the temp file was cleaned up either way
     assert not [
@@ -920,10 +972,10 @@ def test_crashed_clustered_optimize_changes_nothing(spark, tmp_path, monkeypatch
     }
     before_mf = mf.read_manifest(table)
 
-    def boom(table_path, manifest, token):
+    def boom(table_path, manifest, version):
         raise IOError("died between clustered rewrite and publish")
 
-    monkeypatch.setattr(mf, "_publish_manifest", boom)
+    monkeypatch.setattr(mf, "_atomic_publish", boom)
     with pytest.raises(IOError):
         mf.optimize_table(
             spark, table, cluster_by=["price"], files_per_bucket=4

@@ -210,10 +210,10 @@ def test_crashed_delete_changes_nothing(spark, tmp_path, monkeypatch):
     table = _table(spark, tmp_path)
     before = mf.read_manifest(table)
 
-    def boom(table_path, manifest, token):
+    def boom(table_path, manifest, version):
         raise IOError("died between delete-file write and publish")
 
-    monkeypatch.setattr(mf, "_publish_manifest", boom)
+    monkeypatch.setattr(mf, "_atomic_publish", boom)
     with pytest.raises(IOError):
         mf.delete_where(spark, table, "k < 50")
     monkeypatch.undo()

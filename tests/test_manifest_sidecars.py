@@ -514,13 +514,18 @@ def test_sharded_table_empties_and_refills(spark, tmp_path, small_range):
     assert got == {(5, 55)}
 
 
-def test_metadata_surfaces_parse_zero_sidecars(spark, tmp_path, small_range):
+def test_metadata_surfaces_parse_zero_sidecars(
+    spark, tmp_path, small_range, monkeypatch
+):
     """r12: the metadata-only read surfaces — DESCRIBE HISTORY,
     TIMESTAMP AS OF resolution, the CDC cursor poll, and the stream
     source's latestOffset — need slim scalars only (operation,
     timestamps, op metrics, total_rows, version, keys), so on a
     sharded table they parse ZERO sidecars however many versions they
-    walk. Before r12 each walked version paid a full assembly."""
+    walk. Before r12 each walked version paid a full assembly. So does
+    `maintain_table`'s lookback for the last optimize's `cluster_by`:
+    it assembles the CURRENT version once (its layout check needs the
+    bucket dirs) and none of the versions it walks."""
     import datetime as dt
 
     from trail_condition_etl_spark.sinks.manifest import _data_schema
@@ -544,6 +549,14 @@ def test_metadata_surfaces_parse_zero_sidecars(spark, tmp_path, small_range):
     _write_change_cursor(cur, 2)  # up-to-date consumer: pure poll
     assert consume_table_changes(spark, t, cur, lambda *a: 0) == (2, 2)
     assert mfm._load_sidecar.cache_info().misses == 0
+    # a never-optimized table: the lookback walks every version
+    merges: list[int] = []
+    real = mfm._merge_sidecar
+    monkeypatch.setattr(
+        mfm, "_merge_sidecar", lambda *a: merges.append(1) or real(*a)
+    )
+    assert mfm.maintain_table(spark, t, max_bucket_bytes=None) is None
+    assert len(merges) == len(mfm._read_slim(t, 2)["sidecars"])
 
 
 def test_cdc_stream_over_clone_carried_metadata(spark, tmp_path, small_range):
@@ -587,12 +600,11 @@ def test_scalar_ddl_commits_parse_and_write_zero_sidecars(
     spark, tmp_path, small_range
 ):
     """r12: metadata-only DDL (rename, constraint add/drop, generated-
-    rule drop) publishes through `_scalar_commit` — the new slim
-    carries the previous version's sidecar index VERBATIM, so the
-    commit parses zero sidecars and writes zero `_meta/` files (the
-    general publish path re-hashes every range to discover nothing
-    changed). Feature stamping survives: rename adds column-mapping,
-    content features carry."""
+    rule drop) changes no bucket, so the commit hands no changed
+    buckets to `_commit_manifest` and the new slim carries the previous
+    version's sidecar index VERBATIM: the commit parses zero sidecars
+    and writes zero `_meta/` files. Feature stamping survives: rename
+    adds column-mapping, content features carry."""
     t = str(tmp_path / "ddl0")
     mfm.manifest_upsert(spark, t, _frame(spark, 0, 80), ["k"], n_buckets=16)
     mfm.add_table_constraint(spark, t, "v_even", "v % 2 = 0")
@@ -689,11 +701,11 @@ def test_delta_commit_agg_tracks_tombstones_and_mor(
     delete in an UNTOUCHED range survives (the carried entry keeps its
     delete refs and the merge-on-read feature gate stays up via the
     agg delete count); tombstoning a touched bucket EMPTY removes it
-    from the index and the incremental scalars; and a later general
-    commit's from-scratch recompute agrees with the running values."""
+    from the index and the incremental scalars; and a from-scratch
+    recompute agrees with the running values at every step."""
     t = str(tmp_path / "deltamix")
     mfm.manifest_upsert(spark, t, _frame(spark, 0, 80), ["k"], n_buckets=16)
-    mfm.delete_where(spark, t, "k = 3")  # MoR delete, general path
+    mfm.delete_where(spark, t, "k = 3")  # MoR delete
     v2 = mfm.read_manifest(t)
     assert "merge-on-read-deletes" in v2["required_reader_features"]
     # delta commit in a DIFFERENT bucket: deletes carry, gate stays
@@ -704,7 +716,7 @@ def test_delta_commit_agg_tracks_tombstones_and_mor(
     mf3 = mfm.read_manifest(t, 3)
     assert slim3["agg"] == mfm._bucket_agg(mf3)
     # tombstone EVERY row of bucket holding k=21: the bucket leaves
-    # the index and the scalars, via the delta path's `removed` leg
+    # the index and the scalars, as a dropped bucket
     b21 = None
     for b, d in mf3["buckets"].items():
         rows = spark.read.parquet(
@@ -763,8 +775,8 @@ def test_vacuum_clone_scan_parses_unique_sidecars_only(
 def test_mor_delete_serializes_only_hit_ranges(
     spark, tmp_path, small_range, monkeypatch
 ):
-    """r13: `delete_where`'s merge-on-read commit rides the delta path
-    — a 1-key delete on an 8-range table re-serializes ONE range and
+    """r13: `delete_where`'s merge-on-read commit changes only its hit
+    buckets — a 1-key delete on an 8-range table re-serializes ONE range and
     writes ONE new sidecar; the incremental scalars net the deleted
     key out of total_rows and raise the merge-on-read feature gate."""
     t = str(tmp_path / "mordelta")

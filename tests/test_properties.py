@@ -491,6 +491,19 @@ _mops = st.lists(
         # state-preserving like optimize — materializes pending MoR
         # deletes for the buckets it touches, carries the rest by path
         st.tuples(st.just("compact"), st.just(None)),
+        # RESTORE to a retained version (the arg picks which): its base
+        # is that version's snapshot, so the model state AND the value
+        # column's logical name become that version's
+        st.tuples(st.just("restore"), st.integers(0, 1_000)),
+        # INSERT OVERWRITE (`replace=True`): a commit with no base
+        # buckets — the model becomes exactly the batch
+        st.tuples(
+            st.just("replace"),
+            st.dictionaries(
+                st.integers(0, 30), st.integers(-100, 100),
+                min_size=1, max_size=6,
+            ),
+        ),
     ),
     min_size=1,
     max_size=6,
@@ -508,8 +521,9 @@ def test_manifest_table_matches_model_under_any_op_sequence(
 ):
     """Model-based check: ANY interleaving of upserts, tombstone
     deletes, merge-on-read deletes, updates (each including absent
-    keys), plain/clustered optimizes, and vacuums leaves the table
-    exactly equal to a dict that applied the same ops — and the
+    keys), plain/clustered optimizes, restores, replaces, and vacuums
+    leaves the table exactly equal to a dict that applied the same
+    ops — and the
     stats-skip read, the metadata-only count, the Python DataSource
     batch read, and a CDC-replay reconstruction (oldest snapshot +
     change feed) all agree with the model too. Half the examples run
@@ -533,6 +547,7 @@ def _run_manifest_model(spark, tmp_path_factory, ops):
     model: dict[int, int] = {}
     committed = False
     vc = "v"  # the value column's CURRENT logical name (rename flips it)
+    snaps: dict[int, tuple[dict[int, int], str]] = {}  # version -> state
     for kind, arg in ops:
         if kind == "upsert":
             df = spark.createDataFrame(
@@ -589,8 +604,25 @@ def _run_manifest_model(spark, tmp_path_factory, ops):
             vc = new_vc
         elif kind == "compact" and committed:
             mfm.compact_buckets(spark, table)
+        elif kind == "restore" and committed:
+            retained = mfm.list_versions(table)
+            target = retained[arg % len(retained)]
+            mfm.restore_table(spark, table, version=target)
+            model, vc = dict(snaps[target][0]), snaps[target][1]
+        elif kind == "replace":
+            df = spark.createDataFrame(
+                list(arg.items()), f"k int, {vc} long"
+            )
+            mfm.manifest_upsert(
+                spark, table, df, ["k"],
+                n_buckets=None if committed else 4, replace=True,
+            )
+            model = dict(arg)
+            committed = True
         elif kind == "vacuum" and committed:
             mfm.vacuum(table, keep_last=1)
+        if committed:
+            snaps[mfm.list_versions(table)[-1]] = (dict(model), vc)
     if not committed:
         return
     got = {
@@ -601,14 +633,24 @@ def _run_manifest_model(spark, tmp_path_factory, ops):
     assert mfm.manifest_row_count(table) == len(model)
     # r13 delta-commit invariant: the incrementally-maintained agg
     # scalars must equal a from-scratch recompute over the assembled
-    # maps after ANY op interleaving (general and delta commits mix
-    # freely — optimize/restore recompute, upsert/delete increment)
+    # maps after ANY op interleaving (full rewrites start from zero,
+    # every other commit patches its base's scalars)
     latest = mfm.list_versions(table)[-1]
     slim = mfm._read_slim(table, latest)
+    assembled = mfm.read_manifest(table, latest)
     if "agg" in slim:
         assert slim["agg"] == mfm._bucket_agg(
-            mfm.read_manifest(table, latest)
+            assembled
         ), "incremental agg drifted from recompute"
+    # the reader-feature gate equals a recompute from the assembled
+    # CONTENT (agg left out), plus sharded-metadata exactly when the
+    # slim has a sidecar index
+    feats = mfm.required_reader_features(
+        {k: v for k, v in assembled.items() if k != "agg"}
+    )
+    if "sidecars" in slim:
+        feats.append("sharded-metadata")
+    assert slim["required_reader_features"] == feats
     skipped = mfm.read_manifest_table(spark, table, skip=[(vc, ">=", 0)])
     assert {r.k: getattr(r, vc) for r in skipped.collect()} == {
         k: v for k, v in model.items() if v >= 0

@@ -1816,7 +1816,7 @@ _PINNED_HEAD = [
     # columns (touches every upsert's pre-commit path), and the
     # incremental bucket-wise compaction maintain now prefers
     "cdf_preimages", "generated_columns", "incremental_compaction",
-    # r11: the sharded-metadata tier rewires _publish_manifest and
+    # r11: the sharded-metadata tier rewires the manifest commit and
     # read_manifest for EVERY table past the threshold — sample first
     "sidecar_metadata",
     # r12: zero-metadata clones (carried sidecar refs + base

@@ -100,11 +100,12 @@ def _manifest_path(table_path: str, version: int) -> str:
 # stats, file stats, row counts, delete refs, bloom bitmaps) no longer
 # inline in the manifest JSON. They shard into immutable bucket-range
 # SIDECAR files under `_meta/`, and the manifest itself becomes a slim
-# list referencing them by (path, content-hash). A commit touching one
-# bucket rewrites ONE sidecar (its range) plus the slim manifest —
-# metadata IO ∝ change size, independent of n_buckets — while every
-# untouched range carries the PREVIOUS version's sidecar file by
-# reference (hash equality). At the sizing rule's 800k buckets
+# list referencing them by (path, content-hash). Every commit goes
+# through `_commit_manifest`, the one place that picks the layout: a
+# commit touching one bucket rewrites ONE sidecar (its range) plus the
+# slim manifest — metadata IO ∝ change size, independent of n_buckets
+# — while every untouched range carries its base snapshot's index
+# entry verbatim. At the sizing rule's 800k buckets
 # (docs/TABLE_FORMAT.md) that is ~12.5k sidecars of ~64 buckets each;
 # the old single-JSON layout rewrote all of it on every commit.
 # Readers below the threshold see the inline layout unchanged; sharded
@@ -179,10 +180,9 @@ _load_sidecar.cache_clear = _load_sidecar_abs.cache_clear
 
 def _merge_sidecar(mf: dict, ent: dict, table_path: str) -> None:
     """Merge one sidecar's per-bucket maps into `mf`. Values are copied
-    one level deep (the inner per-bucket dict/list) because committers
-    mutate exactly that level (e.g. add_bloom_index's
-    `blooms.setdefault(b, {}).update(...)`) — the one-level-mutation
-    convention that keeps the process-wide `_load_sidecar` cache safe.
+    one level deep (the inner per-bucket dict/list), so a caller that
+    mutates a per-bucket value can never poison the process-wide
+    `_load_sidecar` cache.
 
     A CARRIED entry (r12 zero-copy clone: `base` names the table the
     file belongs to) resolves its RELATIVE dir refs — `buckets` values
@@ -259,61 +259,6 @@ def _write_sidecar(table_path: str, lo: int, blob: str, h: str) -> str:
     return rel
 
 
-def _shard_metadata(table_path: str, manifest: dict) -> dict:
-    """Split the per-bucket maps into bucket-range sidecar files and
-    return the slim manifest referencing them. A range whose content
-    hash equals the previous version's carries that sidecar file by
-    reference — zero bytes rewritten for untouched ranges."""
-    prev = _read_slim(table_path, manifest["version"] - 1) or {}
-    prev_sidecars = prev.get("sidecars", {})
-    ranges: dict[int, dict] = {}
-    for key in _SIDECAR_KEYS:
-        for b, v in manifest.get(key, {}).items():
-            lo = (int(b) // SIDECAR_RANGE) * SIDECAR_RANGE
-            ranges.setdefault(
-                lo, {k: {} for k in _SIDECAR_KEYS}
-            )[key][b] = v
-    sidecars: dict[str, dict] = {}
-    os.makedirs(_meta_dir(table_path), exist_ok=True)
-    for lo, content in sorted(ranges.items()):
-        blob, h = _serialize_range(content)
-        carried = prev_sidecars.get(str(lo))
-        if carried:
-            if carried["hash"] == h:
-                sidecars[str(lo)] = carried
-                continue
-            if carried.get("base"):
-                # a clone-carried range (r12): the source file's bytes
-                # hold SOURCE-relative dir refs, so hash equality can't
-                # see through them — compare the RESOLVED content
-                # instead. An untouched range keeps carrying the
-                # source's file; only ranges the clone actually wrote
-                # re-shard into clone-local sidecars.
-                resolved = {k: {} for k in _SIDECAR_KEYS}
-                _merge_sidecar(resolved, carried, table_path)
-                if resolved == content:
-                    sidecars[str(lo)] = carried
-                    continue
-        # content-addressed (VERDICT r11 directive 6): the version-1
-        # carry above is just the fast path that skips even the
-        # hash-file probe _write_sidecar does.
-        sidecars[str(lo)] = {
-            "path": _write_sidecar(table_path, lo, blob, h),
-            "hash": h,
-        }
-    slim = {
-        k: v for k, v in manifest.items() if k not in _SIDECAR_KEYS
-    }
-    slim["sidecars"] = sidecars
-    # the width the ranges were keyed with: readers MUST map bucket ->
-    # range with the manifest's own width, never the module constant —
-    # a build that ships a different SIDECAR_RANGE would otherwise
-    # compute wrong range starts for old manifests and silently skip
-    # their sidecars (missing buckets = wrong empty results)
-    slim["sidecar_range"] = SIDECAR_RANGE
-    return slim
-
-
 def list_versions(table_path: str) -> list[int]:
     """Committed manifest versions, ascending. [] for a fresh table."""
     try:
@@ -351,12 +296,16 @@ class UnsupportedTableFeatureError(RuntimeError):
 
 def required_reader_features(manifest: dict) -> list[str]:
     """The reader features a correct read of `manifest` depends on —
-    recomputed from content at commit time, never carried blindly."""
+    recomputed from content at commit time, never carried blindly. A
+    slim manifest's pending deletes show in its `agg` scalars (its
+    per-bucket maps live in the sidecars its `sidecars` index names)."""
     feats = []
     if manifest.get("column_mapping") or manifest.get("retired_physical"):
         feats.append("column-mapping")
-    if manifest.get("deletes"):
+    if manifest.get("deletes") or manifest.get("agg", {}).get("dels"):
         feats.append("merge-on-read-deletes")
+    if "sidecars" in manifest:
+        feats.append("sharded-metadata")
     # bloom is advisory (ignoring bitmaps is slower, never wrong), so
     # it is deliberately NOT a required reader feature
     return feats
@@ -403,9 +352,7 @@ def read_manifest(
         )
     if buckets is not None and "sidecars" in mf:
         width = mf.get("sidecar_range", SIDECAR_RANGE)
-        needed = {
-            str((int(b) // width) * width) for b in buckets
-        }
+        needed = {_range_of(b, width) for b in buckets}
         sidecars = mf.pop("sidecars")
         for k in _SIDECAR_KEYS:
             mf.setdefault(k, {})
@@ -466,9 +413,9 @@ def _span_manifests(
 
 def _bucket_agg(manifest: dict) -> dict:
     """Whole-table scalars derived from the per-bucket maps, stamped
-    into every slim manifest so later DELTA commits (r13) can maintain
-    them INCREMENTALLY — subtract the dirty buckets' previous
-    contributions, add their new ones — without ever assembling the
+    into every manifest so later commits can maintain them
+    INCREMENTALLY (`_tally`: subtract the dirty buckets' previous
+    contributions, add their new ones) without ever assembling the
     full maps. `live`/`dels` are bucket counts (op metrics, the MoR
     feature gate); `rows`/`drows` sum the recorded row/delete-key
     counts; `uncounted`/`undel` count buckets MISSING a count
@@ -488,57 +435,178 @@ def _bucket_agg(manifest: dict) -> dict:
     }
 
 
-def _publish_manifest(
-    table_path: str, manifest: dict, token: int, *, preformed: bool = False
-) -> None:
-    """THE commit point: place the next manifest version atomically AND
-    without clobbering — `os.link` fails with EEXIST if the version
-    already exists (unlike os.replace, which silently overwrites), so a
-    stalled fenced writer racing a thief's already-published version
-    gets a fenced abort, never a lost commit. On an object store this
-    is the if-none-match conditional PUT.
+#: fields a commit never carries over from its base: the per-bucket
+#: maps (carried range by range below), what is derived from them and
+#: from the layout, and what every commit states for itself (`clone_of`
+#: marks only a clone's first version)
+_NOT_CARRIED = frozenset(
+    _SIDECAR_KEYS
+    + ("sidecars", "sidecar_range", "agg", "total_rows")
+    + ("required_reader_features", "token", "committed_at")
+    + ("operation", "op_metrics", "clone_of")
+)
 
-    `preformed` (r12, zero-copy clone): the dict is a fully-formed SLIM
-    manifest whose sidecars / sidecar_range / total_rows /
-    required_reader_features were CARRIED from a source snapshot —
-    published as-is (fence and no-clobber still apply); the content
-    recompute below would need assembled inline maps this path
-    deliberately never loads."""
-    check_fence(table_path, token)
-    if preformed:
-        _atomic_publish(table_path, manifest, manifest["version"])
-        return
-    # a metadata-only commit built via {**mf, ...} carries the
-    # ASSEMBLED inline maps; any stale sidecar index from the source
-    # dict must not survive into the new version
-    manifest.pop("sidecars", None)
-    # precomputed exact COUNT(*) (r11): rides the slim manifest so a
-    # metadata count on a sharded table parses zero sidecars. None
-    # (omitted) when any bucket lacks a recorded count — the honest
-    # "must scan" manifest_row_count already returns. The agg scalars
-    # (r13) ride alongside so a later delta commit can maintain both
-    # incrementally.
-    manifest.pop("total_rows", None)
-    manifest.pop("agg", None)
-    agg = _bucket_agg(manifest)
-    manifest["agg"] = agg
+#: table-level fields of a brand-new table
+_NEW_TABLE = {
+    "bloom": {},
+    "column_mapping": {},
+    "retired_physical": [],
+    "generated": {},
+    "constraints": {},
+    "txns": {},
+}
+
+
+def _scalars(mf: dict) -> dict:
+    """`mf` without its per-bucket maps: the base of a commit that
+    rewrites every bucket (optimize, rescale, replace) — it keeps the
+    table's fields and none of its buckets."""
+    return {k: v for k, v in mf.items() if k not in _SIDECAR_KEYS}
+
+
+def _row(mf: dict, bucket: str) -> dict:
+    """Bucket `bucket`'s complete per-bucket row in an assembled
+    manifest: the unit `_commit_manifest` replaces."""
+    return {
+        k: mf[k][bucket] for k in _SIDECAR_KEYS if bucket in mf.get(k, {})
+    }
+
+
+def _range_of(bucket: str, width: int | None) -> str | None:
+    """The sidecar range holding `bucket`; None on the inline layout,
+    whose one range is the manifest itself."""
+    return None if width is None else str(int(bucket) // width * width)
+
+
+def _tally(agg: dict, content: dict, bucket: str, sign: int) -> None:
+    """Add (sign 1) or take out (sign -1) one bucket's share of the
+    `agg` scalars, counted exactly as `_bucket_agg` counts it."""
+    if bucket in content["buckets"]:
+        agg["live"] += sign
+        if bucket in content["row_counts"]:
+            agg["rows"] += sign * content["row_counts"][bucket]
+        else:
+            agg["uncounted"] += sign
+    if bucket in content["deletes"]:
+        agg["dels"] += sign
+        if bucket in content["delete_counts"]:
+            agg["drows"] += sign * content["delete_counts"][bucket]
+        else:
+            agg["undel"] += sign
+
+
+def _commit_manifest(
+    table_path: str,
+    token: int,
+    base: dict | None,
+    scalars: dict,
+    changed: dict[str, dict] | None = None,
+    dropped=(),
+) -> int:
+    """THE commit: publish the next manifest version as `base` plus
+    this commit's changes, and return that version. Every writer
+    commits through here.
+
+    * `base`: the snapshot the commit starts from, as stored
+      (`_read_slim`). That is the previous version for data and DDL
+      commits, the target version for a restore, and the source for a
+      clone (its sidecar entries given `base` refs). `_scalars(mf)`
+      starts from the table's fields with no buckets (full rewrites);
+      None starts a new table.
+    * `scalars`: the fields this commit sets (version, operation,
+      op_metrics and whatever it changes); every other field carries
+      from `base`. `token` and `committed_at` are stamped here.
+    * `changed`: bucket id -> its COMPLETE new per-bucket row
+      ({map key: value}); `dropped`: bucket ids to remove. A bucket
+      named in either loses its whole old row first, so a rewritten
+      bucket's stale deletes or file stats never survive.
+
+    The layout is decided here and nowhere else. Past SIDECAR_RANGE
+    buckets the per-bucket maps shard into range sidecars, and only a
+    range holding a changed or dropped bucket is parsed, patched,
+    re-hashed and (content-addressed) written; every other range's
+    index entry carries verbatim, so a commit that changes no bucket
+    parses and writes no sidecar at all. The `agg` scalars are
+    maintained incrementally, so `total_rows` and the reader features
+    never need the full maps: a 1-bucket commit on the sizing rule's
+    ~12.5k-range table costs O(1) sidecar work. A base at another range
+    width, one predating `agg`, or a move across the threshold resolves
+    the base's full maps and rebuilds every range instead.
+
+    The publish is no-clobber: `os.link` fails with EEXIST when the
+    version already exists (os.replace would silently overwrite), so a
+    stalled fenced writer racing a thief's published version gets a
+    fenced abort, never a lost commit. On an object store this is the
+    if-none-match conditional PUT."""
+    base = base or {}
+    changed = changed or {}
+    slim = {**_NEW_TABLE}
+    slim.update((k, v) for k, v in base.items() if k not in _NOT_CARRIED)
+    slim.update(scalars)
+    slim["token"] = token
+    slim["committed_at"] = _dt.datetime.now(_dt.timezone.utc).isoformat()
+    width = SIDECAR_RANGE if slim["n_buckets"] > SIDECAR_RANGE else None
+    index = base.get("sidecars")
+    if index is not None and (
+        base.get("sidecar_range") != width or "agg" not in base
+    ):
+        base = _assemble(table_path, dict(base))
+        index = None
+    ranges: dict[str | None, dict] = {}
+    if index is None:
+        agg = _bucket_agg(base)
+        for k in _SIDECAR_KEYS:
+            for b, v in base.get(k, {}).items():
+                ranges.setdefault(
+                    _range_of(b, width), {x: {} for x in _SIDECAR_KEYS}
+                )[k][b] = v
+        index = {}
+    else:
+        agg = dict(base["agg"])
+        index = dict(index)
+    for b in {*changed, *dropped}:
+        lo = _range_of(b, width)
+        if lo not in ranges:
+            ranges[lo] = {k: {} for k in _SIDECAR_KEYS}
+            if lo in index:
+                # one sidecar parse (usually cached); base-carried
+                # entries resolve to absolute refs
+                _merge_sidecar(ranges[lo], index[lo], table_path)
+        content = ranges[lo]
+        _tally(agg, content, b, -1)
+        for k in _SIDECAR_KEYS:
+            content[k].pop(b, None)
+        for k, v in changed.get(b, {}).items():
+            content[k][b] = v
+        _tally(agg, content, b, 1)
+    if width is None:
+        slim.update(ranges.get(None) or {k: {} for k in _SIDECAR_KEYS})
+    else:
+        os.makedirs(_meta_dir(table_path), exist_ok=True)
+        for lo in sorted(ranges, key=int):
+            prev = index.pop(lo, None)
+            if not any(ranges[lo].values()):
+                continue  # a fully emptied range leaves the index
+            blob, h = _serialize_range(ranges[lo])
+            if prev is not None and prev["hash"] == h and "base" not in prev:
+                index[lo] = prev  # dirty but byte-identical: carry
+            else:
+                index[lo] = {
+                    "path": _write_sidecar(table_path, int(lo), blob, h),
+                    "hash": h,
+                }
+        slim["sidecars"] = index
+        # readers map bucket -> range with the manifest's OWN width,
+        # never the module constant: a build with another default must
+        # still find every range of this manifest
+        slim["sidecar_range"] = width
+    slim["agg"] = agg
     if agg["uncounted"] == 0 and agg["undel"] == 0:
-        manifest["total_rows"] = agg["rows"] - agg["drows"]
-    # stamp the reader feature gate from CONTENT, at the one choke
-    # point every commit path funnels through — a manifest only ever
-    # requires features it actually uses
-    manifest["required_reader_features"] = required_reader_features(
-        manifest
-    )
-    to_write = manifest
-    if manifest["n_buckets"] > SIDECAR_RANGE:
-        # past the threshold, per-bucket metadata shards into
-        # bucket-range sidecars: ONE rewritten sidecar per touched
-        # range, untouched ranges carried by file reference — the
-        # O(change) commit the 100 TB sizing rule requires
-        manifest["required_reader_features"].append("sharded-metadata")
-        to_write = _shard_metadata(table_path, manifest)
-    _atomic_publish(table_path, to_write, manifest["version"])
+        slim["total_rows"] = agg["rows"] - agg["drows"]
+    slim["required_reader_features"] = required_reader_features(slim)
+    check_fence(table_path, token)
+    _atomic_publish(table_path, slim, slim["version"])
+    return slim["version"]
 
 
 def _atomic_publish(table_path: str, to_write: dict, version: int) -> None:
@@ -558,115 +626,30 @@ def _atomic_publish(table_path: str, to_write: dict, version: int) -> None:
         os.unlink(tmp)
 
 
-def _delta_commit(
-    table_path: str,
-    token: int,
-    prev_slim: dict,
-    scalars: dict,
-    updates: dict[str, dict],
-    removed: set[str],
-) -> None:
-    """Publish a DATA commit as a DELTA over the previous slim manifest
-    (r13, VERDICT r12 directive 2 — the last O(n_buckets) driver cost):
-    untouched sidecar ranges carry their index entry VERBATIM — zero
-    parses, zero serializations — and only ranges holding a dirty
-    bucket are read, patched, re-serialized, and (content-addressed)
-    written. With the whole-table `agg` scalars maintained
-    incrementally, a 1-bucket commit on the sizing rule's ~12.5k-range
-    table costs O(1) sidecar parses + serializations of driver CPU,
-    matching the O(change) metadata IO the layout already had. The
-    general `_publish_manifest` path — which must assemble and re-hash
-    every range — remains for inline tables, layout changes, and
-    manifests predating the agg scalars.
+#: errors no retry can fix: a fenced writer, a rejected commit, a
+#: missing table
+_FATAL = (WriterFencedError, ValueError, FileNotFoundError)
 
-    Contract: `updates` maps each _SIDECAR_KEYS key to {bucket_id:
-    new_value} and `removed` lists bucket ids to drop. Every DIRTY
-    bucket (appearing anywhere in either) is first CLEARED from ALL
-    per-bucket maps, then its updates applied — so callers supply the
-    COMPLETE new per-bucket row for every bucket they touch (a
-    rewritten bucket's stale deletes/file_stats drop automatically,
-    exactly as the general path's carry comprehensions do). `scalars`
-    is the new manifest's scalar fields; sidecars, sidecar_range, agg,
-    total_rows, and required_reader_features are computed here."""
-    width = prev_slim["sidecar_range"]
-    prev_sidecars = prev_slim.get("sidecars", {})
-    by_lo: dict[str, set[str]] = {}
-    for m in updates.values():
-        for b in m:
-            by_lo.setdefault(str((int(b) // width) * width), set()).add(b)
-    for b in removed:
-        by_lo.setdefault(str((int(b) // width) * width), set()).add(b)
-    sidecars = {
-        lo: ent for lo, ent in prev_sidecars.items() if lo not in by_lo
-    }
-    agg = dict(prev_slim["agg"])
-    os.makedirs(_meta_dir(table_path), exist_ok=True)
-    for lo in sorted(by_lo, key=int):
-        content = {k: {} for k in _SIDECAR_KEYS}
-        ent = prev_sidecars.get(lo)
-        if ent is not None:
-            # ONE sidecar parse (usually cached); base-carried entries
-            # resolve to the absolute refs the assembled shape holds
-            _merge_sidecar(content, ent, table_path)
-        for b in by_lo[lo]:
-            # subtract the dirty bucket's previous contributions
-            if b in content["buckets"]:
-                agg["live"] -= 1
-                if b in content["row_counts"]:
-                    agg["rows"] -= content["row_counts"][b]
-                else:
-                    agg["uncounted"] -= 1
-            if b in content["deletes"]:
-                agg["dels"] -= 1
-                if b in content["delete_counts"]:
-                    agg["drows"] -= content["delete_counts"][b]
-                else:
-                    agg["undel"] -= 1
-            for k in _SIDECAR_KEYS:
-                content[k].pop(b, None)
-        for k in _SIDECAR_KEYS:
-            for b, v in updates.get(k, {}).items():
-                if b in by_lo[lo]:
-                    content[k][b] = v
-        for b in updates.get("buckets", {}):
-            if b not in by_lo[lo]:
-                continue
-            agg["live"] += 1
-            if b in updates.get("row_counts", {}):
-                agg["rows"] += updates["row_counts"][b]
-            else:
-                agg["uncounted"] += 1
-        for b in updates.get("deletes", {}):
-            if b not in by_lo[lo]:
-                continue
-            agg["dels"] += 1
-            if b in updates.get("delete_counts", {}):
-                agg["drows"] += updates["delete_counts"][b]
-            else:
-                agg["undel"] += 1
-        if not any(content[k] for k in _SIDECAR_KEYS):
-            continue  # a fully-emptied range leaves the index
-        blob, h = _serialize_range(content)
-        if ent is not None and ent["hash"] == h and not ent.get("base"):
-            sidecars[lo] = ent  # dirty but byte-identical: carry
-            continue
-        sidecars[lo] = {
-            "path": _write_sidecar(table_path, int(lo), blob, h),
-            "hash": h,
-        }
-    slim = dict(scalars)
-    slim["sidecars"] = sidecars
-    slim["sidecar_range"] = width
-    slim["agg"] = agg
-    if agg["uncounted"] == 0 and agg["undel"] == 0:
-        slim["total_rows"] = agg["rows"] - agg["drows"]
-    feats = {"sharded-metadata"}
-    if scalars.get("column_mapping") or scalars.get("retired_physical"):
-        feats.add("column-mapping")
-    if agg["dels"] > 0:
-        feats.add("merge-on-read-deletes")
-    slim["required_reader_features"] = sorted(feats)
-    _publish_manifest(table_path, slim, token, preformed=True)
+
+def _under_lease(table_path: str, attempt, fatal=_FATAL):
+    """Run one commit under the table's writer lease. `attempt(token)`
+    is retried with bounded backoff on transient errors (`fatal` ones
+    propagate at once), each try checking the fence before it writes.
+    The commit is recorded when a version came back (None means nothing
+    was committed), and the lease is released whatever happens."""
+    token = acquire_table_lease(table_path)
+
+    def once():
+        check_fence(table_path, token)
+        return attempt(token)
+
+    try:
+        version = retry_with_backoff(once, fatal=fatal)
+        if version is not None:
+            record_commit(table_path, token)
+        return version
+    finally:
+        release_table_lease(table_path, token)
 
 
 # ---------------------------------------------------------------------------
@@ -955,6 +938,33 @@ def _collect_blooms(
     return _bloom.collect_bloom_stats(spark.read.parquet(seg_abs), cfg)
 
 
+def _segment_rows(
+    table_path: str,
+    seg: str,
+    footers: _SegmentFooters,
+    blooms: dict,
+    file_stats: bool = False,
+) -> dict[str, dict]:
+    """The complete per-bucket rows a freshly written segment (`seg`,
+    table-relative) commits: each bucket dir with its footer stats, row
+    count and bloom bitmaps, plus per-file stats for a clustered
+    write. A rewritten bucket has no pending deletes: the rewrite
+    materialized them."""
+    parts = {
+        "stats": footers.stats,
+        "row_counts": footers.row_counts,
+        "blooms": blooms,
+        "file_stats": footers.file_stats if file_stats else {},
+    }
+    rows = {}
+    for e in os.listdir(os.path.join(table_path, seg)):
+        if e.startswith("pk_bucket="):
+            b = e.split("=", 1)[1]
+            rows[b] = {"buckets": os.path.join(seg, e)}
+            rows[b].update((k, m[b]) for k, m in parts.items() if b in m)
+    return rows
+
+
 def _type_names(schema: StructType) -> dict[str, str]:
     return {f.name: f.dataType.simpleString() for f in schema.fields}
 
@@ -1166,11 +1176,9 @@ def delete_where(
     Returns the committed (or unchanged) version. Crash-total and
     fenced exactly like `manifest_upsert`: an unpublished delete file
     is orphan data no manifest references."""
-    token = acquire_table_lease(table_path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path)
         if mf is None:
             raise FileNotFoundError(
@@ -1192,91 +1200,36 @@ def delete_where(
             return mf["version"]  # nothing matched: no empty commit
         footers = _read_footers(del_abs, [])
         per_bucket = footers.row_counts
-        deletes = {
-            b: list(v) for b, v in mf.get("deletes", {}).items()
-        }
-        delete_counts = dict(mf.get("delete_counts", {}))
+        # a hit bucket keeps its segment, stats and (advisory) blooms:
+        # MoR rows only DISAPPEAR, so a stale bit is a false positive
+        # (wasted read), never a false negative (wrong prune)
+        changed = {}
         for e in hit:
             b = e.split("=", 1)[1]
-            deletes.setdefault(b, []).append(os.path.join(rel, e))
-            delete_counts[b] = delete_counts.get(b, 0) + per_bucket[b]
-        manifest = {
-            "version": mf["version"] + 1,
-            "token": token,
-            "n_buckets": mf["n_buckets"],
-            "keys": keys,
-            "schema": mf["schema"],
-            "buckets": mf["buckets"],
-            "stats": mf.get("stats", {}),
-            "file_stats": mf.get("file_stats", {}),
-            "row_counts": mf.get("row_counts", {}),
-            "deletes": deletes,
-            "delete_counts": delete_counts,
-            # blooms carry untouched: MoR rows only DISAPPEAR, so a
-            # stale bit is a false positive (wasted read), never a
-            # false negative (wrong prune)
-            "bloom": mf.get("bloom", {}),
-            "blooms": mf.get("blooms", {}),
-            "column_mapping": _mapping(mf),
-            "retired_physical": mf.get("retired_physical", []),
-            "generated": mf.get("generated", {}),
-            "constraints": mf.get("constraints", {}),
-            "txns": mf.get("txns", {}),
-            "committed_at": _dt.datetime.now(
-                _dt.timezone.utc
-            ).isoformat(),
-            "operation": "delete",
-            "op_metrics": {
-                "buckets_written": 0,
-                "buckets_carried": len(mf["buckets"]),
-                "rows_deleted": sum(per_bucket.values()),
-                "files_written": footers.files_written,
-                "bytes_written": footers.bytes_written,
-                "mode": "merge-on-read",
-            },
-        }
-        # a MoR delete touches ONLY the hit buckets: on a sharded table
-        # commit through the delta path (r13) — every other range's
-        # index entry carries verbatim instead of re-serializing all of
-        # them to discover they didn't change. The dirty buckets'
-        # complete rows come from the already-assembled snapshot.
-        slim_prev = _read_slim(table_path, mf["version"])
-        if (
-            slim_prev is not None
-            and slim_prev.get("sidecar_range") == SIDECAR_RANGE
-            and slim_prev.get("agg") is not None
-        ):
-            updates: dict[str, dict] = {k: {} for k in _SIDECAR_KEYS}
-            for e in hit:
-                b = e.split("=", 1)[1]
-                for k in _SIDECAR_KEYS:
-                    if b in manifest[k]:
-                        updates[k][b] = manifest[k][b]
-            _delta_commit(
-                table_path,
-                token,
-                slim_prev,
-                {
-                    k: v
-                    for k, v in manifest.items()
-                    if k not in _SIDECAR_KEYS
+            row = _row(mf, b)
+            row["deletes"] = [*row.get("deletes", []), os.path.join(rel, e)]
+            row["delete_counts"] = row.get("delete_counts", 0) + per_bucket[b]
+            changed[b] = row
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "operation": "delete",
+                "op_metrics": {
+                    "buckets_written": 0,
+                    "buckets_carried": len(mf["buckets"]),
+                    "rows_deleted": sum(per_bucket.values()),
+                    "files_written": footers.files_written,
+                    "bytes_written": footers.bytes_written,
+                    "mode": "merge-on-read",
                 },
-                updates,
-                set(),
-            )
-        else:
-            _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+            },
+            changed,
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def update_where(
@@ -1369,17 +1322,19 @@ def update_where(
     )
 
 
-def _blooms_under_config(
-    blooms: dict, keep: set[str]
-) -> dict:
-    """Filter per-bucket bloom bitmaps down to columns in `keep` —
-    the columns whose bitmaps remain interpretable under the manifest's
-    carried bloom config (see restore_table). Empty buckets drop."""
-    out = {
-        b: {c: h for c, h in cols.items() if c in keep}
-        for b, cols in blooms.items()
-    }
-    return {b: cols for b, cols in out.items() if cols}
+def _bloom_rows(mf: dict, keep) -> dict[str, dict]:
+    """The changed rows of the buckets whose bloom bitmaps lose columns
+    for which `keep(column)` is false (an index dropped, or bitmaps not
+    interpretable under the carried config); buckets left without
+    bitmaps lose the entry."""
+    rows = {}
+    for b, cols in mf.get("blooms", {}).items():
+        kept = {c: h for c, h in cols.items() if keep(c)}
+        if kept != cols:
+            rows[b] = {k: v for k, v in _row(mf, b).items() if k != "blooms"}
+            if kept:
+                rows[b]["blooms"] = kept
+    return rows
 
 
 def restore_table(
@@ -1399,10 +1354,8 @@ def restore_table(
     raises instead of committing a manifest that points at deleted
     data. Current CHECK constraints carry forward unvalidated (same as
     Delta: RESTORE is a data rollback, not a new batch)."""
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         # slim scalars suffice: the restore publishes OLD's per-bucket
         # maps; from CURRENT it carries only constraints / generated /
         # bloom config / tombstones / txns (r12)
@@ -1464,106 +1417,53 @@ def restore_table(
                     "not resolve against the restored schema; drop the "
                     "rule first"
                 ) from exc
-        manifest = {
-            "version": cur["version"] + 1,
-            "token": token,
-            "n_buckets": old["n_buckets"],
-            "keys": old["keys"],
-            "schema": old["schema"],
-            "buckets": old["buckets"],
-            "stats": old.get("stats", {}),
-            "file_stats": old.get("file_stats", {}),
-            "row_counts": old.get("row_counts", {}),
-            "deletes": old.get("deletes", {}),
-            "delete_counts": old.get("delete_counts", {}),
-            # bitmaps describe the restored DATA; the index CONFIG is
-            # table metadata and carries from current like constraints.
-            # But bitmaps are only interpretable under the (m, k) they
-            # were packed with — if the index was dropped and re-added
-            # with different params between the two versions, probing
-            # old bitmaps under the new config computes positions they
-            # never set and wrongly prunes (false NEGATIVES). Keep a
-            # column's bitmaps only where the carried config equals the
-            # restored snapshot's; absent = unprunable = sound (r11).
-            "bloom": cur.get("bloom", {}),
-            "blooms": _blooms_under_config(
-                old.get("blooms", {}),
-                keep={
-                    c
-                    for c, v in cur.get("bloom", {}).items()
-                    if old.get("bloom", {}).get(c) == v
-                },
-            ),
-            # mapping travels WITH the schema it names (both from the
-            # restored snapshot); retired tombstones only ever grow —
-            # union both sides so no physical name is ever reusable
-            "column_mapping": old.get("column_mapping", {}),
-            "retired_physical": sorted(
-                {
-                    *old.get("retired_physical", []),
-                    *cur.get("retired_physical", []),
-                }
-            ),
-            "generated": cur.get("generated", {}),
-            "constraints": cur.get("constraints", {}),
-            # writer-progress state carries from CURRENT, not the
-            # restored snapshot: a restore must not trick a streaming
-            # writer into re-applying already-committed batches
-            "txns": cur.get("txns", {}),
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "restore",
-            "op_metrics": {
-                "restored_version": target,
-                "buckets_written": 0,
-                "buckets_carried": len(old["buckets"]),
-            },
+        # the restored snapshot is the base: buckets, schema, mapping,
+        # stats, row counts and pending deletes all carry by reference.
+        # Bitmaps describe the restored DATA, but the index CONFIG is
+        # table metadata and carries from current like constraints.
+        # Bitmaps are only interpretable under the (m, k) they were
+        # packed with — if the index was dropped and re-added with
+        # different params between the two versions, probing old
+        # bitmaps under the new config computes positions they never
+        # set and wrongly prunes (false NEGATIVES). Keep a column's
+        # bitmaps only where the carried config equals the restored
+        # snapshot's; absent = unprunable = sound (r11).
+        cfg = cur.get("bloom", {})
+        same_cfg = {
+            c for c, v in cfg.items() if old.get("bloom", {}).get(c) == v
         }
-        # O(1) publish CPU on sharded tables (r13): when the carried
-        # bloom CONFIG equals the restored snapshot's, the new
-        # per-bucket maps are the old version's bit-for-bit — carry its
-        # sidecar index, agg scalars, and total_rows VERBATIM instead
-        # of re-serializing every range to rediscover the hashes
-        # (content-addressing already made the WRITES zero; this makes
-        # the driver CPU zero too). A config mismatch filters bitmaps
-        # per-bucket, so that case re-shards through the general path.
-        old_slim = _read_slim(table_path, target)
-        if (
-            old_slim is not None
-            and "sidecars" in old_slim
-            and old_slim.get("sidecar_range") == SIDECAR_RANGE
-            and old_slim.get("agg") is not None
-            and cur.get("bloom", {}) == old.get("bloom", {})
-        ):
-            slim = {
-                k: v
-                for k, v in manifest.items()
-                if k not in _SIDECAR_KEYS
-            }
-            slim["sidecars"] = old_slim["sidecars"]
-            slim["sidecar_range"] = old_slim["sidecar_range"]
-            slim["agg"] = old_slim["agg"]
-            if "total_rows" in old_slim:
-                slim["total_rows"] = old_slim["total_rows"]
-            feats = {"sharded-metadata"}
-            if slim["column_mapping"] or slim["retired_physical"]:
-                feats.add("column-mapping")
-            if old_slim["agg"]["dels"] > 0:
-                feats.add("merge-on-read-deletes")
-            slim["required_reader_features"] = sorted(feats)
-            _publish_manifest(table_path, slim, token, preformed=True)
-        else:
-            _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version_out = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, target),
+            {
+                "version": cur["version"] + 1,
+                "bloom": cfg,
+                # retired tombstones only ever grow — union both sides
+                # so no physical name is ever reusable
+                "retired_physical": sorted(
+                    {
+                        *old.get("retired_physical", []),
+                        *cur.get("retired_physical", []),
+                    }
+                ),
+                "generated": cur.get("generated", {}),
+                "constraints": cur.get("constraints", {}),
+                # writer-progress state carries from CURRENT, not the
+                # restored snapshot: a restore must not trick a
+                # streaming writer into re-applying committed batches
+                "txns": cur.get("txns", {}),
+                "operation": "restore",
+                "op_metrics": {
+                    "restored_version": target,
+                    "buckets_written": 0,
+                    "buckets_carried": len(old["buckets"]),
+                },
+            },
+            _bloom_rows(old, same_cfg.__contains__),
         )
-        record_commit(table_path, token)
-        return version_out
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def manifest_upsert(
@@ -1626,7 +1526,6 @@ def manifest_upsert(
             "replace=True cannot be combined with tombstone_col: a "
             "replace discards every prior row already"
         )
-    token = acquire_table_lease(table_path)
     if tombstone_col is not None:
         live = new_rows.filter(~F.col(tombstone_col)).drop(tombstone_col)
         dead_keys = (
@@ -1640,28 +1539,13 @@ def manifest_upsert(
         changed_keys = new_rows.select(*keys).distinct()
         upserts = new_rows.dropDuplicates(keys)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         ups = upserts
         # slim-scalar read first (zero sidecar parses on sharded
         # tables; the full inline manifest below the threshold):
         # validation, schema union, and mapping logic below are all
         # scalar. Per-bucket maps load ONLY for the touched buckets.
         mf = read_manifest(table_path, buckets=[])
-        # DELTA-commit eligibility (r13): previous version is sharded
-        # at THIS build's range width and carries the incremental agg
-        # scalars. Everything else (inline tables, a width change
-        # across builds, pre-agg manifests, replace=True where nothing
-        # carries anyway) publishes through the general path, which
-        # needs the fully-assembled maps.
-        delta_ok = (
-            not replace
-            and mf is not None
-            and mf.get("sidecar_range") == SIDECAR_RANGE
-            and mf.get("agg") is not None
-        )
-        if mf is not None and "sidecar_range" in mf and not delta_ok:
-            mf = read_manifest(table_path)
         if require_version is not None:
             found = mf["version"] if mf else 0
             if found != require_version:
@@ -1819,10 +1703,8 @@ def manifest_upsert(
         )
         new_b = _with_bucket(ups, keys, buckets_n)
         prev_touched: set[str] = set()
-        if mf is None or replace:
-            merged = new_b
-            carried: dict[str, str] = {}
-        else:
+        merged = new_b
+        if mf is not None and not replace:
             touched = [
                 r.pk_bucket
                 for r in _with_bucket(changed_keys, keys, buckets_n)
@@ -1830,14 +1712,9 @@ def manifest_upsert(
                 .distinct()
                 .collect()
             ]
-            # the per-bucket maps for exactly the touched ranges —
-            # O(change) sidecar parses on the delta path; `mf` already
-            # holds the full maps otherwise
-            src = (
-                read_manifest(table_path, buckets=touched)
-                if delta_ok
-                else mf
-            )
+            # the per-bucket maps of exactly the touched ranges:
+            # O(change) sidecar parses on a sharded table
+            src = read_manifest(table_path, mf["version"], buckets=touched)
             prev_touched = {
                 str(b) for b in touched if str(b) in src["buckets"]
             }
@@ -1845,20 +1722,6 @@ def manifest_upsert(
                 os.path.join(table_path, src["buckets"][b])
                 for b in sorted(prev_touched, key=int)
             ]
-            # on the delta path nothing carries DRIVER-SIDE: untouched
-            # ranges carry at the sidecar-index level inside
-            # _delta_commit, so `carried` (and every carry
-            # comprehension below) stays empty and the manifest dict
-            # holds ONLY the touched buckets' new rows
-            carried = (
-                {}
-                if delta_ok
-                else {
-                    b: d
-                    for b, d in mf["buckets"].items()
-                    if int(b) not in set(touched)
-                }
-            )
             if old_dirs:
                 existing = _apply_deletes(
                     spark,
@@ -1875,17 +1738,13 @@ def manifest_upsert(
                 merged = _with_bucket(kept, keys, buckets_n).unionByName(
                     new_b, allowMissingColumns=True
                 )
-            else:
-                merged = new_b
         # column mapping: everything above is LOGICAL; files hold
         # PHYSICAL names. A NEW column whose name collides with a
         # retired or in-use physical name gets a fresh physical name —
         # re-add after drop must never resurrect the old bytes still
         # sitting in carried segments.
         mapping = dict(_mapping(mf))
-        retired = (
-            list(mf.get("retired_physical", [])) if mf is not None else []
-        )
+        retired = mf.get("retired_physical", []) if mf is not None else []
         if mf is not None and (retired or mapping):
             prev_names = {f.name for f in _data_schema(mf).fields}
             taken = set(retired) | set(mapping.values())
@@ -1906,10 +1765,6 @@ def manifest_upsert(
             _to_physical_frame(merged, mapping).repartition("pk_bucket"),
             seg_abs,
         )
-        buckets = dict(carried)
-        for e in os.listdir(seg_abs):
-            if e.startswith("pk_bucket="):
-                buckets[e.split("=", 1)[1]] = os.path.join(seg, e)
         # the recorded schema is the RUNNING UNION (prior columns keep
         # their position; a narrow batch must not shed columns earlier
         # commits added — their segments still carry the data)
@@ -1920,112 +1775,72 @@ def manifest_upsert(
             schema = StructType(
                 prev.fields + [f for f in schema.fields if f.name not in have]
             )
-        # stats: carried buckets keep their recorded stats by reference;
-        # rewritten buckets get fresh stats and row counts from the new
-        # segment's footers.
-        prev_stats = mf.get("stats", {}) if mf is not None else {}
-        stats = {b: prev_stats[b] for b in carried if b in prev_stats}
-        prev_counts = mf.get("row_counts", {}) if mf is not None else {}
-        row_counts = {b: prev_counts[b] for b in carried if b in prev_counts}
-        # stats key by PHYSICAL name (they describe file contents)
+        # rewritten buckets get fresh stats, row counts and bitmaps
+        # from the new segment (stats key by PHYSICAL name: they
+        # describe file contents); every other bucket carries its row
         footers = _read_footers(
             seg_abs, [mapping.get(c, c) for c in _stat_columns(schema)]
         )
-        stats.update(footers.stats)
-        row_counts.update(footers.row_counts)
-        # per-file stats (written by a clustered optimize) survive on
-        # carried buckets — their dirs are immutable; rewritten buckets
-        # lose clustering and fall back to dir-level stats until the
-        # next optimize re-clusters them
-        prev_fstats = mf.get("file_stats", {}) if mf is not None else {}
-        file_stats = {b: prev_fstats[b] for b in carried if b in prev_fstats}
-        # pending MoR delete files survive ONLY on carried buckets — a
-        # rewritten bucket just materialized its deletes into the new
-        # segment, so its delete files drop out (vacuum sweeps them)
-        prev_del = mf.get("deletes", {}) if mf is not None else {}
-        deletes = {b: prev_del[b] for b in carried if b in prev_del}
-        prev_dcnt = mf.get("delete_counts", {}) if mf is not None else {}
-        delete_counts = {
-            b: prev_dcnt[b] for b in carried if b in prev_dcnt
-        }
-        # bloom bitmaps: carried buckets keep theirs by reference;
-        # rewritten buckets get fresh bitmaps
         bloom_cfg = mf.get("bloom", {}) if mf is not None else {}
-        prev_blooms = mf.get("blooms", {}) if mf is not None else {}
-        blooms = {b: prev_blooms[b] for b in carried if b in prev_blooms}
-        blooms.update(_collect_blooms(spark, seg_abs, bloom_cfg))
-        manifest = {
-            "version": (mf["version"] if mf else 0) + 1,
-            "token": token,
-            "n_buckets": buckets_n,
-            "keys": keys,
-            "schema": schema.json(),
-            "buckets": buckets,
-            "stats": stats,
-            "file_stats": file_stats,
-            "row_counts": row_counts,
-            "deletes": deletes,
-            "delete_counts": delete_counts,
-            "bloom": bloom_cfg,
-            "blooms": blooms,
-            "column_mapping": mapping,
-            "retired_physical": retired,
-            "generated": mf.get("generated", {}) if mf else {},
-            "constraints": mf.get("constraints", {}) if mf else {},
-            "txns": {
-                **(mf.get("txns", {}) if mf else {}),
-                **({txn[0]: txn[1]} if txn else {}),
-            },
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": operation,
-            "op_metrics": {
-                "buckets_written": len(buckets) - len(carried),
-                # the delta path carries untouched buckets implicitly:
-                # their count comes from the previous agg scalars, not
-                # a driver-side map
-                "buckets_carried": (
-                    mf["agg"]["live"] - len(prev_touched)
-                    if delta_ok and mf is not None and not replace
-                    else len(carried)
-                ),
-                "rows_written": sum(footers.row_counts.values()),
-                "files_written": footers.files_written,
-                "bytes_written": footers.bytes_written,
-            },
-        }
-        if delta_ok and mf is not None and not replace:
-            _delta_commit(
-                table_path,
-                token,
-                _read_slim(table_path, mf["version"]),
-                {
-                    k: v
-                    for k, v in manifest.items()
-                    if k not in _SIDECAR_KEYS
-                },
-                {k: manifest[k] for k in _SIDECAR_KEYS},
-                # touched buckets that existed but got no new dir were
-                # fully tombstoned: drop them
-                prev_touched - set(manifest["buckets"]),
-            )
-        else:
-            _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(
-                WriterFencedError,
-                ValueError,
-                TxnAlreadyCommittedError,
-                ConcurrentWriteError,
-            ),
+        written = _segment_rows(
+            table_path,
+            seg,
+            footers,
+            _collect_blooms(spark, seg_abs, bloom_cfg),
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+        if mf is None:
+            base, n_live = None, 0
+        elif replace:
+            # nothing carries: prior rows (and pending MoR deletes)
+            # vanish from the new version
+            base, n_live = _scalars(mf), 0
+        else:
+            base = _read_slim(table_path, mf["version"])
+            # live bucket count: the slim's agg (a manifest predating
+            # agg counts its assembled maps)
+            n_live = (
+                mf.get("agg")
+                or _bucket_agg(read_manifest(table_path, mf["version"]))
+            )["live"]
+        return _commit_manifest(
+            table_path,
+            token,
+            base,
+            {
+                "version": (mf["version"] if mf else 0) + 1,
+                "n_buckets": buckets_n,
+                "keys": keys,
+                "schema": schema.json(),
+                "column_mapping": mapping,
+                "txns": {
+                    **(mf.get("txns", {}) if mf else {}),
+                    **({txn[0]: txn[1]} if txn else {}),
+                },
+                "operation": operation,
+                "op_metrics": {
+                    "buckets_written": len(written),
+                    "buckets_carried": n_live - len(prev_touched),
+                    "rows_written": sum(footers.row_counts.values()),
+                    "files_written": footers.files_written,
+                    "bytes_written": footers.bytes_written,
+                },
+            },
+            written,
+            # touched buckets that existed but got no new dir were fully
+            # tombstoned: drop them
+            prev_touched - set(written),
+        )
+
+    return _under_lease(
+        table_path,
+        attempt,
+        fatal=(
+            WriterFencedError,
+            ValueError,
+            TxnAlreadyCommittedError,
+            ConcurrentWriteError,
+        ),
+    )
 
 
 #: optimistic-concurrency recompute attempts for UPDATE/MERGE before
@@ -2134,12 +1949,9 @@ def _merge_into_once(
     if by_source:
         # unmatched target rows can live in ANY bucket: the read is
         # the whole table (Delta pays the same); the commit still
-        # rewrites only buckets whose rows changed. Below the sharding
-        # threshold the slim read above WAS the full manifest.
-        if "sidecar_range" in mf:
-            mf = read_manifest(table_path)
-        touched = [int(b) for b in mf["buckets"]]
-        snap = mf
+        # rewrites only buckets whose rows changed
+        snap = read_manifest(table_path, mf["version"])
+        touched = [int(b) for b in snap["buckets"]]
     else:
         touched = [
             r.pk_bucket
@@ -2150,11 +1962,7 @@ def _merge_into_once(
             .distinct()
             .collect()
         ]
-        snap = (
-            read_manifest(table_path, buckets=touched)
-            if "sidecar_range" in mf
-            else mf
-        )
+        snap = read_manifest(table_path, mf["version"], buckets=touched)
     dirs = [
         os.path.join(table_path, snap["buckets"][str(b)])
         for b in touched
@@ -2343,43 +2151,6 @@ def _merge_into_once(
     )
 
 
-def _scalar_commit(table_path: str, manifest: dict, token: int) -> None:
-    """Publish a METADATA-ONLY commit (constraints, generated rules,
-    renames — the per-bucket maps are untouched by construction) in
-    O(1) metadata: on a sharded table the new slim carries the
-    PREVIOUS version's sidecar index verbatim — zero sidecar parses,
-    zero per-range serializations, zero file writes — instead of
-    assembling and re-hashing every range the way the general publish
-    path must. `manifest` is `{**mf, scalar changes}` over a
-    gate-checked `read_manifest(..., buckets=[])` read (slim scalars;
-    full assembly on inline tables, which publish through the standard
-    path unchanged — their per-bucket maps really are in `manifest`).
-
-    Feature stamping stays content-derived: the one scalar-derived
-    feature (column-mapping) recomputes from the NEW scalars; content-
-    derived ones (merge-on-read-deletes, or anything a future build
-    stamps) carry from the previous version — their content is
-    byte-identical by construction."""
-    prev = _read_slim(table_path, manifest["version"] - 1)
-    if not prev or "sidecars" not in prev:
-        _publish_manifest(table_path, manifest, token)
-        return
-    slim = {k: v for k, v in manifest.items() if k not in _SIDECAR_KEYS}
-    slim.pop("sidecars", None)
-    slim["sidecars"] = prev["sidecars"]
-    slim["sidecar_range"] = prev["sidecar_range"]
-    feats = {
-        f
-        for f in prev.get("required_reader_features", [])
-        if f != "column-mapping"
-    }
-    if manifest.get("column_mapping") or manifest.get("retired_physical"):
-        feats.add("column-mapping")
-    feats.add("sharded-metadata")
-    slim["required_reader_features"] = sorted(feats)
-    _publish_manifest(table_path, slim, token, preformed=True)
-
-
 def add_table_constraint(
     spark: SparkSession, table_path: str, name: str, expr: str
 ) -> int:
@@ -2390,10 +2161,8 @@ def add_table_constraint(
     every later upsert/merge batch is checked before any byte lands.
     SQL CHECK semantics: only FALSE violates, NULL passes (pair with an
     explicit `col IS NOT NULL` constraint for NOT NULL)."""
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path, buckets=[])  # scalars suffice
         if mf is None:
             raise FileNotFoundError(
@@ -2414,37 +2183,27 @@ def add_table_constraint(
                 f"cannot add constraint {name!r} ({expr}): existing row "
                 f"violates it, e.g. {bad[0].asDict()} ({table_path})"
             )
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "constraints": {**mf.get("constraints", {}), name: expr},
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "add-constraint",
-            "op_metrics": {"constraint": name, "expr": expr},
-        }
-        _scalar_commit(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "constraints": {**mf.get("constraints", {}), name: expr},
+                "operation": "add-constraint",
+                "op_metrics": {"constraint": name, "expr": expr},
+            },
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def drop_table_constraint(
     spark: SparkSession, table_path: str, name: str
 ) -> int:
     """Metadata-only commit removing a recorded constraint."""
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path, buckets=[])  # scalars suffice
         if mf is None:
             raise FileNotFoundError(
@@ -2457,27 +2216,19 @@ def drop_table_constraint(
                 f"(have: {sorted(cons)})"
             )
         dropped = cons.pop(name)
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "constraints": cons,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "drop-constraint",
-            "op_metrics": {"constraint": name, "expr": dropped},
-        }
-        _scalar_commit(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "constraints": cons,
+                "operation": "drop-constraint",
+                "op_metrics": {"constraint": name, "expr": dropped},
+            },
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def add_bloom_index(
@@ -2504,10 +2255,8 @@ def add_bloom_index(
         raise ValueError(f"bloom m must be a positive multiple of 8: {m}")
     if k <= 0:
         raise ValueError(f"bloom k must be positive: {k}")
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path)
         if mf is None:
             raise FileNotFoundError(
@@ -2550,7 +2299,7 @@ def add_bloom_index(
             by_root.setdefault(os.path.dirname(dir_abs), []).append(
                 dir_abs
             )
-        blooms = dict(mf.get("blooms", {}))
+        changed: dict[str, dict] = {}
         # explicit schema, not inference: segments written before the
         # column existed (additive evolution) — or carried buckets
         # whose files only hold a retired physical name — lack pcol
@@ -2581,49 +2330,35 @@ def add_bloom_index(
             for b, cols in _bloom.collect_bloom_stats(
                 seg, {pcol: [m, k]}
             ).items():
-                blooms.setdefault(b, {}).update(cols)
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "bloom": cfg,
-            "blooms": blooms,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "add-bloom-index",
-            "op_metrics": {"column": column, "m": m, "k": k},
-        }
-        _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        from pyspark.errors import AnalysisException
-
-        version = retry_with_backoff(
-            attempt,
-            # AnalysisException is a plan bug, not a transient fault:
-            # retrying the backfill under the lease only delays the
-            # surface (r11)
-            fatal=(
-                WriterFencedError,
-                ValueError,
-                FileNotFoundError,
-                AnalysisException,
-            ),
+                row = _row(mf, b)
+                row["blooms"] = {**row.get("blooms", {}), **cols}
+                changed[b] = row
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "bloom": cfg,
+                "operation": "add-bloom-index",
+                "op_metrics": {"column": column, "m": m, "k": k},
+            },
+            changed,
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    # AnalysisException is a plan bug, not a transient fault: retrying
+    # the backfill under the lease only delays the surface (r11)
+    return _under_lease(
+        table_path, attempt, fatal=(*_FATAL, AnalysisException)
+    )
 
 
 def drop_bloom_index(
     spark: SparkSession, table_path: str, column: str
 ) -> int:
     """Metadata-only commit removing a bloom index and its bitmaps."""
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path)
         if mf is None:
             raise FileNotFoundError(
@@ -2637,33 +2372,24 @@ def drop_bloom_index(
                 f"(have: {sorted(cfg)})"
             )
         dropped = cfg.pop(pcol)
-        blooms = {
-            b: {c: h for c, h in cols.items() if c != pcol}
-            for b, cols in mf.get("blooms", {}).items()
-        }
-        blooms = {b: cols for b, cols in blooms.items() if cols}
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "bloom": cfg,
-            "blooms": blooms,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "drop-bloom-index",
-            "op_metrics": {"column": column, "m": dropped[0], "k": dropped[1]},
-        }
-        _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "bloom": cfg,
+                "operation": "drop-bloom-index",
+                "op_metrics": {
+                    "column": column,
+                    "m": dropped[0],
+                    "k": dropped[1],
+                },
+            },
+            _bloom_rows(mf, lambda c: c != pcol),
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def add_generated_column(
@@ -2678,10 +2404,8 @@ def add_generated_column(
     (same stance as add_table_constraint), so readers never see a
     mixed generated/divergent history. Merge keys refuse (batches must
     supply their keys — bucket planning runs before generation)."""
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path, buckets=[])  # scalars suffice
         if mf is None:
             raise FileNotFoundError(
@@ -2717,27 +2441,19 @@ def add_generated_column(
                 f"({table_path})"
             )
         gen[column] = expr
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "generated": gen,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "add-generated-column",
-            "op_metrics": {"column": column, "expr": expr},
-        }
-        _scalar_commit(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "generated": gen,
+                "operation": "add-generated-column",
+                "op_metrics": {"column": column, "expr": expr},
+            },
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def drop_generated_column(
@@ -2745,10 +2461,8 @@ def drop_generated_column(
 ) -> int:
     """Metadata-only commit removing a generated-column rule (the
     column itself stays, as plain data)."""
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path, buckets=[])  # scalars suffice
         if mf is None:
             raise FileNotFoundError(
@@ -2761,27 +2475,19 @@ def drop_generated_column(
                 f"(have: {sorted(gen)})"
             )
         dropped = gen.pop(column)
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "generated": gen,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "drop-generated-column",
-            "op_metrics": {"column": column, "expr": dropped},
-        }
-        _scalar_commit(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "generated": gen,
+                "operation": "drop-generated-column",
+                "op_metrics": {"column": column, "expr": dropped},
+            },
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def _data_schema(manifest: dict) -> StructType:
@@ -2936,10 +2642,7 @@ def rename_column(
     collisions with an existing logical name."""
     import re as _re
 
-    token = acquire_table_lease(table_path)
-
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path, buckets=[])  # scalars suffice
         if mf is None:
             raise FileNotFoundError(
@@ -2985,28 +2688,20 @@ def rename_column(
                 for f in schema.fields
             ]
         )
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "schema": new_schema.json(),
-            "column_mapping": mapping,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "rename-column",
-            "op_metrics": {"column": old, "to": new, "physical": phys},
-        }
-        _scalar_commit(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "schema": new_schema.json(),
+                "column_mapping": mapping,
+                "operation": "rename-column",
+                "op_metrics": {"column": old, "to": new, "physical": phys},
+            },
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
@@ -3019,10 +2714,7 @@ def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
     keys and constraint-referenced columns refuse."""
     import re as _re
 
-    token = acquire_table_lease(table_path)
-
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path)
         if mf is None:
             raise FileNotFoundError(
@@ -3064,36 +2756,23 @@ def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
         bloom_cfg = {
             c: v for c, v in mf.get("bloom", {}).items() if c != phys
         }
-        blooms = {
-            b: {c: h for c, h in cols.items() if c != phys}
-            for b, cols in mf.get("blooms", {}).items()
-        }
-        blooms = {b: cols for b, cols in blooms.items() if cols}
-        manifest = {
-            **mf,
-            "version": mf["version"] + 1,
-            "token": token,
-            "schema": new_schema.json(),
-            "column_mapping": mapping,
-            "retired_physical": retired,
-            "bloom": bloom_cfg,
-            "blooms": blooms,
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "drop-column",
-            "op_metrics": {"column": col, "physical": phys},
-        }
-        _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "schema": new_schema.json(),
+                "column_mapping": mapping,
+                "retired_physical": retired,
+                "bloom": bloom_cfg,
+                "operation": "drop-column",
+                "op_metrics": {"column": col, "physical": phys},
+            },
+            _bloom_rows(mf, lambda c: c != phys),
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def version_as_of(table_path: str, ts) -> int:
@@ -3404,10 +3083,8 @@ def optimize_table(
     versions keep reading with theirs (n_buckets is per-manifest
     state, never global). Pending MoR deletes materialize into any
     optimize rewrite, whatever the layout."""
-    token = acquire_table_lease(table_path)
 
-    def attempt() -> int:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int:
         mf = read_manifest(table_path)
         if mf is None:
             raise FileNotFoundError(
@@ -3500,60 +3177,44 @@ def optimize_table(
         # purge here (`current` carries only live logical columns), so
         # retired_physical still clears below.
         _write_segment(_to_physical_frame(merged, _mapping(mf)), seg_abs)
-        buckets = {
-            e.split("=", 1)[1]: os.path.join(seg, e)
-            for e in os.listdir(seg_abs)
-            if e.startswith("pk_bucket=")
-        }
         footers = _read_footers(seg_abs, stat_cols)
         # bloom config keys by physical name and the rewrite preserved
         # physical names, so the config carries through unchanged
-        bloom_cfg = dict(mf.get("bloom", {}))
-        manifest = {
-            "version": mf["version"] + 1,
-            "token": token,
-            "n_buckets": new_n,
-            "keys": mf["keys"],
-            "schema": mf["schema"],
-            "buckets": buckets,
-            "stats": footers.stats,
-            "file_stats": footers.file_stats if cluster_by else {},
-            "row_counts": footers.row_counts,
-            "bloom": bloom_cfg,
-            "blooms": _collect_blooms(spark, seg_abs, bloom_cfg),
-            # physical names survive the rewrite (stable field identity,
-            # like Delta REORG keeping field IDs); dropped columns are
-            # physically purged — APPLY (PURGE) folded into optimize —
-            # so their tombstones can retire
-            "column_mapping": _mapping(mf),
-            "retired_physical": [],
-            "generated": mf.get("generated", {}),
-            "constraints": mf.get("constraints", {}),
-            "txns": mf.get("txns", {}),
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "optimize",
-            "op_metrics": {
-                "buckets_written": len(buckets),
-                "buckets_carried": 0,
-                "rows_written": sum(footers.row_counts.values()),
-                "files_written": footers.files_written,
-                "bytes_written": footers.bytes_written,
-                "cluster_by": list(cluster_by) if cluster_by else None,
-                "n_buckets": new_n if n_buckets is not None else None,
-            },
-        }
-        _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+        written = _segment_rows(
+            table_path,
+            seg,
+            footers,
+            _collect_blooms(spark, seg_abs, mf.get("bloom", {})),
+            file_stats=bool(cluster_by),
         )
-        record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+        # a full rewrite: the table's fields carry, none of its buckets
+        return _commit_manifest(
+            table_path,
+            token,
+            _scalars(mf),
+            {
+                "version": mf["version"] + 1,
+                "n_buckets": new_n,
+                # physical names survive the rewrite (stable field
+                # identity, like Delta REORG keeping field IDs); dropped
+                # columns are physically purged — APPLY (PURGE) folded
+                # into optimize — so their tombstones can retire
+                "retired_physical": [],
+                "operation": "optimize",
+                "op_metrics": {
+                    "buckets_written": len(written),
+                    "buckets_carried": 0,
+                    "rows_written": sum(footers.row_counts.values()),
+                    "files_written": footers.files_written,
+                    "bytes_written": footers.bytes_written,
+                    "cluster_by": list(cluster_by) if cluster_by else None,
+                    "n_buckets": new_n if n_buckets is not None else None,
+                },
+            },
+            written,
+        )
+
+    return _under_lease(table_path, attempt)
 
 
 # Bucket-size ceiling for maintenance (see docs/TABLE_FORMAT.md
@@ -3676,10 +3337,7 @@ def compact_buckets(
     per-file (ZORDER) stats drop — re-cluster with `optimize_table`
     when range reads matter, same contract as an upsert rewrite.
     Returns the new version, or None when nothing is over threshold."""
-    token = acquire_table_lease(table_path)
-
-    def attempt() -> int | None:
-        check_fence(table_path, token)
+    def attempt(token: int) -> int | None:
         mf = read_manifest(table_path)
         if mf is None:
             raise FileNotFoundError(
@@ -3728,129 +3386,41 @@ def compact_buckets(
         seg = os.path.join("data", f"seg-{uuid.uuid4().hex[:12]}")
         seg_abs = os.path.join(table_path, seg)
         _write_segment(_to_physical_frame(merged, _mapping(mf)), seg_abs)
-        buckets = {
-            b: d for b, d in mf["buckets"].items() if b not in targets
-        }
-        written = set()
-        for e in os.listdir(seg_abs):
-            if e.startswith("pk_bucket="):
-                b = e.split("=", 1)[1]
-                buckets[b] = os.path.join(seg, e)
-                written.add(b)
-        # an all-deleted target bucket writes nothing and drops out of
-        # the map entirely — same semantics as an upsert rewrite
-        carried = set(mf["buckets"]) - targets
         stat_cols = [
             _physical_name(mf, c)
             for c in _stat_columns(_data_schema(mf))
         ]
         footers = _read_footers(seg_abs, stat_cols)
-        stats = {
-            b: v
-            for b, v in mf.get("stats", {}).items()
-            if b in carried
-        }
-        stats.update(footers.stats)
-        row_counts = {
-            b: v
-            for b, v in mf.get("row_counts", {}).items()
-            if b in carried
-        }
-        row_counts.update(footers.row_counts)
-        blooms = {
-            b: v
-            for b, v in mf.get("blooms", {}).items()
-            if b in carried
-        }
-        blooms.update(
-            _collect_blooms(spark, seg_abs, mf.get("bloom", {}))
+        # compacted buckets get fresh stats/bitmaps and lose clustering;
+        # an all-deleted target writes nothing and drops out of the map
+        # entirely — same semantics as an upsert rewrite
+        written = _segment_rows(
+            table_path,
+            seg,
+            footers,
+            _collect_blooms(spark, seg_abs, mf.get("bloom", {})),
         )
-        manifest = {
-            "version": mf["version"] + 1,
-            "token": token,
-            "n_buckets": mf["n_buckets"],
-            "keys": mf["keys"],
-            "schema": mf["schema"],
-            "buckets": buckets,
-            "stats": stats,
-            # compacted buckets lose clustering; carried keep theirs
-            "file_stats": {
-                b: v
-                for b, v in mf.get("file_stats", {}).items()
-                if b in carried
-            },
-            "row_counts": row_counts,
-            "deletes": {
-                b: v
-                for b, v in mf.get("deletes", {}).items()
-                if b in carried
-            },
-            "delete_counts": {
-                b: v
-                for b, v in mf.get("delete_counts", {}).items()
-                if b in carried
-            },
-            "bloom": mf.get("bloom", {}),
-            "blooms": blooms,
-            "column_mapping": _mapping(mf),
-            "retired_physical": mf.get("retired_physical", []),
-            "generated": mf.get("generated", {}),
-            "constraints": mf.get("constraints", {}),
-            "txns": mf.get("txns", {}),
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "operation": "compact",
-            "op_metrics": {
-                "buckets_written": len(written),
-                "buckets_carried": len(carried),
-                "buckets_targeted": len(targets),
-                "rows_written": sum(footers.row_counts.values()),
-                "files_written": footers.files_written,
-                "bytes_written": footers.bytes_written,
-            },
-        }
-        # the dirty set is exactly `targets` (rewritten or dropped):
-        # on a sharded table publish as a delta so only their ranges
-        # re-serialize (r13) — the small-file DISCOVERY above is
-        # honestly O(n_buckets) dir listings, but the commit need not
-        # be. The per-bucket maps here are full (the general read
-        # above), so the delta just slices the targets out of them.
-        slim_prev = _read_slim(table_path, mf["version"])
-        if (
-            slim_prev is not None
-            and slim_prev.get("sidecar_range") == SIDECAR_RANGE
-            and slim_prev.get("agg") is not None
-        ):
-            updates: dict[str, dict] = {k: {} for k in _SIDECAR_KEYS}
-            for b in targets:
-                for k in _SIDECAR_KEYS:
-                    if b in manifest[k]:
-                        updates[k][b] = manifest[k][b]
-            _delta_commit(
-                table_path,
-                token,
-                slim_prev,
-                {
-                    k: v
-                    for k, v in manifest.items()
-                    if k not in _SIDECAR_KEYS
+        return _commit_manifest(
+            table_path,
+            token,
+            _read_slim(table_path, mf["version"]),
+            {
+                "version": mf["version"] + 1,
+                "operation": "compact",
+                "op_metrics": {
+                    "buckets_written": len(written),
+                    "buckets_carried": len(set(mf["buckets"]) - targets),
+                    "buckets_targeted": len(targets),
+                    "rows_written": sum(footers.row_counts.values()),
+                    "files_written": footers.files_written,
+                    "bytes_written": footers.bytes_written,
                 },
-                updates,
-                targets - written,
-            )
-        else:
-            _publish_manifest(table_path, manifest, token)
-        return manifest["version"]
-
-    try:
-        version = retry_with_backoff(
-            attempt,
-            fatal=(WriterFencedError, ValueError, FileNotFoundError),
+            },
+            written,
+            targets - set(written),
         )
-        if version is not None:
-            record_commit(table_path, token)
-        return version
-    finally:
-        release_table_lease(table_path, token)
+
+    return _under_lease(table_path, attempt)
 
 
 def maintain_table(
@@ -3894,7 +3464,9 @@ def maintain_table(
         raise FileNotFoundError(f"no committed manifest under {table_path}")
     if cluster_by is None:
         for v in reversed(list_versions(table_path)):
-            past = read_manifest(table_path, v) or {}
+            # operation / op_metrics are slim scalars: the walk parses
+            # zero sidecars however many versions it passes
+            past = read_manifest(table_path, v, buckets=[]) or {}
             if past.get("operation") == "optimize":
                 cluster_by = past.get("op_metrics", {}).get("cluster_by")
                 break
@@ -4194,97 +3766,61 @@ def clone_table(
     def absolutize(d: str) -> str:
         return d if os.path.isabs(d) else os.path.join(src_abs, d)
 
+    refs = [absolutize(d) for d in mf["buckets"].values()] + [
+        absolutize(d) for lst in mf.get("deletes", {}).values() for d in lst
+    ]
+    # the base is the source snapshot with its dir refs made absolute.
+    # Zero-copy METADATA too (r12): a sharded source's sidecar FILES
+    # carry by absolute reference — each entry keeps its (path, hash)
+    # and gains `base`, the table its relative dir refs resolve against
+    # (_merge_sidecar) — so the clone writes ZERO sidecars instead of
+    # re-sharding ~12.5k ranges at the sizing rule, and its own commits
+    # rewrite only the ranges they touch. The clone pin below keeps the
+    # source's vacuum from sweeping these files, exactly as it does for
+    # the data segments they describe.
+    base = _read_slim(src_abs, mf["version"])
+    if "sidecars" in base:
+        base["sidecars"] = {
+            lo: {
+                "path": absolutize(ent["path"]),
+                "hash": ent["hash"],
+                # a chained clone keeps the ORIGINAL owner: the file's
+                # relative refs are relative to it
+                "base": ent.get("base", src_abs),
+            }
+            for lo, ent in base["sidecars"].items()
+        }
+    else:
+        base["buckets"] = {
+            b: absolutize(d) for b, d in base["buckets"].items()
+        }
+        base["deletes"] = {
+            b: [absolutize(d) for d in lst]
+            for b, lst in base.get("deletes", {}).items()
+        }
     os.makedirs(dst_path, exist_ok=True)  # lease dirs are siblings
     token = acquire_table_lease(dst_path)
     try:
-        manifest = {
-            "version": 1,
-            "token": token,
-            "n_buckets": mf["n_buckets"],
-            "keys": mf["keys"],
-            "schema": mf["schema"],
-            "buckets": {
-                b: absolutize(d) for b, d in mf["buckets"].items()
+        _commit_manifest(
+            dst_path,
+            token,
+            base,
+            {
+                "version": 1,
+                # a fresh writer lineage: the source's idempotent-writer
+                # ledger must not make the clone reject first epochs
+                "txns": {},
+                "operation": "clone",
+                "clone_of": {"path": src_abs, "version": mf["version"]},
+                "op_metrics": {
+                    "buckets_written": 0,
+                    "buckets_carried": len(mf["buckets"]),
+                    "rows_written": 0,
+                    "files_written": 0,
+                    "bytes_written": 0,
+                },
             },
-            "stats": mf.get("stats", {}),
-            "file_stats": mf.get("file_stats", {}),
-            "row_counts": mf.get("row_counts", {}),
-            "deletes": {
-                b: [absolutize(d) for d in lst]
-                for b, lst in mf.get("deletes", {}).items()
-            },
-            "delete_counts": mf.get("delete_counts", {}),
-            "bloom": mf.get("bloom", {}),
-            "blooms": mf.get("blooms", {}),
-            "column_mapping": _mapping(mf),
-            "retired_physical": mf.get("retired_physical", []),
-            "generated": mf.get("generated", {}),
-            "constraints": mf.get("constraints", {}),
-            # a fresh writer lineage: the source's idempotent-writer
-            # ledger must not make the clone reject first epochs
-            "txns": {},
-            "committed_at": _dt.datetime.now(
-                _dt.timezone.utc
-            ).isoformat(),
-            "operation": "clone",
-            "clone_of": {"path": src_abs, "version": mf["version"]},
-            "op_metrics": {
-                "buckets_written": 0,
-                "buckets_carried": len(mf["buckets"]),
-                "rows_written": 0,
-                "files_written": 0,
-                "bytes_written": 0,
-            },
-        }
-        # zero-copy METADATA too (r12, VERDICT r11 directive 4): a
-        # sharded source's clone carries the source's sidecar FILES by
-        # absolute reference — each entry keeps its (path, hash) and
-        # gains `base` (the table its relative dir refs resolve
-        # against), so the clone writes ZERO sidecars instead of
-        # re-sharding ~12.5k ranges at the sizing rule. Readers
-        # absolutize through `base` (_merge_sidecar) — byte-for-byte
-        # what the eager absolutize published before; the clone's own
-        # commits re-shard only the ranges they touch
-        # (_shard_metadata's resolved-content carry). The clone pin
-        # below keeps the source's vacuum from sweeping these files,
-        # exactly as it does for the data segments they describe.
-        slim_src = _read_slim(src_abs, mf["version"]) or {}
-        carried_sidecars: dict[str, dict] = {}
-        if slim_src.get("sidecars"):
-            slim = {
-                k: v
-                for k, v in manifest.items()
-                if k not in _SIDECAR_KEYS
-            }
-            slim["sidecars"] = {
-                lo: {
-                    "path": ent["path"]
-                    if os.path.isabs(ent["path"])
-                    else os.path.join(src_abs, ent["path"]),
-                    "hash": ent["hash"],
-                    # a chained clone keeps the ORIGINAL owner: the
-                    # file's relative refs are relative to it
-                    "base": ent.get("base", src_abs),
-                }
-                for lo, ent in slim_src["sidecars"].items()
-            }
-            slim["sidecar_range"] = slim_src["sidecar_range"]
-            # same content semantics as the source snapshot: its
-            # content-derived feature gate carries verbatim
-            slim["required_reader_features"] = sorted(
-                set(slim_src.get("required_reader_features", []))
-                | {"sharded-metadata"}
-            )
-            if "total_rows" in slim_src:
-                slim["total_rows"] = slim_src["total_rows"]
-            # same content, same whole-table scalars: carrying agg
-            # keeps the clone's own first write delta-eligible (r13)
-            if "agg" in slim_src:
-                slim["agg"] = slim_src["agg"]
-            carried_sidecars = slim["sidecars"]
-            _publish_manifest(dst_path, slim, token, preformed=True)
-        else:
-            _publish_manifest(dst_path, manifest, token)
+        )
         record_commit(dst_path, token)
     finally:
         release_table_lease(dst_path, token)
@@ -4297,9 +3833,6 @@ def clone_table(
     # under the intermediate source would let the grandparent's vacuum
     # sweep segments this clone still reads once the intermediate
     # materializes itself (VERDICT r9 #2 / ADVICE r9).
-    refs = list(manifest["buckets"].values()) + [
-        d for lst in manifest["deletes"].values() for d in lst
-    ]
     owners: set[str] = set()
     dst_abs = os.path.abspath(dst_path)
     for ref in refs:
@@ -4315,13 +3848,13 @@ def clone_table(
     # still reads (its clone_meta guard only honors REGISTERED clones).
     # Pin the table holding each carried file's `_meta/` dir, and its
     # `base` (whose data dirs the file's relative refs resolve into).
-    for ent in carried_sidecars.values():
+    for ent in base.get("sidecars", {}).values():
         root = _owning_meta_root(ent["path"])
         if root is not None and root != dst_abs:
             owners.add(root)
-        base = os.path.abspath(ent["base"])
-        if base != dst_abs:
-            owners.add(base)
+        owner = os.path.abspath(ent["base"])
+        if owner != dst_abs:
+            owners.add(owner)
     for owner in owners or {src_abs}:
         d = os.path.join(owner, "_clones")
         os.makedirs(d, exist_ok=True)
@@ -5240,11 +4773,11 @@ def commit_delta_metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an oracle-checked query, over the SAME cached fixture as
     `sidecar_metadata_query` (identical build: v1 = docs %3==0 into
     256 buckets → 4 range sidecars; v2 = a 1-key upsert doubling doc
-    42's n_chars). What THIS probe pins is the delta publish path's
+    42's n_chars). What THIS probe pins is the commit's O(change)
     bookkeeping: 3 of the 4 v2 index entries are the previous
     version's entry dicts VERBATIM (`carried_verbatim` — carried
-    without a parse or serialization, the O(change) driver-CPU
-    contract `_delta_commit` implements), and the INCREMENTALLY
+    without a parse or serialization, the driver-CPU contract
+    `_commit_manifest` implements), and the INCREMENTALLY
     maintained whole-table scalars — `agg` and `total_rows` — equal a
     from-scratch `_bucket_agg` recompute over the assembled manifest
     (`agg_drift` pinned 0). The aggregate reads the assembled table
