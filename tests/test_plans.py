@@ -462,3 +462,25 @@ def test_pii_scrub_single_rollup_exchange(spark):
     df = _q(spark, "pii_scrub")
     assert plans.count_exchanges(df) <= 1
     assert not plans.uses_python_row_udf(df)
+
+
+def test_join_kit_null_safe_join_compares_two_attributes(spark, monkeypatch):
+    """The null-safe leg joins `k` to a dim derived from the same frame.
+    Its condition must name two attributes: `k <=> k` over one attribute
+    is trivially true, a cross join that only the self-join dedup hides."""
+    import re
+
+    cls = type(spark.range(1))
+    real = cls.join
+    conds = []
+
+    def join(self, other, on=None, how=None):
+        if "<=>" in str(on):
+            conds.append(on)
+        return real(self, other, on, how)
+
+    monkeypatch.setattr(cls, "join", join)
+    _q(spark, "join_kit").collect()
+    assert len(conds) == 1
+    ids = re.findall(r"\w+#(\d+)", conds[0]._jc.node().toString())
+    assert len(ids) == 2 and ids[0] != ids[1], conds[0]._jc.node().toString()

@@ -260,6 +260,48 @@ def test_metrics_sink_emits_per_epoch_counts(spark, tmp_path):
     assert all(r.emitted_ts is not None for r in m)
 
 
+def test_each_epoch_runs_one_routing_job(spark, tmp_path, monkeypatch):
+    """Routing an epoch costs one Spark job (the per-route counts that
+    gate both sinks), for the data epoch and the empty trailing one."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = []  # the stream runs its jobs, foreachBatch's too, in one group
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(group[0]))
+
+    sunk = []
+    monkeypatch.setattr(
+        dlq_sink, "append_dlq", lambda _s, _p, df: sunk.append("dlq")
+    )
+    monkeypatch.setattr(
+        manifest, "manifest_upsert", lambda *_a, **_k: sunk.append("upsert")
+    )
+    marks = []
+    route = pipeline.route_envelope
+
+    def marked(batch, **kw):
+        group[:] = [sc.getLocalProperty("spark.jobGroup.id")]
+        marks.append(jobs())
+        return route(batch, **kw)
+
+    monkeypatch.setattr(pipeline, "route_envelope", marked)
+    staging = tmp_path / "staging"
+    rows = [("t-1", 1, NOW, 1), ("t-2", 2, NOW, 99), ("t-3", 3, NOW, 1)]
+    _tasks(spark, rows).coalesce(1).write.parquet(str(staging))
+    q = pipeline.run_pipeline_available_now(
+        spark, str(staging), str(tmp_path / "out"), str(tmp_path / "dlq"),
+        str(tmp_path / "ckpt"), now=F.lit(NOW),
+    )
+    q.awaitTermination(120)
+    marks.append(jobs())
+    assert group == [str(q.runId)]
+    assert sunk == ["dlq", "upsert"]
+    assert [p["numInputRows"] for p in q.recentProgress] == [3, 0]
+    assert [b - a for a, b in zip(marks, marks[1:])] == [1, 1]
+
+
 def test_windowed_agg_drops_late_rows_across_runs(spark, tmp_path):
     """Two AvailableNow runs sharing a checkpoint: run 1 advances the
     watermark; in run 2 a row older than the watermark (whose window was

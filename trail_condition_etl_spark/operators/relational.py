@@ -1212,9 +1212,12 @@ def join_kit(customer: DataFrame, orders: DataFrame) -> DataFrame:
     keyed = orders.withColumn(
         "k", F.nullif((F.col("o_orderkey") % 5).cast("long"), F.lit(0))
     )
-    dim = keyed.select("k").distinct()
+    # the dim key gets its own name: `keyed["k"]` and a `dim["k"]` derived
+    # from it are one attribute, so `k <=> k` would be trivially true and
+    # only the self-join dedup would keep it from a cross join
+    dim = keyed.select(F.col("k").alias("dim_k")).distinct()
     null_safe = keyed.join(
-        F.broadcast(dim), keyed["k"].eqNullSafe(dim["k"]), "inner"
+        F.broadcast(dim), keyed["k"].eqNullSafe(dim["dim_k"]), "inner"
     ).agg(F.count(F.lit(1)).alias("n_rows"))
     return (
         with_orders.select(F.lit("semi_with_orders").alias("join_type"), "n_rows")

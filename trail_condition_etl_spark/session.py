@@ -11,15 +11,36 @@ The engine is designed for a large multi-executor cluster but is tested on
 * Session timezone pinned to UTC — the reference enforces tz-aware UTC
   timestamps at every boundary (fetch-weather/src/api.py:116-117); we pin
   the session so date_trunc/date arithmetic is engine-independent.
+* ``spark.sql.codegen.cache.maxEntries`` sized to the engine's working
+  set (``CODEGEN_CACHE_ENTRIES``) — the engine runs the same plan shapes
+  round after round, and Spark's default cache of 100 compiled classes
+  is smaller than one round needs: each operation would evict the classes
+  the next one needs, and Janino would recompile them (and the JVM JIT
+  them again) every time. The setting is a static SQL conf, read once
+  per JVM, so it is set where the session is built;
+  ``ensure_engine_conf`` can only warn when a caller's session was built
+  with a smaller cache.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+# Compiled-class working sets, counted as Janino compilations under a
+# cache that evicts nothing (perfbench seeds 41-44, local[2]):
+#   etl_cycle  ~130 per round; warm-up, set-ups and 4 rounds 152-154
+#   query_mix  ~134 per pass; warm-up, set-ups and 4 passes 134-138
+#   one pass over all 205 registered queries at sf0.001: 2520
+# 2000 leaves >10x headroom over one operation's set. A whole registry
+# sweep does not fit, and need not: nothing repeats it back to back.
+CODEGEN_CACHE_ENTRIES = 2000
+_CACHE_WARNED = "trail_condition_etl_spark.codegenCacheWarned"
 
 
 def get_spark(app_name: str = "trail-condition-etl-spark") -> SparkSession:
@@ -58,6 +79,7 @@ def get_spark(app_name: str = "trail-condition-etl-spark") -> SparkSession:
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()
 
@@ -67,7 +89,19 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
 
     The driver harness passes us its own SparkSession; timezone and AQE are
     runtime-mutable, so we pin them here rather than trusting the caller.
+    The codegen cache size is static (read once per JVM), so a session
+    built with a smaller cache gets one warning instead; the session's
+    own conf records that it was warned.
     """
+    cache = int(spark.conf.get(CODEGEN_CACHE_CONF))
+    if cache < CODEGEN_CACHE_ENTRIES and not spark.conf.get(_CACHE_WARNED, ""):
+        warnings.warn(
+            f"{CODEGEN_CACHE_CONF}={cache} is below the engine's "
+            f"{CODEGEN_CACHE_ENTRIES}: repeated operations will recompile "
+            "their generated code. It is a static conf and must be set "
+            "when the session is built.",
+        )
+        spark.conf.set(_CACHE_WARNED, "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")

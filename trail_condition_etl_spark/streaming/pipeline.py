@@ -101,16 +101,17 @@ def _admit_within_quota(
     good: DataFrame,
     keys: list[str],
     limiter: DailyRateLimiter,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Split a micro-batch's processable rows into (admitted, throttled)
-    under the day's remaining quota. The admitted prefix is the k
-    smallest rows by key — `orderBy().limit()` compiles to a distributed
-    TakeOrdered (no global sort), and the overflow anti-join broadcasts
-    only the admitted keys (bounded by the daily quota, e.g. 500)."""
-    n = good.count()
+    n: int,
+) -> tuple[DataFrame, DataFrame | None, int]:
+    """Split a micro-batch's `n` processable rows into (admitted,
+    throttled, admitted row count) under the day's remaining quota. The
+    admitted prefix is the k smallest rows by key — `orderBy().limit()`
+    compiles to a distributed TakeOrdered (no global sort), and the
+    overflow anti-join broadcasts only the admitted keys (bounded by the
+    daily quota, e.g. 500)."""
     granted = limiter.acquire(n)
     if granted >= n:
-        return good, None
+        return good, None, n
     admitted = good.orderBy(*keys).limit(granted)
     throttled = (
         good.join(F.broadcast(admitted.select(*keys)), keys, "left_anti")
@@ -128,7 +129,7 @@ def _admit_within_quota(
             ).alias("error"),
         )
     )
-    return admitted, throttled
+    return admitted, throttled, granted
 
 
 def run_pipeline_available_now(
@@ -204,6 +205,11 @@ def run_pipeline_from_stream(
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
         routed = route_envelope(batch, now=now).persist()
         try:
+            # one job counts every route; the counts gate both sinks, so
+            # an empty epoch runs no other job
+            counts = dict(routed.groupBy("route").count().collect())
+            n_good = counts.pop("process", 0)
+            n_rejects = sum(counts.values())
             rejects = routed.filter(F.col("route") != "process").select(
                 "task_id",
                 "city_id",
@@ -222,7 +228,7 @@ def run_pipeline_from_stream(
             # downstream dependency is down, instead of hammering it
             # every micro-batch; retries inside upsert absorb blips.
             guard = breaker.call if breaker is not None else (lambda fn: fn())
-            if not rejects.isEmpty():
+            if n_rejects:
                 guard(
                     lambda: dlq_sink.append_dlq(
                         batch.sparkSession, dlq_path, rejects
@@ -237,7 +243,9 @@ def run_pipeline_from_stream(
             # to the DLQ retryable so the redrive path re-stages them
             # after the quota resets.
             if rate_limiter is not None:
-                good, throttled = _admit_within_quota(good, keys, rate_limiter)
+                good, throttled, n_good = _admit_within_quota(
+                    good, keys, rate_limiter, n_good
+                )
                 if throttled is not None and not throttled.isEmpty():
                     guard(
                         lambda: dlq_sink.append_dlq(
@@ -246,7 +254,10 @@ def run_pipeline_from_stream(
                     )
             if transform is not None:
                 good = transform(good)
-            if not good.isEmpty():
+                # a transform may drop rows
+                if n_good and good.isEmpty():
+                    n_good = 0
+            if n_good:
                 guard(
                     lambda: manifest_sink.manifest_upsert(
                         batch.sparkSession, out_table, good, keys
@@ -259,9 +270,6 @@ def run_pipeline_from_stream(
                 # Written LAST: a metrics row implies its epoch's sink
                 # writes committed, so run-over-run deltas are trustworthy.
                 n_good = good.count()
-                n_rejects = routed.filter(
-                    F.col("route") != "process"
-                ).count()
                 batch.sparkSession.createDataFrame(
                     [(int(epoch_id), n_good, n_rejects)],
                     "epoch_id long, n_processed long, n_rejected long",
