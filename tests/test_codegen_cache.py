@@ -58,3 +58,31 @@ def test_small_codegen_cache_warns_once(spark, monkeypatch):
     msg = str(caught[0].message)
     assert session.CODEGEN_CACHE_CONF in msg
     assert "session is built" in msg
+
+
+def test_second_dlq_append_compiles_nothing(spark, tmp_path):
+    """`dlq_ts` is data, not a literal inlined into the generated code, so
+    a repeated append of the same schema reuses its classes; each append
+    still stamps its own wall-clock time."""
+    import datetime as dt
+
+    from trail_condition_etl_spark.sinks import dlq
+
+    rejects = spark.createDataFrame(
+        [(1, "{}", ("CircuitBreakerError", "open", None, True))],
+        "city_id INT, raw_payload STRING, "
+        "error STRUCT<exception_type STRING, message STRING, "
+        "traceback STRING, safe_to_retry BOOLEAN>",
+    )
+    path = str(tmp_path / "dlq")
+    compiled, windows = [], []
+    for _ in range(2):
+        before, lo = _compiles(spark), dt.datetime.now()
+        dlq.append_dlq(spark, path, rejects)
+        compiled.append(_compiles(spark) - before)
+        windows.append((lo, dt.datetime.now()))
+    assert compiled[1] == 0, f"classes compiled per append: {compiled}"
+    stamps = sorted(r.dlq_ts for r in spark.read.parquet(path).collect())
+    assert stamps[0] < stamps[1]
+    for (lo, hi), ts in zip(windows, stamps):
+        assert lo <= ts <= hi

@@ -914,6 +914,8 @@ def test_describe_history_and_metadata_count(spark, tmp_path, capsys):
         ln for ln in capsys.readouterr().out.splitlines() if "version" in ln
     )
     assert "files_written" in header and "bytes_written" in header
+    assert "n_buckets" in header
+    assert [hist[v].n_buckets for v in (1, 2, 3)] == [4, 4, 4]
     # metadata-only count agrees with the scan, at every version
     for v, n in ((1, 2), (2, 3), (3, 3)):
         assert mf.manifest_row_count(table, v) == n
@@ -1303,6 +1305,27 @@ def test_lookup_plans_buckets_without_a_spark_job(spark, tmp_path):
         assert sorted(
             (r.k, r.v) for r in got.collect()
         ) == sorted((keyfn(i), i * 2) for i in (0, 7, 131, 299))
+
+
+def test_lookup_keys_are_a_jvm_local_relation(spark, tmp_path):
+    """The requested keys plan as a LocalTableScan, not as an ExistingRDD
+    scan of a PythonRDD that would run a Python-worker stage per
+    execution."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    table = str(tmp_path / "t")
+    mf.manifest_upsert(spark, table, rows, ["k"], n_buckets=2)
+    got = mf.read_manifest_lookup(spark, table, [{"k": 2}, {"k": None}])
+    assert [(r.k, r.v) for r in got.collect()] == [(2, "b")]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    keys = mf._key_frame(
+        spark, [(2,), (None,)], StructType([StructField("k", IntegerType(), False)])
+    )
+    lineage = keys._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert sorted(r.k for r in keys.collect() if r.k is not None) == [2]
 
 
 def test_lookup_rejects_mistyped_key_values(spark, tmp_path):

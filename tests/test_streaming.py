@@ -302,6 +302,143 @@ def test_each_epoch_runs_one_routing_job(spark, tmp_path, monkeypatch):
     assert [b - a for a, b in zip(marks, marks[1:])] == [1, 1]
 
 
+
+# ---------------------------------------------------------------------------
+# sink sizing: the epoch that creates the table picks its bucket layout
+# ---------------------------------------------------------------------------
+
+
+def _drain_files(spark, tmp_path, out, files):
+    """Stage each list of task ids as one file and drain them, one
+    epoch per file, into the manifest table at `out`."""
+    staging = tmp_path / "staging"
+    for ids in files:
+        _tasks(spark, [(t, i, NOW, 1) for i, t in enumerate(ids)]).coalesce(
+            1
+        ).write.mode("append").parquet(str(staging))
+    q = pipeline.run_pipeline_available_now(
+        spark, str(staging), out, str(tmp_path / "dlq"),
+        str(tmp_path / "ckpt"), now=F.lit(NOW), max_files_per_trigger=1,
+    )
+    q.awaitTermination(120)
+    return q
+
+
+def _task_ids(spark, out):
+    return sorted(
+        r.task_id for r in manifest.read_manifest_table(spark, out).collect()
+    )
+
+
+def _bucket_bytes(out):
+    import os
+
+    m = manifest.read_manifest(out)
+    return sum(
+        os.path.getsize(os.path.join(out, d, f))
+        for d in m["buckets"].values()
+        for f in os.listdir(os.path.join(out, d))
+        if f.endswith(".parquet")
+    )
+
+
+def test_small_first_epoch_creates_a_one_bucket_sink(spark, tmp_path):
+    out = str(tmp_path / "tasks")
+    files = [[f"a-{i:02d}" for i in range(20)], [f"b-{i:02d}" for i in range(20)]]
+    _drain_files(spark, tmp_path, out, files)
+    first, last = manifest.list_versions(out)
+    assert manifest.read_manifest(out, first)["n_buckets"] == 1
+    m = manifest.read_manifest(out, last)
+    # the second epoch rewrites the one bucket: one data file
+    assert m["n_buckets"] == 1
+    assert m["op_metrics"]["files_written"] == 1
+    assert _task_ids(spark, out) == sorted(files[0] + files[1])
+
+
+def test_existing_sink_keeps_its_layout(spark, tmp_path):
+    out = str(tmp_path / "tasks")
+    manifest.manifest_upsert(
+        spark, out, _tasks(spark, [("t-0", 0, NOW, 1)]), ["task_id"],
+        n_buckets=64,
+    )
+    _drain_files(spark, tmp_path, out, [[f"t-{i}" for i in range(1, 21)]])
+    assert manifest.read_manifest(out)["n_buckets"] == 64
+    assert _task_ids(spark, out) == sorted(f"t-{i}" for i in range(21))
+
+
+def test_large_first_epoch_gets_a_parallel_layout(spark, tmp_path, monkeypatch):
+    # 20 rows of ~36 B (default widths) against a 200 B ceiling
+    monkeypatch.setattr(manifest, "MAX_BUCKET_BYTES", 200)
+    out = str(tmp_path / "tasks")
+    ids = [f"t-{i:02d}" for i in range(20)]
+    _drain_files(spark, tmp_path, out, [ids])
+    assert manifest.read_manifest(out)["n_buckets"] > 1
+    assert _task_ids(spark, out) == ids
+
+
+def test_maintenance_grows_an_oversized_sink_by_the_shared_rule(spark, tmp_path):
+    out = str(tmp_path / "tasks")
+    _drain_files(spark, tmp_path, out, [[f"t-{i:03d}" for i in range(200)]])
+    assert manifest.read_manifest(out)["n_buckets"] == 1
+    total = _bucket_bytes(out)
+    cap = total // 2  # the one bucket is over the ceiling
+    assert manifest.maintain_table(spark, out, max_bucket_bytes=cap) is not None
+    n = manifest.read_manifest(out)["n_buckets"]
+    assert n == manifest.sized_buckets(total, cap) > 1
+    hist = manifest.describe_history(spark, out).orderBy("version").collect()
+    assert [r.n_buckets for r in hist] == [1, n]
+    assert _task_ids(spark, out) == [f"t-{i:03d}" for i in range(200)]
+
+
+def test_replayed_first_epoch_lands_each_task_once(spark, tmp_path, monkeypatch):
+    """A crash after the epoch's upsert and before its checkpoint commit:
+    the restart replays the epoch into the table it created, which keeps
+    its layout, and each task lands once."""
+    import pytest
+
+    out = str(tmp_path / "tasks")
+    ids = [f"t-{i:02d}" for i in range(20)]
+    real = manifest.manifest_upsert
+
+    def upsert_then_crash(*args, **kwargs):
+        real(*args, **kwargs)
+        raise RuntimeError("crash before the checkpoint commit")
+
+    monkeypatch.setattr(manifest, "manifest_upsert", upsert_then_crash)
+    with pytest.raises(Exception, match="crash before the checkpoint"):
+        _drain_files(spark, tmp_path, out, [ids])
+    monkeypatch.setattr(manifest, "manifest_upsert", real)
+    assert manifest.list_versions(out) == [1]
+    q = pipeline.run_pipeline_available_now(
+        spark, str(tmp_path / "staging"), out, str(tmp_path / "dlq"),
+        str(tmp_path / "ckpt"), now=F.lit(NOW), max_files_per_trigger=1,
+    )
+    q.awaitTermination(120)
+    assert manifest.list_versions(out) == [1, 2]  # the epoch ran again
+    assert manifest.read_manifest(out)["n_buckets"] == 1
+    assert _task_ids(spark, out) == ids
+
+
+def test_windowed_update_sink_is_sized_to_its_first_epoch(spark, tmp_path):
+    from trail_condition_etl_spark.streaming import windowed
+
+    staging = tmp_path / "staging"
+    table = str(tmp_path / "table")
+    rows = [
+        (i, dt.datetime(2024, 1, 1 + i % 3, 12), "click", 1.0)
+        for i in range(9)
+    ]
+    spark.createDataFrame(
+        rows, "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
+    ).write.parquet(str(staging))
+    q = windowed.run_windowed_update_available_now(
+        spark, str(staging), table, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+    assert manifest.read_manifest(table)["n_buckets"] == 1
+    got = manifest.read_manifest_table(spark, table).collect()
+    assert sorted(r.n_events for r in got) == [3, 3, 3]
+
 def test_windowed_agg_drops_late_rows_across_runs(spark, tmp_path):
     """Two AvailableNow runs sharing a checkpoint: run 1 advances the
     watermark; in run 2 a row older than the watermark (whose window was

@@ -4,8 +4,10 @@ retention trimming (S6/S14, R4)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import shutil
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,10 +19,25 @@ def append_dlq(
 ) -> None:
     """S14: append failed rows (payload + ExceptionDetails struct) to the
     quarantine path. Append-only: DLQ entries are an audit log, a redrive
-    job filters `error.safe_to_retry` and re-submits."""
-    rejects.withColumn("dlq_ts", F.current_timestamp()).write.mode(
-        "append"
-    ).parquet(dlq_path)
+    job filters `error.safe_to_retry` and re-submits.
+
+    `dlq_ts` is the append's wall-clock time, joined in as DATA from a
+    one-row Arrow relation (a LocalTableScan). `F.current_timestamp()`
+    would be folded into a literal that codegen inlines into the
+    stage, so every append would compile its classes anew."""
+    stamp = spark.createDataFrame(
+        pa.table(
+            {
+                "dlq_ts": pa.array(
+                    [dt.datetime.now(dt.timezone.utc)],
+                    pa.timestamp("us", tz="UTC"),
+                )
+            }
+        )
+    )
+    rejects.drop("dlq_ts").crossJoin(stamp).write.mode("append").parquet(
+        dlq_path
+    )
 
 
 def redrive_candidates(spark: SparkSession, dlq_path: str) -> DataFrame:

@@ -2864,6 +2864,27 @@ def read_manifest_table(
     return _apply_deletes(spark, df, table_path, mf, [b for b, _ in items])
 
 
+def _key_frame(
+    spark: SparkSession, rows: list[tuple], key_schema: StructType
+) -> DataFrame:
+    """The lookup's requested keys (int/long/string, already checked by
+    `keyhash.check_value`) as a frame built from an Arrow table. It
+    plans as a LocalTableScan and runs in the JVM alone, where
+    `createDataFrame(rows)` would be an ExistingRDD scan of a PythonRDD
+    that runs a Python-worker stage in every execution of the lookup."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(key_schema)
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(key_schema.names, r)) for r in rows],
+            # every key may be requested as null (which matches nothing)
+            schema=pa.schema([f.with_nullable(True) for f in schema]),
+        )
+    )
+
+
 def read_manifest_lookup(
     spark: SparkSession,
     table_path: str,
@@ -2915,7 +2936,7 @@ def read_manifest_lookup(
         for r in rows:
             for v, t, k in zip(r, type_names, keys):
                 check_value(v, t, k)
-        lookup = spark.createDataFrame(rows, key_schema)
+        lookup = _key_frame(spark, rows, key_schema)
         bucket_ids = sorted(
             {bucket_of(r, type_names, mf["n_buckets"]) for r in rows}
         )
@@ -3010,10 +3031,11 @@ def manifest_row_count(
 def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
     """Commit log as a DataFrame (Delta's DESCRIBE HISTORY): one row per
     still-retained manifest version — operation, commit timestamp,
-    buckets written/carried, rows/data files/bytes written, table row
-    count at that version. Vacuumed-away versions drop out;
-    pre-metadata manifests surface with null operation/timestamp rather
-    than being hidden."""
+    bucket layout (`n_buckets`, so a sized stream sink and every later
+    rescale show), buckets written/carried, rows/data files/bytes
+    written, table row count at that version. Vacuumed-away versions
+    drop out; pre-metadata manifests surface with null
+    operation/timestamp rather than being hidden."""
     rows = []
     for v in list_versions(table_path):
         # slim scalars only (r12): operation / timestamp / metrics /
@@ -3030,6 +3052,7 @@ def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
                 v,
                 mf.get("operation"),
                 _dt.datetime.fromisoformat(stamp) if stamp else None,
+                mf.get("n_buckets"),
                 met.get("buckets_written"),
                 met.get("buckets_carried"),
                 met.get("rows_written"),
@@ -3041,8 +3064,9 @@ def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
     return spark.createDataFrame(
         rows,
         "version int, operation string, committed_at timestamp, "
-        "buckets_written int, buckets_carried int, rows_written long, "
-        "files_written int, bytes_written long, table_rows long",
+        "n_buckets int, buckets_written int, buckets_carried int, "
+        "rows_written long, files_written int, bytes_written long, "
+        "table_rows long",
     )
 
 
@@ -3225,6 +3249,37 @@ def optimize_table(
 # pandas — the largest diff task a routinely-sized executor should
 # carry. `maintain_table` rescales the bucket layout past this.
 MAX_BUCKET_BYTES = 256 * 1024 * 1024
+
+
+def sized_buckets(
+    table_bytes: int, max_bucket_bytes: int, multiple_of: int = 1
+) -> int:
+    """The bucket-size rule: one bucket per `max_bucket_bytes // 2` of
+    table data (so a sized bucket sits at about half the ceiling and
+    the next maintenance isn't immediately due), rounded up, at least
+    1, and rounded up to a multiple of `multiple_of` — the current
+    count on a rescale, which keeps the CDC stream reader per-bucket
+    (each new bucket diffs against exactly old bucket b % old_n —
+    sources/manifest_source.py). `maintain_table` rescales an outgrown
+    table by it and `sink_buckets` creates an engine-owned stream sink
+    by it."""
+    want = max(1, -(-table_bytes // max(1, max_bucket_bytes // 2)))
+    return -(-want // multiple_of) * multiple_of
+
+
+def sink_buckets(table_path: str, batch: DataFrame, n_rows: int) -> int | None:
+    """`n_buckets` for an engine-owned `foreachBatch` sink's upsert of
+    the `n_rows` rows of `batch`. An existing table keeps its layout
+    (None; `maintain_table` grows it). The epoch that creates the table
+    sizes it by `sized_buckets`, estimating its bytes as the row count
+    times the schema's default row width — no Spark job. A sink of a
+    few thousand tasks gets 1 bucket, so an epoch rewrites one file
+    instead of one per touched bucket of `DEFAULT_BUCKETS`, while a
+    GB-sized first epoch (a backfill) still gets a parallel layout."""
+    if list_versions(table_path):
+        return None
+    row_bytes = batch._jdf.schema().defaultSize()
+    return sized_buckets(n_rows * row_bytes, MAX_BUCKET_BYTES)
 
 
 def _collision_rescale(
@@ -3498,23 +3553,19 @@ def maintain_table(
         total_bytes += b_bytes
     rescale_to = None
     if size_policy and worst_bytes > max_bucket_bytes:
-        # size new buckets at ~half the ceiling so the next maintenance
-        # isn't immediately due; never shrink the layout here. CONVERGES
-        # by construction: rescale only when the layout is UNDERSIZED
-        # for the table's total bytes — a bucket still fat at (or past)
-        # the computed count is irreducible key skew (one hot key larger
+        # size new buckets by the shared rule, aligned to the current
+        # layout; never shrink the layout here. CONVERGES by
+        # construction: rescale only when the layout is UNDERSIZED for
+        # the table's total bytes — a bucket still fat at (or past) the
+        # computed count is irreducible key skew (one hot key larger
         # than the ceiling), which re-hashing cannot shrink, and
-        # re-triggering would repeat a full-table rewrite forever.
-        # The count is rounded UP to a MULTIPLE of the current layout:
-        # an aligned rescale keeps the CDC stream reader per-bucket
-        # (each new bucket diffs against exactly old bucket b % old_n —
-        # sources/manifest_source.py), where an arbitrary count would
-        # collapse any stream span containing the rescale to one task.
-        target = max(1, max_bucket_bytes // 2)
-        want = -(-total_bytes // target)
+        # re-triggering would repeat a full-table rewrite forever. An
+        # arbitrary (unaligned) count would collapse any CDC stream
+        # span containing the rescale to one task.
         n = mf["n_buckets"]
-        if want > n:
-            rescale_to = -(-want // n) * n
+        sized = sized_buckets(total_bytes, max_bucket_bytes, n)
+        if sized > n:
+            rescale_to = sized
         elif worst_dir is not None:
             # secondary trigger (ADVICE r7): the layout is NOT
             # undersized for total bytes, yet one bucket is fat. That

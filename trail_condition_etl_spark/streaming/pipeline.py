@@ -23,13 +23,19 @@ The task envelope (_enqueued_ts, _delivery_count) is carried as columns;
 
 Sinks go through `foreachBatch` -> idempotent manifest-table upsert
 (sinks/manifest.py), giving end-to-end effectively-once on top of the
-at-least-once replay of a restarted micro-batch (T1).
+at-least-once replay of a restarted micro-batch (T1). The epoch that
+creates the table sizes its bucket layout to the epoch's rows
+(`manifest.sink_buckets`): a task table of tens of KB gets one bucket,
+so each epoch rewrites one data file, and `maintain_table` grows the
+layout by the same rule once the table outgrows it.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -196,7 +202,9 @@ def run_pipeline_from_stream(
     commit, so a crash mid-epoch leaves the previous snapshot intact
     and checkpoint replay of the same batch converges (idempotent
     MERGE) — exactly-once end-to-end with readers snapshot-isolated
-    from in-flight epochs."""
+    from in-flight epochs. The first epoch creates the table with a
+    bucket count sized to its rows (`manifest.sink_buckets`); later
+    epochs keep the table's layout."""
     if table_format != "manifest":
         raise ValueError(f"unknown table_format: {table_format!r}")
     keys = upsert_keys or ["task_id"]
@@ -260,7 +268,13 @@ def run_pipeline_from_stream(
             if n_good:
                 guard(
                     lambda: manifest_sink.manifest_upsert(
-                        batch.sparkSession, out_table, good, keys
+                        batch.sparkSession,
+                        out_table,
+                        good,
+                        keys,
+                        n_buckets=manifest_sink.sink_buckets(
+                            out_table, good, n_good
+                        ),
                     )
                 )
             if metrics_path is not None:
@@ -269,13 +283,23 @@ def run_pipeline_from_stream(
                 # metrics ARE a table, queryable like everything else).
                 # Written LAST: a metrics row implies its epoch's sink
                 # writes committed, so run-over-run deltas are trustworthy.
+                # Built from Arrow, so it plans as a LocalTableScan (no
+                # Python worker) and its timestamp is data, not a literal
+                # that codegen would compile into a new class per epoch.
                 n_good = good.count()
                 batch.sparkSession.createDataFrame(
-                    [(int(epoch_id), n_good, n_rejects)],
-                    "epoch_id long, n_processed long, n_rejected long",
-                ).withColumn("emitted_ts", F.current_timestamp()).write.mode(
-                    "append"
-                ).parquet(metrics_path)
+                    pa.table(
+                        {
+                            "epoch_id": pa.array([epoch_id], pa.int64()),
+                            "n_processed": pa.array([n_good], pa.int64()),
+                            "n_rejected": pa.array([n_rejects], pa.int64()),
+                            "emitted_ts": pa.array(
+                                [dt.datetime.now(dt.timezone.utc)],
+                                pa.timestamp("us", tz="UTC"),
+                            ),
+                        }
+                    )
+                ).write.mode("append").parquet(metrics_path)
         finally:
             routed.unpersist()
 

@@ -205,7 +205,11 @@ def run_windowed_update_available_now(
     on (window_start_s, event_type) — the running-totals dashboard
     pattern. The state store carries the running aggregates across
     batches AND restarts; the manifest upsert makes re-emission
-    idempotent, so the table always holds the latest total per window."""
+    idempotent, so the table always holds the latest total per window.
+    The epoch that creates the table sizes its bucket layout to the
+    epoch's rows (`manifest.sink_buckets`), so a dashboard of a few
+    hundred windows lands in one bucket rather than `DEFAULT_BUCKETS`;
+    later epochs keep the layout and `maintain_table` grows it."""
     from ..sinks import manifest as manifest_sink
 
     stream = spark.readStream.schema(
@@ -223,12 +227,16 @@ def run_windowed_update_available_now(
     )
 
     def upsert_batch(batch, epoch_id):
-        if not batch.isEmpty():
+        # one job either way: the count that gates the upsert also sizes
+        # the table its first epoch creates
+        n = batch.count()
+        if n:
             manifest_sink.manifest_upsert(
                 batch.sparkSession,
                 table_path,
                 batch,
                 ["window_start_s", "event_type"],
+                n_buckets=manifest_sink.sink_buckets(table_path, batch, n),
             )
 
     return (
