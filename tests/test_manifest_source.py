@@ -25,6 +25,23 @@ def _table(spark, tmp_path, n=400, n_buckets=4):
     return table
 
 
+def _snapshot_diff(spark, table, frm, to=None):
+    """The change feed as a pure-Python diff of the two snapshots
+    `read_manifest_table` returns: (k, price, v, change_type) rows,
+    new-side values on insert/update, nulls on delete."""
+    if to is None:
+        to = mf.list_versions(table)[-1]
+    old = {r.k: r for r in mf.read_manifest_table(spark, table, frm).collect()}
+    new = {r.k: r for r in mf.read_manifest_table(spark, table, to).collect()}
+    rows = {(k, None, None, "delete") for k in old if k not in new}
+    for k, r in new.items():
+        if k not in old:
+            rows.add((k, r.price, r.v, "insert"))
+        elif old[k] != r:
+            rows.add((k, r.price, r.v, "update"))
+    return rows
+
+
 def test_batch_source_reads_the_snapshot(spark, tmp_path):
     table = _table(spark, tmp_path)
     ms.register_manifest_sources(spark)
@@ -131,8 +148,9 @@ def test_batch_source_filter_pruning_every_file(spark, tmp_path):
 
 def test_cdc_stream_matches_table_changes(spark, tmp_path):
     """One AvailableNow pass from startingVersion=1 lands exactly the
-    rows `table_changes(1, latest)` computes (collapsed span, new-side
-    values on insert/update, null values on delete)."""
+    rows a diff of snapshots 1 and latest gives (collapsed span,
+    new-side values on insert/update, null values on delete) — the
+    model `table_changes`, which reads the same diff, must match too."""
     table = _table(spark, tmp_path, n=100, n_buckets=2)
     mf.manifest_upsert(
         spark,
@@ -167,11 +185,7 @@ def test_cdc_stream_matches_table_changes(spark, tmp_path):
         (r.k, r.price, r.v, r.change_type)
         for r in spark.read.parquet(out).collect()
     }
-    want = {
-        (r.k, r.price, r.v, r.change_type)
-        for r in mf.table_changes(spark, table, 1).collect()
-    }
-    assert got == want
+    assert got == _snapshot_diff(spark, table, 1)
     assert {c for *_, c in got} == {"insert", "update", "delete"}
 
 
@@ -963,9 +977,9 @@ def test_cdc_max_versions_restart_is_unbounded_then_bounded(spark, tmp_path):
 def test_batch_cdf_read_matches_table_changes(spark, tmp_path):
     """spark.read.format("manifest").option("readChangeFeed", "true"):
     the batch change-feed read plans the SAME per-bucket diff
-    partitions as the streaming source and must emit exactly what the
-    library `table_changes` computes over the span — including delete
-    rows (null values) and an endingVersion pin."""
+    partitions as the streaming source and must emit exactly the diff
+    of the span's two snapshots — including delete rows (null values)
+    and an endingVersion pin."""
     table = _table(spark, tmp_path, n=40, n_buckets=2)
     mf.manifest_upsert(
         spark,
@@ -980,9 +994,7 @@ def test_batch_cdf_read_matches_table_changes(spark, tmp_path):
     ms.register_manifest_sources(spark)
 
     def rows(df):
-        return sorted(
-            (r.k, r.change_type, r.v) for r in df.collect()
-        )
+        return {(r.k, r.price, r.v, r.change_type) for r in df.collect()}
 
     got = (
         spark.read.format("manifest")
@@ -991,11 +1003,10 @@ def test_batch_cdf_read_matches_table_changes(spark, tmp_path):
         .option("startingVersion", 1)
         .load()
     )
-    want = mf.table_changes(spark, table, 1)
-    assert sorted(got.columns) == sorted(want.columns)
-    assert rows(got) == rows(want)
-    assert (0, "update", "u0") in rows(got)
-    assert (7, "delete", None) in rows(got)
+    assert sorted(got.columns) == ["change_type", "k", "price", "v"]
+    assert rows(got) == _snapshot_diff(spark, table, 1)
+    assert (0, 9.0, "u0", "update") in rows(got)
+    assert (7, None, None, "delete") in rows(got)
     # endingVersion pins a sub-span: the delete commit is excluded
     sub = (
         spark.read.format("manifest")
@@ -1005,8 +1016,8 @@ def test_batch_cdf_read_matches_table_changes(spark, tmp_path):
         .option("endingVersion", 2)
         .load()
     )
-    assert rows(sub) == rows(mf.table_changes(spark, table, 1, 2))
-    assert (7, "delete", None) not in rows(sub)
+    assert rows(sub) == _snapshot_diff(spark, table, 1, 2)
+    assert (7, None, None, "delete") not in rows(sub)
 
 
 def test_batch_cdf_empty_span_and_option_validation(spark, tmp_path):

@@ -1090,7 +1090,7 @@ def q_pyds_manifest_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pyds_cdf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the BATCH change-data-feed read (r10): readChangeFeed=true over
     # a closed version span plans the stream source's per-bucket diff
-    # partitions; must agree with the library table_changes oracle
+    # partitions, the diff `table_changes` runs too
     ensure_engine_conf(spark)
     return manifest_source.pyds_cdf_batch_query(spark, sf_dir)
 

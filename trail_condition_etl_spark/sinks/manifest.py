@@ -368,8 +368,8 @@ def _span_manifests(
     table_path: str, frm: int, to: int
 ) -> tuple[dict | None, dict | None]:
     """(mf_to, mf_from) for a CDC/CDF version span, metadata-pruned on
-    sharded tables (r11 stream planner, r12 shared with batch
-    `table_changes`): ranges whose sidecar (path, hash) entries are
+    sharded tables (the change-feed planner,
+    `sources/manifest_source.py::ManifestCDCStreamReader`): ranges whose sidecar (path, hash) entries are
     IDENTICAL at both span ends provably changed nothing — their
     buckets, delete refs, and stats are byte-equal — so only the
     DIFFERING ranges' sidecars load and the per-bucket diff downstream
@@ -3598,24 +3598,6 @@ def maintain_table(
     )
 
 
-def _snapshot_buckets(
-    spark: SparkSession, table_path: str, mf: dict, bucket_ids: list
-) -> DataFrame:
-    """A snapshot restricted to the given buckets: their segment dirs
-    read logically, their pending MoR deletes applied — the unit
-    `table_changes`' bucket-level pruning diffs."""
-    schema = _data_schema(mf)
-    paths = [
-        os.path.join(table_path, mf["buckets"][b])
-        for b in bucket_ids
-        if b in mf["buckets"]
-    ]
-    if not paths:
-        return spark.createDataFrame([], schema)
-    df = _read_segments(spark, mf, paths)
-    return _apply_deletes(spark, df, table_path, mf, bucket_ids)
-
-
 def table_changes(
     spark: SparkSession,
     table_path: str,
@@ -3626,138 +3608,49 @@ def table_changes(
     """CDC change feed between two committed versions (Delta's
     `table_changes` reduced to its semantics): keys present only in the
     newer snapshot are `insert`, only in the older are `delete`, present
-    in both with differing non-key content are `update`; byte-identical
-    rows are excluded — the classification is CONTENT-based, computed
-    from the two immutable snapshots, so it needs no per-commit change
-    log. Comparison spans the NEWER version's full non-key schema, with
+    in both with differing non-key content are `update`; unchanged rows
+    are excluded — the classification is CONTENT-based, computed from
+    the two immutable snapshots, so it needs no per-commit change log.
+    Comparison spans the NEWER version's full non-key schema, with
     columns the older version lacks read as NULL on its side (additive
-    evolution: the schema only ever widens) — so a row whose only
-    change is a newly-added column IS an update. Each insert/update row
-    carries the NEW-side column values (Delta's table_changes emits
-    full rows; ADVICE r4), so replaying the feed onto the older
-    snapshot — upsert the insert/update rows, delete the delete keys —
-    really does reconstruct the newer one exactly; delete rows carry
-    NULL values. One keyed full-outer join.
+    evolution), aligned by physical column identity (a rename is no
+    change); NaN equals NaN and null equals null at any nesting depth.
+    Insert/update rows carry the NEW-side values (Delta's full rows), so
+    replaying the feed onto the older snapshot — upsert the
+    insert/update rows, delete the delete keys — reconstructs the newer
+    one; delete rows carry NULL values. `include_preimages` emits each
+    update as Delta CDF's update_preimage/update_postimage pair.
+    `from_version` 0 emits the snapshot at `to_version` as inserts.
 
-    Metadata IO is O(change) on sharded tables (r12, VERDICT r11
-    directive 2): the span resolves through `_span_manifests` — the
-    same slim-index diff the CDC stream planner uses — so a 1-bucket
-    commit's CDF parses one sidecar pair, never all ~12.5k ranges;
-    the r11 bucket-level pruning below then bounds the DATA IO the
-    same way."""
-    if to_version is None:
-        versions = list_versions(table_path)
-        if not versions:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
-        to_version = versions[-1]
-    mf_to, mf_from = _span_manifests(table_path, from_version, to_version)
-    if mf_to is None:
+    This is the batch change-data-feed read
+    (`spark.read.format("manifest").option("readChangeFeed", "true")`),
+    whose per-bucket diff (`ManifestCDCStreamReader.read`) is the one
+    the `manifest_cdc` stream runs too; only the column order
+    (keys, change_type, the rest) is this function's. A missing table
+    or a vacuumed `from_version` raises FileNotFoundError here, on the
+    driver, per the CDC retention contract."""
+    from ..sources.manifest_source import register_manifest_sources
+
+    mf = read_manifest(table_path, to_version, buckets=[])  # slim
+    if mf is None:
         raise FileNotFoundError(f"no committed manifest under {table_path}")
-    keys = mf_to["keys"]
-    # (no None fallback for from_version > 0: _span_manifests either
-    # returns a manifest or propagates FileNotFoundError from the
-    # explicit-version read — a vacuumed from_version fails loud there,
-    # per the CDC retention contract; ADVICE r12)
-    # Bucket-level pruning (r11): with the SAME bucket layout at both
-    # span ends, a key can never move buckets, so a bucket whose
-    # segment dir AND pending-delete file list are IDENTICAL (carried
-    # by reference) provably contributes only 'none' rows — both sides
-    # read ONLY the buckets that actually changed, making the diff
-    # O(change) in data IO instead of O(table). A rescale inside the
-    # span moves keys across buckets: full-snapshot diff, as before.
-    if mf_from is not None and mf_from["n_buckets"] == mf_to["n_buckets"]:
-        ob, nb = mf_from["buckets"], mf_to["buckets"]
-        odm = mf_from.get("deletes", {})
-        ndm = mf_to.get("deletes", {})
-        changed = sorted(
-            (
-                b
-                for b in set(ob) | set(nb)
-                if ob.get(b) != nb.get(b)
-                or odm.get(b, []) != ndm.get(b, [])
-            ),
-            key=int,
-        )
-        old = _snapshot_buckets(spark, table_path, mf_from, changed)
-        new = _snapshot_buckets(spark, table_path, mf_to, changed)
-    else:
-        old = read_manifest_table(spark, table_path, from_version)
-        new = read_manifest_table(spark, table_path, mf_to["version"])
-    # column identity is PHYSICAL (column mapping): a rename between
-    # the two versions is metadata-only and must not read as a change,
-    # and a dropped-then-re-added column (fresh physical) must read as
-    # new on every row — align the old side to the NEW logical names
-    # by physical identity, dropping old columns with no new identity
-    inv_to = {
-        _physical_name(mf_to, f.name): f.name
-        for f in _data_schema(mf_to).fields
-    }
-    old = old.select(
-        *[
-            F.col(f.name).alias(inv_to[_physical_name(mf_from, f.name)])
-            for f in _data_schema(mf_from).fields
-            if _physical_name(mf_from, f.name) in inv_to
-        ]
+    if from_version > 0:  # a vacuumed baseline raises here
+        read_manifest(table_path, from_version, buckets=[])
+    register_manifest_sources(spark)
+    feed = (
+        spark.read.format("manifest")
+        .option("path", table_path)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", from_version)
+        .option("endingVersion", mf["version"])
+        .option("includePreimages", include_preimages)
+        .load()
     )
-    compare = [c for c in new.columns if c not in keys]
-    new_types = {f.name: f.dataType for f in new.schema.fields}
-    old_side = [
-        F.col(c).alias(c)
-        if c in old.columns
-        else F.lit(None).cast(new_types[c]).alias(c)
-        for c in compare
-    ]
-    o = old.select(*keys, F.struct(*old_side).alias("_old"))
-    n = new.select(*keys, F.struct(*compare).alias("_new"))
-    j = o.join(n, keys, "full_outer")
-    change = (
-        F.when(F.col("_old").isNull(), "insert")
-        .when(F.col("_new").isNull(), "delete")
-        .when(~F.col("_old").eqNullSafe(F.col("_new")), "update")
-        .otherwise("none")
-    )
-    marked = j.withColumn("change_type", change).filter(
-        F.col("change_type") != "none"
-    )
-    if not include_preimages:
-        return marked.select(
-            *keys,
-            "change_type",
-            *[F.col(f"_new.{c}").alias(c) for c in compare],
-        )
-    # Delta CDF form: an update emits TWO rows (update_preimage with
-    # the old values, update_postimage with the new) in ONE pass — the
-    # per-row explode keeps the join single-execution instead of three
-    # filtered re-projections of it
-    pair = F.when(
-        F.col("change_type") == "update",
-        F.array(
-            F.struct(
-                F.lit("update_preimage").alias("ct"),
-                F.col("_old").alias("v"),
-            ),
-            F.struct(
-                F.lit("update_postimage").alias("ct"),
-                F.col("_new").alias("v"),
-            ),
-        ),
-    ).otherwise(
-        # insert carries the new values; delete's _new side is the
-        # full-outer join's NULL struct, so its values land NULL —
-        # exactly the non-preimage contract
-        F.array(
-            F.struct(
-                F.col("change_type").alias("ct"), F.col("_new").alias("v")
-            )
-        )
-    )
-    e = marked.select(*keys, F.explode(pair).alias("_e"))
-    return e.select(
+    keys = mf["keys"]
+    return feed.select(
         *keys,
-        F.col("_e.ct").alias("change_type"),
-        *[F.col(f"_e.v.{c}").alias(c) for c in compare],
+        "change_type",
+        *[c for c in feed.columns if c not in keys and c != "change_type"],
     )
 
 

@@ -190,6 +190,29 @@ def _nullable_arrow_schema(schema: StructType):
     )
 
 
+def _key_rows(table, keys: list[str]):
+    """The table's key tuples, row by row, as Python values."""
+    return zip(*(table.column(k).to_pylist() for k in keys))
+
+
+_NAN = object()  # stands in for every NaN: NaN != NaN, _NAN is _NAN
+
+
+def _cmp_value(v):
+    """`v` (an Arrow `to_pylist()` value) normalized for the change
+    diff's equality: NaN equals NaN and null equals null at any depth
+    of arrays, structs (dicts) and maps (lists of key/value tuples),
+    and containers become hashable tuples. -0.0 equals 0.0, as in
+    Python and in Spark's `<=>`."""
+    if isinstance(v, float):
+        return _NAN if v != v else v
+    if isinstance(v, dict):
+        v = v.values()
+    elif not isinstance(v, (list, tuple)):
+        return v
+    return tuple(_cmp_value(x) for x in v)
+
+
 def _delete_key_set(delete_files: list[str], keys: list[str]) -> set:
     """The pending MoR delete keys as a set of tuples. Delete files are
     small by design (bytes proportional to deleted keys, materialized
@@ -202,9 +225,7 @@ def _delete_key_set(delete_files: list[str], keys: list[str]) -> set:
         [pq.read_table(f, columns=keys) for f in delete_files],
         promote_options="default",
     )
-    return set(
-        tbl.to_pandas().itertuples(index=False, name=None)
-    )
+    return set(_key_rows(tbl, keys))
 
 
 def _anti_filter_deletes(table, keys: list[str], gone: set):
@@ -213,9 +234,27 @@ def _anti_filter_deletes(table, keys: list[str], gone: set):
 
     if not gone or table.num_rows == 0:
         return table
-    kdf = table.select(keys).to_pandas()
-    mask = [t not in gone for t in kdf.itertuples(index=False, name=None)]
-    return table.filter(pa.array(mask))
+    return table.filter(
+        pa.array([t not in gone for t in _key_rows(table, keys)])
+    )
+
+
+def _conform(table, want, colmap: dict[str, str]):
+    """A file-level Arrow table as the `want` schema's logical columns,
+    cast to their types. `colmap` maps logical -> physical for renamed
+    columns, so a retired same-named physical column is never read; a
+    column the file lacks (written before an additive schema
+    evolution) materializes as nulls, same as the JVM read path."""
+    import pyarrow as pa
+
+    arrays = []
+    for field in want:
+        pname = colmap.get(field.name, field.name)
+        if pname in table.column_names:
+            arrays.append(table.column(pname).cast(field.type))
+        else:
+            arrays.append(pa.nulls(table.num_rows, field.type))
+    return pa.table(arrays, schema=want)
 
 
 def _arrow_batches(
@@ -230,14 +269,13 @@ def _arrow_batches(
     schema (files written before an additive schema evolution lack the
     new columns: they materialize as nulls, same as the JVM read
     path), minus any pending MoR delete keys for the file's bucket."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     want = _nullable_arrow_schema(schema)
     # Project only columns the FILE actually has: buckets carried across
     # an additive schema evolution lack later-added columns, and pyarrow
     # raises ArrowInvalid for an absent column= (it does not null-fill).
-    # Missing fields materialize as nulls in the cast loop below. One
+    # Missing fields materialize as nulls in `_conform`. One
     # ParquetFile handle serves both the schema probe and the read —
     # one footer parse per file, not two.
     pf = pq.ParquetFile(path)
@@ -253,14 +291,7 @@ def _arrow_batches(
             if c is not None and cmap.get(c, c) in present
         ]
     )
-    arrays = []
-    for field in want:
-        pname = cmap.get(field.name, field.name)
-        if pname in table.column_names:
-            arrays.append(table.column(pname).cast(field.type))
-        else:
-            arrays.append(pa.nulls(table.num_rows, field.type))
-    out = pa.table(arrays, schema=want)
+    out = _conform(table, want, cmap)
     if delete_files:
         out = _anti_filter_deletes(
             out, list(keys), _delete_key_set(list(delete_files), list(keys))
@@ -851,9 +882,10 @@ def _cdc_baseline_for_timestamp(table_path: str, ts) -> int:
 
 
 def cdc_schema(data_schema: StructType) -> StructType:
-    """Data schema + change_type — the same column set
-    `sinks.manifest.table_changes` emits. Data fields are forced
-    nullable: delete rows carry null values by contract."""
+    """Data schema + change_type: the change feed's columns, for the
+    stream, the batch `readChangeFeed` read and
+    `sinks.manifest.table_changes` (which reorders them). Data fields
+    are forced nullable: delete rows carry null values by contract."""
     from pyspark.sql.types import StringType, StructField
 
     return StructType(
@@ -863,8 +895,10 @@ def cdc_schema(data_schema: StructType) -> StructType:
 
 
 class ManifestCDCStreamReader(DataSourceStreamReader):
-    """Streaming CDC over table versions. Each changed bucket's
-    old+new snapshots diff inside ONE Arrow task, so bytes-per-bucket
+    """Streaming CDC over table versions, and the engine's one change
+    diff: the batch `readChangeFeed` read and `table_changes` plan and
+    read through this class too. Each changed bucket's old+new
+    snapshots diff inside ONE Arrow task (`read`), so bytes-per-bucket
     IS the reader's bytes-per-task bound: `maintain_table
     (max_bucket_bytes=...)` keeps buckets under `MAX_BUCKET_BYTES`
     (default 256 MiB parquet ≈ 1-2 GB decoded — docs/TABLE_FORMAT.md
@@ -873,10 +907,8 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
     rescale of ANY shape stays parallel (`_rescale_partitions`): one
     partition per new bucket (rehash-filtered, residue-class-bounded
     old side) for driver-hashable keys, one exact partition per
-    gcd-residue class for exotic key types — bulk catch-up across a
-    coprime rescale of an exotic-keyed table belongs to the library
-    path (`table_changes`, a JVM keyed join with no per-task
-    ceiling).
+    gcd-residue class for exotic key types (a coprime rescale of an
+    exotic-keyed table is one diff task, see `_rescale_partitions`).
 
     `maxVersionsPerTrigger` (admission control — Delta's
     maxFilesPerTrigger, in this source's offset unit) caps how many
@@ -922,23 +954,13 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
         # the stream source, the span's END version for a batch CDF
         # read (a rename after endingVersion would otherwise rename
         # files to logical names the older schema doesn't carry)
-        mf0 = read_manifest(
-            self._table_path,
-            _cdf_end_version(options) if _cdf_requested(options) else None,
-            buckets=[],  # column mapping + schema: slim scalars
+        self._colmap = _mapping(
+            read_manifest(
+                self._table_path,
+                _cdf_end_version(options) if _cdf_requested(options) else None,
+                buckets=[],  # column mapping: slim scalars
+            )
         )
-        from ..sinks.manifest import _physical_name
-
-        self._inv_map = (
-            {
-                _physical_name(mf0, f.name): f.name
-                for f in _data_schema(mf0).fields
-                if _physical_name(mf0, f.name) != f.name
-            }
-            if mf0
-            else {}
-        )
-        self._retired = set(mf0.get("retired_physical", [])) if mf0 else set()
         # admission control (Delta's maxFilesPerTrigger analog, in the
         # unit this source's offsets move in): cap how many table
         # VERSIONS one micro-batch may span, so a consumer resuming
@@ -970,23 +992,9 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
         # and a self-advancing watermark would creep past the cap.
         self._hwm: int | None = None
 
-    def _trace(self, msg: str) -> None:
-        """Append the offset-protocol call to $SPARK_GRAFT_CDC_TRACE
-        when set — how the engine's real call order (latestOffset
-        BEFORE initialOffset, repeated polls per trigger) was measured
-        for the admission-control design above; kept so the claim
-        stays reproducible against future Spark versions."""
-        import os as _os
-
-        tp = _os.environ.get("SPARK_GRAFT_CDC_TRACE")
-        if tp:
-            with open(tp, "a") as fh:
-                fh.write(f"{id(self)} {msg}\n")
-
     def initialOffset(self) -> dict:
         # called only when no checkpoint exists — a fresh query, so the
         # engine's committed offset IS the starting version
-        self._trace("initialOffset")
         self._hwm = self._starting
         return {"version": self._starting}
 
@@ -999,7 +1007,6 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
                 f"no committed manifest under {self._table_path}"
             )
         newest = mf["version"]
-        self._trace(f"latestOffset newest={newest} hwm={self._hwm}")
         if self._max_versions is None:
             return {"version": newest}
         if self._hwm is None:
@@ -1015,7 +1022,6 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         frm, to = int(start["version"]), int(end["version"])
-        self._trace(f"partitions {frm}->{to}")
         # observe the engine-chosen range (including checkpoint replay
         # after a restart): never rate-limit below what is committed
         if self._hwm is None or max(frm, to) > self._hwm:
@@ -1064,8 +1070,7 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
 
     def _span_manifests(self, frm: int, to: int):
         """(new_mf, old_mf) for a CDC span, metadata-pruned on sharded
-        tables: delegates to the sink-side `_span_manifests` (r12 —
-        ONE slim-index diff shared with batch `table_changes`), which
+        tables: delegates to the sink-side `_span_manifests`, which
         loads only the ranges whose sidecar (path, hash) entries
         differ at the two span ends. A 1-bucket commit on an
         800k-bucket table plans its trigger from the two slim
@@ -1102,9 +1107,9 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
           its new buckets — EXACT with no rehashing, because keys never
           cross residue classes. g = 1 degenerates to a single diff
           task, the mathematically forced floor when rows cannot be
-          attributed to new buckets outside the engine; the JVM
-          `table_changes` join (sinks/manifest.py) remains the bulk
-          path for that corner."""
+          attributed to new buckets outside the engine. Every change
+          feed (stream, batch CDF, `table_changes`) takes that one
+          task for a coprime rescale of an exotic-keyed table."""
         import math
 
         from ..sinks.keyhash import supported_types
@@ -1170,16 +1175,13 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: _BucketChangePartition) -> Iterator:
-        import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         out_schema = _nullable_arrow_schema(self._schema)
-        data_fields = [f for f in out_schema if f.name != "change_type"]
+        want = pa.schema([f for f in out_schema if f.name != "change_type"])
         keys = partition.keys
-
-        def _read_tables(files: list[str]) -> list:
-            return [pq.read_table(f) for f in files]
+        nk = len(keys)
 
         def _read_rehash_filtered(files: list[str]) -> list:
             # rescale partition: the old side is a SUPERSET (this new
@@ -1201,10 +1203,9 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
                 pf = pq.ParquetFile(f)
                 for gi in range(pf.num_row_groups):
                     kt = pf.read_row_group(gi, columns=keys)
-                    cols = [kt.column(k).to_pylist() for k in keys]
                     mask = [
                         bucket_of(row, tn, n) == want_b
-                        for row in zip(*cols)
+                        for row in _key_rows(kt, keys)
                     ]
                     if not any(mask):
                         continue
@@ -1212,44 +1213,36 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
                     out.append(full.filter(pa.array(mask)))
             return out
 
-        def load(
-            files: list[str], del_files: list[str], rehash: bool = False
-        ) -> pd.DataFrame:
+        def load(files: list[str], del_files: list[str], rehash=False):
+            # one snapshot side as the output's data columns (files hold
+            # PHYSICAL names; the end version's mapping serves every
+            # version in the span because physical names are stable),
+            # minus that snapshot's pending MoR delete keys
             tables = (
-                _read_rehash_filtered(files) if rehash and files
-                else _read_tables(files)
+                _read_rehash_filtered(files) if rehash
+                else [pq.read_table(f) for f in files]
             )
-            if not tables:
-                return pd.DataFrame(
-                    {f.name: pd.Series(dtype=object) for f in data_fields}
+            tbl = _conform(
+                pa.concat_tables(tables, promote_options="default")
+                if tables else pa.table({}),
+                want,
+                self._colmap,
+            )
+            if del_files:
+                tbl = _anti_filter_deletes(
+                    tbl, keys, _delete_key_set(del_files, keys)
                 )
-            tbl = pa.concat_tables(tables, promote_options="default")
-            df = tbl.to_pandas()
-            # column mapping: files hold PHYSICAL names — retire the
-            # tombstoned ones first (a re-added column's fresh physical
-            # must win over same-named dropped bytes), then rename to
-            # the stream's logical names; physical names are stable, so
-            # one anchor mapping serves every version in the span
-            if self._retired:
-                df = df.drop(
-                    columns=[c for c in self._retired if c in df.columns]
-                )
-            if self._inv_map:
-                df = df.rename(columns=self._inv_map)
-            for f in data_fields:  # additive evolution: missing -> null
-                if f.name not in df.columns:
-                    df[f.name] = None
-            df = df[[f.name for f in data_fields]]
-            if del_files and len(df):
-                # this snapshot's pending MoR deletes: those keys were
-                # already absent from the version a reader saw
-                gone = _delete_key_set(del_files, keys)
-                mask = [
-                    t not in gone
-                    for t in df[keys].itertuples(index=False, name=None)
-                ]
-                df = df[pd.Series(mask, index=df.index)]
-            return df
+            return tbl
+
+        def index(tbl) -> dict:
+            # normalized key tuple -> (row, normalized non-key tuple):
+            # values are normalized for the comparison only, the
+            # emitted rows are the original Arrow values
+            names = keys + [f.name for f in want if f.name not in keys]
+            rows = zip(
+                *(map(_cmp_value, tbl.column(c).to_pylist()) for c in names)
+            )
+            return {r[:nk]: (i, r[nk:]) for i, r in enumerate(rows)}
 
         old = load(
             partition.old_files,
@@ -1257,44 +1250,41 @@ class ManifestCDCStreamReader(DataSourceStreamReader):
             rehash=bool(partition.rehash_n),
         )
         new = load(partition.new_files, partition.new_delete_files)
-        compare = [f.name for f in data_fields if f.name not in keys]
+        old_ix, new_ix = index(old), index(new)
+        inserts, upd_old, upd_new = [], [], []
+        for k, (i, vals) in new_ix.items():
+            prev = old_ix.get(k)
+            if prev is None:
+                inserts.append(i)
+            elif prev[1] != vals:
+                upd_old.append(prev[0])
+                upd_new.append(i)
 
-        def norm(df: pd.DataFrame) -> dict:
-            # key tuple -> normalized non-key tuple (NaN/NaT -> None so
-            # null == null, mirroring table_changes' eqNullSafe compare)
-            out = {}
-            for row in df.itertuples(index=False):
-                d = row._asdict()
-                k = tuple(d[c] for c in keys)
-                out[k] = tuple(
-                    None if pd.isna(d[c]) else d[c] for c in compare
-                )
-            return out
+        def tagged(tbl, rows: list[int], change: str):
+            part = tbl.take(pa.array(rows, pa.int64()))
+            return part.append_column(
+                "change_type", pa.array([change] * len(rows), pa.string())
+            )
 
-        old_m, new_m = norm(old), norm(new)
-        rows = []
-        for k, vals in new_m.items():
-            if k not in old_m:
-                rows.append(k + vals + ("insert",))
-            elif old_m[k] != vals:
-                if self._preimages:
-                    rows.append(k + old_m[k] + ("update_preimage",))
-                    rows.append(k + vals + ("update_postimage",))
-                else:
-                    rows.append(k + vals + ("update",))
-        none_vals = (None,) * len(compare)
-        for k in old_m:
-            if k not in new_m:
-                rows.append(k + none_vals + ("delete",))
-        if not rows:
-            return
-        cols = keys + compare + ["change_type"]
-        frame = pd.DataFrame(rows, columns=cols)
-        ordered = [f.name for f in out_schema]
-        tbl = pa.Table.from_pandas(
-            frame[ordered], preserve_index=False
-        ).cast(out_schema)
-        yield from tbl.to_batches()
+        gone = [i for k, (i, _) in old_ix.items() if k not in new_ix]
+        deletes = pa.table(
+            [
+                old.column(f.name) if f.name in keys
+                else pa.nulls(old.num_rows, f.type)
+                for f in want
+            ],
+            schema=want,
+        )  # delete rows carry null values by contract
+        pieces = [tagged(new, inserts, "insert")]
+        if self._preimages:
+            pieces.append(tagged(old, upd_old, "update_preimage"))
+            pieces.append(tagged(new, upd_new, "update_postimage"))
+        else:
+            pieces.append(tagged(new, upd_new, "update"))
+        pieces.append(tagged(deletes, gone, "delete"))
+        pieces = [p for p in pieces if p.num_rows]
+        if pieces:
+            yield from pa.concat_tables(pieces).cast(out_schema).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; segments are immutable

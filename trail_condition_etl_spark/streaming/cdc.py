@@ -1,7 +1,9 @@
 """Incremental consumption of the manifest table's CDC change feed.
 
 `sinks.manifest.table_changes` computes the insert/update/delete diff
-between two committed versions — but a downstream consumer needs the
+between two committed versions (the same per-bucket diff the batch
+`readChangeFeed` read and the `manifest_cdc` stream run, in
+`sources/manifest_source.py`) — but a downstream consumer needs the
 INCREMENTAL form: "give me everything since the last version I saw,
 then remember where I got to". That is the reference's outbox-drain →
 downstream-sink propagation pattern (S8 → S13: the fetch worker emits a
@@ -17,8 +19,8 @@ One pass = one AvailableNow trigger:
 * resolve the table's LATEST committed version;
 * if newer, compute ONE change batch spanning (cursor → latest) — the
   content-based diff collapses intermediate versions for free, so a
-  consumer that fell N commits behind catches up with one keyed join,
-  not N — and hand it to the caller's apply function;
+  consumer that fell N commits behind catches up with one diff of two
+  snapshots, not N — and hand it to the caller's apply function;
 * atomically advance the cursor (temp + os.replace) only AFTER apply
   returns.
 
@@ -110,16 +112,7 @@ def consume_table_changes(
     cur = read_change_cursor(cursor_path)
     if cur >= latest:
         return (cur, cur)
-    if cur == 0:
-        keys = mf["keys"]
-        snap = read_manifest_table(spark, table_path, latest)
-        rest = [c for c in snap.columns if c not in keys]
-        changes = snap.select(
-            *keys, F.lit("insert").alias("change_type"), *rest
-        )
-    else:
-        changes = table_changes(spark, table_path, cur, latest)
-    apply_batch(changes, cur, latest)
+    apply_batch(table_changes(spark, table_path, cur, latest), cur, latest)
     _write_change_cursor(cursor_path, latest)
     return (cur, latest)
 
