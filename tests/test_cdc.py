@@ -199,3 +199,33 @@ def test_table_changes_reads_only_changed_buckets(spark, tmp_path):
         for r in mf.table_changes(spark, t, 1).collect()
     }
     assert rows == {(7, "update"), (9, "update")}
+
+
+def test_table_changes_registers_the_sources_once_per_session(
+    spark, tmp_path, monkeypatch
+):
+    """`table_changes` reads through the Python data sources; a session
+    that already has them does not register them again (each
+    re-registration logs a Spark WARN)."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    src = str(tmp_path / "src")
+    mf.manifest_upsert(spark, src, _df(spark, [(1, "a")]), ["k"])
+    mf.manifest_upsert(spark, src, _df(spark, [(1, "b"), (2, "c")]), ["k"])
+
+    def changes():
+        feed = mf.table_changes(spark, src, 1).collect()
+        return {(r.k, r.change_type) for r in feed}
+
+    first = changes()
+    assert first == {(1, "update"), (2, "insert")}
+    registered = []
+    real = DataSourceRegistration.register
+
+    def counting(self, source):
+        registered.append(source.name())
+        return real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    assert changes() == first
+    assert registered == []

@@ -15,6 +15,7 @@ from __future__ import annotations
 import datetime as dt
 import itertools
 import math
+import os
 from collections import Counter
 
 import pytest
@@ -56,9 +57,8 @@ VALUES = {
     ),
 }
 #: one generated row: a value for every kind, projected onto the
-#: table's current columns when the op runs. Keys are never null: a
-#: null key is a known fault of the upsert itself (see
-#: test_null_key_upsert_keeps_one_live_row below), not of the diff.
+#: table's current columns when the op runs. Keys are never null: the
+#: upsert refuses them (test_upsert_refuses_null_merge_keys below).
 _row = st.fixed_dictionaries(VALUES)
 _rows = st.dictionaries(st.integers(0, 9), _row, min_size=1, max_size=5)
 _keys = st.lists(st.integers(0, 9), min_size=1, max_size=3)
@@ -322,27 +322,28 @@ def test_change_feeds_equal_the_snapshot_diff(
     assert _feed(streamed, snap(latest)[1]) == _model(snap(frm), snap(latest))
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason=(
-        "null merge keys: the upsert's key anti-join never matches null, "
-        "so a second (None, ...) upsert leaves both rows live; a fix "
-        "either keeps one row or rejects null keys with ValueError"
-    ),
-)
-def test_null_key_upsert_keeps_one_live_row(spark, tmp_path):
-    """Two upserts of the same null key leave one live row (or the
-    upsert refuses null keys); today both rows stay live, so every diff
-    over the table misreports that key."""
+def test_upsert_refuses_null_merge_keys(spark, tmp_path):
+    """A null key matches no row, so a second upsert of it would leave
+    both rows live and every diff would misreport the key: the upsert,
+    and `merge_into` through it, refuse the batch before publish and
+    leave the table as it was."""
     table = str(tmp_path / "t")
-    try:
-        for v in ("x", "y"):
-            mfm.manifest_upsert(
-                spark, table,
-                spark.createDataFrame([(None, v)], "k int, v string"),
-                ["k"], n_buckets=2,
-            )
-    except ValueError:
-        return  # null keys refused: the fault is mended
-    rows = mfm.read_manifest_table(spark, table).collect()
-    assert [(r.k, r.v) for r in rows] == [(None, "y")]
+
+    def batch(k, v):
+        return spark.createDataFrame([(k, v)], "k int, v string")
+
+    with pytest.raises(ValueError, match="null"):
+        mfm.manifest_upsert(spark, table, batch(None, "x"), ["k"], n_buckets=2)
+    assert mfm.list_versions(table) == []
+    mfm.manifest_upsert(spark, table, batch(1, "a"), ["k"], n_buckets=2)
+    segments = sorted(os.listdir(os.path.join(table, "data")))
+    for write in (
+        lambda: mfm.manifest_upsert(spark, table, batch(None, "y"), ["k"]),
+        lambda: mfm.merge_into(spark, table, batch(None, "z")),
+    ):
+        with pytest.raises(ValueError, match="null"):
+            write()
+        assert mfm.list_versions(table) == [1]
+        assert sorted(os.listdir(os.path.join(table, "data"))) == segments
+        rows = mfm.read_manifest_table(spark, table).collect()
+        assert [(r.k, r.v) for r in rows] == [(1, "a")]

@@ -1414,8 +1414,19 @@ def test_cojoin_rejects_incompatible_layouts(spark, tmp_path):
         mf.read_manifest_cojoin(spark, left, clash)
 
 
+def _legacy_null_key_upsert(monkeypatch, *args, **kwargs):
+    """Upserts refuse null merge keys, but a table written before they
+    did can hold them. Check the refusal, then forge such a table by
+    upserting with the footers' null counts hidden."""
+    with pytest.raises(ValueError, match="null"):
+        mf.manifest_upsert(*args, **kwargs)
+    with monkeypatch.context() as m:
+        m.setattr(mf, "_file_nulls", lambda md: {})
+        return mf.manifest_upsert(*args, **kwargs)
+
+
 def test_cojoin_rejects_mismatched_key_types_and_skips_null_keys(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Same-named key columns of different widths hash to different
     buckets (the engine hash is width-sensitive) — the join must raise,
@@ -1438,13 +1449,13 @@ def test_cojoin_rejects_mismatched_key_types_and_skips_null_keys(
     # null keys on both sides: the joined result must exclude them
     ln = str(tmp_path / "ln")
     rn = str(tmp_path / "rn")
-    mf.manifest_upsert(
-        spark, ln,
+    _legacy_null_key_upsert(
+        monkeypatch, spark, ln,
         spark.createDataFrame([(1, "a"), (None, "n")], "k int, v string"),
         ["k"], n_buckets=2,
     )
-    mf.manifest_upsert(
-        spark, rn,
+    _legacy_null_key_upsert(
+        monkeypatch, spark, rn,
         spark.createDataFrame([(1, 10), (None, 99)], "k int, w long"),
         ["k"], n_buckets=2,
     )
@@ -1489,7 +1500,9 @@ def test_lookup_accepts_numpy_integer_keys(spark, tmp_path):
         mf.read_manifest_lookup(spark, table, {"k": np.int64(2**33)})
 
 
-def test_cojoin_semi_and_anti_match_spark_semantics(spark, tmp_path):
+def test_cojoin_semi_and_anti_match_spark_semantics(
+    spark, tmp_path, monkeypatch
+):
     """left_semi/left_anti co-located joins must match Spark's own
     semi/anti joins over the same snapshots — including null-keyed left
     rows (anti keeps them: null matches nothing) and buckets where the
@@ -1504,7 +1517,7 @@ def test_cojoin_semi_and_anti_match_spark_semantics(spark, tmp_path):
     rdf = spark.createDataFrame(
         [(i, i) for i in range(0, 100, 7)], "k int, w long"
     )
-    mf.manifest_upsert(spark, left, ldf, ["k"], n_buckets=8)
+    _legacy_null_key_upsert(monkeypatch, spark, left, ldf, ["k"], n_buckets=8)
     mf.manifest_upsert(spark, right, rdf, ["k"], n_buckets=8)
     mf.delete_where(spark, right, F.col("k") == 14)
     lsnap = mf.read_manifest_table(spark, left)

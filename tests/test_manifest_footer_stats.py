@@ -306,9 +306,23 @@ def test_upsert_runs_no_spark_job_after_the_segment_write(
 
     monkeypatch.setattr(mf, "_write_segment", write_then_mark)
     table = str(tmp_path / "t")
-    for lo, hi in ((0, 300), (100, 150)):  # create, then rewrite
-        mf.manifest_upsert(
-            spark, table, _rows(spark, lo, hi), ["k"], n_buckets=4
-        )
+    # every data commit shares the segment-write step: an upsert that
+    # creates, one that rewrites, a bucket compaction, a plain and a
+    # clustered optimize
+    ops = [
+        lambda: mf.manifest_upsert(
+            spark, table, _rows(spark, 0, 300), ["k"], n_buckets=4
+        ),
+        lambda: mf.manifest_upsert(
+            spark, table, _rows(spark, 100, 150), ["k"], n_buckets=4
+        ),
+        lambda: mf.compact_buckets(spark, table, bucket_ids=[0, 1]),
+        lambda: mf.optimize_table(spark, table),
+        lambda: mf.optimize_table(spark, table, cluster_by=["v", "ts"]),
+    ]
+    for op in ops:
+        n_marks = len(marks)
+        op()
+        assert len(marks) == n_marks + 1
         assert jobs() == marks[-1]
     assert mf.read_manifest_table(spark, table).count() == 300

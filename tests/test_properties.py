@@ -711,7 +711,7 @@ def _run_manifest_model(spark, tmp_path_factory, ops):
         assert got2 == model
         # the STREAM reader's per-bucket diff (aligned-rescale path or
         # global fallback, depending on the sequence's rescales) must
-        # emit exactly the library change feed over the same span
+        # emit exactly the diff of the two model states over the span
         import pyarrow as pa
 
         from trail_condition_etl_spark.sources import manifest_source as msrc
@@ -729,8 +729,13 @@ def _run_manifest_model(spark, tmp_path_factory, ops):
             for b in rdr.read(p)
             for row in pa.Table.from_batches([b]).to_pylist()
         }
+        before, after = snaps[base_v][0], snaps[versions[-1]][0]
         assert streamed == {
-            (r.k, getattr(r, vc), r.change_type) for r in feed
+            (k, None, "delete") for k in before.keys() - after.keys()
+        } | {
+            (k, v, "insert" if k not in before else "update")
+            for k, v in after.items()
+            if before.get(k) != v
         }
 
 

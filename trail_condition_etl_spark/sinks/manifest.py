@@ -364,6 +364,17 @@ def read_manifest(
     return _assemble(table_path, mf)
 
 
+def _require_manifest(
+    table_path: str, version: int | None = None, *, buckets: list | None = None
+) -> dict:
+    """`read_manifest` for a table that must exist: FileNotFoundError
+    when it has no commits yet."""
+    mf = read_manifest(table_path, version, buckets=buckets)
+    if mf is None:
+        raise FileNotFoundError(f"no committed manifest under {table_path}")
+    return mf
+
+
 def _span_manifests(
     table_path: str, frm: int, to: int
 ) -> tuple[dict | None, dict | None]:
@@ -810,13 +821,17 @@ class _SegmentFooters:
     entry already pins the dir — and the per-dir map is COMPLETE (every
     data file gets an entry): the read path treats a missing basename
     as unprunable, so completeness is what lets an empty surviving-file
-    list mean 'whole dir pruned'."""
+    list mean 'whole dir pruned'. `null_counts` ({top-level column ->
+    nulls in the whole segment}) leaves out a column some row group
+    records no null count for (parquet-java drops a column chunk's
+    statistics past 4 KB)."""
 
     stats: dict[str, dict[str, list]]
     file_stats: dict[str, dict[str, dict[str, list]]]
     row_counts: dict[str, int]
     files_written: int
     bytes_written: int
+    null_counts: dict[str, int]
 
 
 def _footer_value(v):
@@ -883,16 +898,34 @@ def _file_bounds(md, cols: list[str]) -> dict[str, tuple]:
     return out
 
 
+def _file_nulls(md) -> dict[str, int | None]:
+    """{top-level column -> nulls in one file}, None where a row group
+    records no null count."""
+    out = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.path != col.name:
+            continue
+        sts = [
+            md.row_group(r).column(i).statistics
+            for r in range(md.num_row_groups)
+        ]
+        known = all(st is not None and st.has_null_count for st in sts)
+        out[col.name] = sum(st.null_count for st in sts) if known else None
+    return out
+
+
 def _read_footers(seg_abs: str, stat_cols: list[str]) -> _SegmentFooters:
-    """Stats, row counts, file and byte totals for a freshly written
-    segment, read from its data files' parquet footers on the driver
-    (no Spark job; cost is one footer parse per written file). Pass
-    `stat_cols=[]` for counts only."""
+    """Stats, row counts, null counts, file and byte totals for a
+    freshly written segment, read from its data files' parquet footers
+    on the driver (no Spark job; cost is one footer parse per written
+    file)."""
     import pyarrow.parquet as pq
 
     stats: dict[str, dict[str, list]] = {}
     file_stats: dict[str, dict[str, dict[str, list]]] = {}
     row_counts: dict[str, int] = {}
+    nulls: dict[str, int | None] = {}
     n_files = n_bytes = 0
     for e in sorted(os.listdir(seg_abs)):
         if not e.startswith("pk_bucket="):
@@ -908,6 +941,9 @@ def _read_footers(seg_abs: str, stat_cols: list[str]) -> _SegmentFooters:
             n_files += 1
             n_bytes += os.path.getsize(path)
             row_counts[bucket] = row_counts.get(bucket, 0) + md.num_rows
+            for c, n in _file_nulls(md).items():
+                prev = nulls.get(c, 0)
+                nulls[c] = None if prev is None or n is None else prev + n
             fb = _file_bounds(md, stat_cols)
             file_stats.setdefault(bucket, {})[fn] = _row_col_stats(fb)
             # a bucket column is bounded only if every file bounds it
@@ -922,7 +958,10 @@ def _read_footers(seg_abs: str, stat_cols: list[str]) -> _SegmentFooters:
             )
         if merged is not None:
             stats[bucket] = _row_col_stats(merged)
-    return _SegmentFooters(stats, file_stats, row_counts, n_files, n_bytes)
+    known = {c: n for c, n in nulls.items() if n is not None}
+    return _SegmentFooters(
+        stats, file_stats, row_counts, n_files, n_bytes, known
+    )
 
 
 def _collect_blooms(
@@ -939,14 +978,14 @@ def _collect_blooms(
 
 
 def _segment_rows(
-    table_path: str,
     seg: str,
     footers: _SegmentFooters,
     blooms: dict,
     file_stats: bool = False,
 ) -> dict[str, dict]:
     """The complete per-bucket rows a freshly written segment (`seg`,
-    table-relative) commits: each bucket dir with its footer stats, row
+    table-relative) commits: each bucket dir (every dir holds a data
+    file, so the footers name them all) with its footer stats, row
     count and bloom bitmaps, plus per-file stats for a clustered
     write. A rewritten bucket has no pending deletes: the rewrite
     materialized them."""
@@ -956,13 +995,56 @@ def _segment_rows(
         "blooms": blooms,
         "file_stats": footers.file_stats if file_stats else {},
     }
-    rows = {}
-    for e in os.listdir(os.path.join(table_path, seg)):
-        if e.startswith("pk_bucket="):
-            b = e.split("=", 1)[1]
-            rows[b] = {"buckets": os.path.join(seg, e)}
-            rows[b].update((k, m[b]) for k, m in parts.items() if b in m)
-    return rows
+    return {
+        b: {
+            "buckets": os.path.join(seg, f"pk_bucket={b}"),
+            **{k: m[b] for k, m in parts.items() if b in m},
+        }
+        for b in footers.row_counts
+    }
+
+
+@dataclass(frozen=True)
+class _Segment:
+    """A freshly written segment: its absolute dir, the complete
+    per-bucket rows it commits (`_segment_rows`), the op_metrics it
+    wrote and its columns' null counts (`_SegmentFooters`)."""
+
+    path: str
+    rows: dict[str, dict]
+    metrics: dict[str, int]
+    null_counts: dict[str, int]
+
+
+def _write_bucketed(
+    spark: SparkSession,
+    table_path: str,
+    df: DataFrame,
+    bloom_cfg: dict | None = None,
+    file_stats: bool = False,
+    prefix: str = "seg",
+) -> _Segment:
+    """THE segment-write step of every data commit: write the bucketed,
+    physically named frame `df` (its distribution is the caller's) as
+    the new segment `data/<prefix>-<nonce>`, then describe it from its
+    footers and bloom bitmaps. Stats cover every orderable column of
+    `df`; a column the segment's files lack gets none."""
+    seg = os.path.join("data", f"{prefix}-{uuid.uuid4().hex[:12]}")
+    seg_abs = os.path.join(table_path, seg)
+    _write_segment(df, seg_abs)
+    footers = _read_footers(seg_abs, _stat_columns(df.schema))
+    rows = _segment_rows(
+        seg,
+        footers,
+        _collect_blooms(spark, seg_abs, bloom_cfg or {}),
+        file_stats,
+    )
+    metrics = {
+        "rows_written": sum(footers.row_counts.values()),
+        "files_written": footers.files_written,
+        "bytes_written": footers.bytes_written,
+    }
+    return _Segment(seg_abs, rows, metrics, footers.null_counts)
 
 
 def _type_names(schema: StructType) -> dict[str, str]:
@@ -1131,6 +1213,33 @@ def _apply_deletes(
     return df.join(F.broadcast(dels), mf["keys"], "left_anti")
 
 
+def _bucket_ids(key_rows: DataFrame, keys: list[str], n_buckets: int) -> list:
+    """The bucket ids the key rows `key_rows` hash into under a layout of
+    `n_buckets` buckets (one Spark job)."""
+    return [
+        r.pk_bucket
+        for r in _with_bucket(key_rows, keys, n_buckets)
+        .select("pk_bucket")
+        .distinct()
+        .collect()
+    ]
+
+
+def _read_buckets(
+    spark: SparkSession, table_path: str, mf: dict, bucket_ids
+) -> DataFrame | None:
+    """The current rows of the live buckets among `bucket_ids` (int or
+    str) of snapshot `mf`: their segments, LOGICAL-named, with pending
+    MoR deletes anti-joined out. None when none of them is live."""
+    live = [str(b) for b in bucket_ids if str(b) in mf["buckets"]]
+    if not live:
+        return None
+    dirs = [os.path.join(table_path, mf["buckets"][b]) for b in live]
+    return _apply_deletes(
+        spark, _read_segments(spark, mf, dirs), table_path, mf, live
+    )
+
+
 def delete_where(
     spark: SparkSession,
     table_path: str,
@@ -1179,36 +1288,28 @@ def delete_where(
     cond = F.expr(condition) if isinstance(condition, str) else condition
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path)
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path)
         keys = mf["keys"]
         current = read_manifest_table(spark, table_path, skip=skip)
         matched = _with_bucket(
             current.filter(cond).select(*keys), keys, mf["n_buckets"]
         )
-        rel = os.path.join("data", f"del-{uuid.uuid4().hex[:12]}")
-        del_abs = os.path.join(table_path, rel)
-        _write_segment(matched.repartition("pk_bucket"), del_abs)
-        hit = [
-            e for e in os.listdir(del_abs) if e.startswith("pk_bucket=")
-        ]
-        if not hit:
-            shutil.rmtree(del_abs, ignore_errors=True)
+        seg = _write_bucketed(
+            spark, table_path, matched.repartition("pk_bucket"), prefix="del"
+        )
+        if not seg.rows:
+            shutil.rmtree(seg.path, ignore_errors=True)
             return mf["version"]  # nothing matched: no empty commit
-        footers = _read_footers(del_abs, [])
-        per_bucket = footers.row_counts
         # a hit bucket keeps its segment, stats and (advisory) blooms:
         # MoR rows only DISAPPEAR, so a stale bit is a false positive
         # (wasted read), never a false negative (wrong prune)
         changed = {}
-        for e in hit:
-            b = e.split("=", 1)[1]
+        for b, hit in seg.rows.items():
             row = _row(mf, b)
-            row["deletes"] = [*row.get("deletes", []), os.path.join(rel, e)]
-            row["delete_counts"] = row.get("delete_counts", 0) + per_bucket[b]
+            row["deletes"] = [*row.get("deletes", []), hit["buckets"]]
+            row["delete_counts"] = (
+                row.get("delete_counts", 0) + hit["row_counts"]
+            )
             changed[b] = row
         return _commit_manifest(
             table_path,
@@ -1220,9 +1321,9 @@ def delete_where(
                 "op_metrics": {
                     "buckets_written": 0,
                     "buckets_carried": len(mf["buckets"]),
-                    "rows_deleted": sum(per_bucket.values()),
-                    "files_written": footers.files_written,
-                    "bytes_written": footers.bytes_written,
+                    "rows_deleted": seg.metrics["rows_written"],
+                    "files_written": seg.metrics["files_written"],
+                    "bytes_written": seg.metrics["bytes_written"],
                     "mode": "merge-on-read",
                 },
             },
@@ -1268,11 +1369,7 @@ def update_where(
         c: F.expr(e) if isinstance(e, str) else e for c, e in set.items()
     }
     for _ in range(_OCC_MAX_ATTEMPTS):
-        mf = read_manifest(table_path)
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path)
         bad = sorted(set.keys() & {*mf["keys"]})
         if bad:
             raise ValueError(
@@ -1359,11 +1456,7 @@ def restore_table(
         # slim scalars suffice: the restore publishes OLD's per-bucket
         # maps; from CURRENT it carries only constraints / generated /
         # bloom config / tombstones / txns (r12)
-        cur = read_manifest(table_path, buckets=[])
-        if cur is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        cur = _require_manifest(table_path, buckets=[])
         target = version
         if as_of is not None:
             if version is not None:
@@ -1464,6 +1557,41 @@ def restore_table(
         )
 
     return _under_lease(table_path, attempt)
+
+
+def _null_filled(df: DataFrame, schema: StructType) -> DataFrame:
+    """`df` plus a typed NULL column for every `schema` column it lacks:
+    a missing input IS a NULL input (the written row reads NULL there)."""
+    have = set(df.columns)
+    for f in schema.fields:
+        if f.name not in have:
+            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+    return df
+
+
+def _first_violation(
+    df: DataFrame, schema: StructType, rules: dict[str, F.Column]
+) -> tuple[str, dict] | None:
+    """(name of the first rule violated, the row) for some row of the
+    NULL-filled `df` that violates one of `rules` ({name -> Column true
+    where violated}), or None. ONE Spark action however many rules
+    (r13): each take(1) is a whole driver-side job at cluster scale, so
+    N rules must not cost N scans of the batch; a marker column names
+    the first rule the row violates. No rules, no action."""
+    if not rules:
+        return None
+    marker = "__violated"
+    viol = F.coalesce(*[F.when(v, F.lit(n)) for n, v in rules.items()])
+    bad = (
+        _null_filled(df, schema)
+        .withColumn(marker, viol)
+        .filter(F.col(marker).isNotNull())
+        .take(1)
+    )
+    if not bad:
+        return None
+    row = bad[0].asDict()
+    return row.pop(marker), row
 
 
 def manifest_upsert(
@@ -1599,62 +1727,37 @@ def manifest_upsert(
             gen_rules = mf.get("generated", {})
             if gen_rules:
                 # NULL-fill schema columns the narrow batch lacks so a
-                # rule referencing them resolves (a missing input IS a
-                # NULL input — the written row reads NULL there); the
-                # batch itself stays narrow except for the computed
-                # rule columns (r11: a delete-only merge batch is
-                # key-only and used to hit an unresolved-column error
-                # here, retried under the lease before surfacing)
+                # rule referencing them resolves; the batch itself
+                # stays narrow except for the computed rule columns
+                # (r11: a delete-only merge batch is key-only and used
+                # to hit an unresolved-column error here, retried under
+                # the lease before surfacing)
                 out_cols = list(ups.columns)
-                have = set(out_cols)
-                filled = ups
-                for tf in _data_schema(mf).fields:
-                    if tf.name not in have:
-                        filled = filled.withColumn(
-                            tf.name, F.lit(None).cast(tf.dataType)
-                        )
-                supplied = []
+                supplied = [g for g in gen_rules if g in out_cols]
+                filled = _null_filled(ups, _data_schema(mf))
                 for gcol, gexpr in gen_rules.items():
-                    if gcol in have:
-                        supplied.append(gcol)
-                    else:
+                    if gcol not in supplied:
                         filled = filled.withColumn(gcol, F.expr(gexpr))
                         out_cols.append(gcol)
-                        have.add(gcol)
-                if supplied:
-                    # ONE Spark action for every supplied rule (r13,
-                    # mirroring the merge-insert fix): each take(1)
-                    # is a whole driver-side job at cluster scale, so
-                    # N rules must not cost N scans of the batch; a
-                    # marker column names the first rule violated.
-                    # Validating after the compute loop means rules
-                    # may reference other generated columns too.
-                    viol = F.coalesce(
-                        *[
-                            F.when(
-                                ~F.col(g).eqNullSafe(
-                                    F.expr(gen_rules[g])
-                                ),
-                                F.lit(g),
-                            )
-                            for g in supplied
-                        ]
+                # validating after the compute loop means rules may
+                # reference other generated columns too
+                hit = _first_violation(
+                    filled,
+                    _data_schema(mf),
+                    {
+                        g: ~F.col(g).eqNullSafe(F.expr(gen_rules[g]))
+                        for g in supplied
+                    },
+                )
+                if hit:
+                    g, row = hit
+                    raise ValueError(
+                        f"generated column {g!r} = "
+                        f"({gen_rules[g]}) violated by the "
+                        f"incoming batch, e.g. {row} "
+                        f"({table_path}); omit the column to have "
+                        "it computed, or supply matching values"
                     )
-                    bad = (
-                        filled.withColumn("__gen_violated", viol)
-                        .filter(F.col("__gen_violated").isNotNull())
-                        .take(1)
-                    )
-                    if bad:
-                        row = bad[0].asDict()
-                        g = row.pop("__gen_violated")
-                        raise ValueError(
-                            f"generated column {g!r} = "
-                            f"({gen_rules[g]}) violated by the "
-                            f"incoming batch, e.g. {row} "
-                            f"({table_path}); omit the column to have "
-                            "it computed, or supply matching values"
-                        )
                 ups = filled.select(*out_cols)
             # CHECK constraints (Delta's ALTER TABLE ADD CONSTRAINT):
             # the incoming LIVE rows must satisfy every recorded
@@ -1663,39 +1766,22 @@ def manifest_upsert(
             # before any byte is written — the table stays untouched.
             # A narrow batch's missing columns land NULL, so they're
             # checked as NULL (not an analysis error).
-            if mf.get("constraints"):
-                checked = ups
-                have = set(ups.columns)
-                for tf in _data_schema(mf).fields:
-                    if tf.name not in have:
-                        checked = checked.withColumn(
-                            tf.name, F.lit(None).cast(tf.dataType)
-                        )
-                # one action for ALL constraints (r13), same shape as
-                # the generated-rule validation above
-                viol = F.coalesce(
-                    *[
-                        F.when(
-                            ~F.coalesce(F.expr(cexpr), F.lit(True)),
-                            F.lit(cname),
-                        )
-                        for cname, cexpr in mf["constraints"].items()
-                    ]
+            hit = _first_violation(
+                ups,
+                _data_schema(mf),
+                {
+                    cname: ~F.coalesce(F.expr(cexpr), F.lit(True))
+                    for cname, cexpr in mf.get("constraints", {}).items()
+                },
+            )
+            if hit:
+                cname, row = hit
+                raise ValueError(
+                    f"constraint {cname!r} "
+                    f"({mf['constraints'][cname]}) violated by "
+                    f"the incoming batch, e.g. {row} "
+                    f"({table_path}); commit rejected"
                 )
-                bad = (
-                    checked.withColumn("__ck_violated", viol)
-                    .filter(F.col("__ck_violated").isNotNull())
-                    .take(1)
-                )
-                if bad:
-                    row = bad[0].asDict()
-                    cname = row.pop("__ck_violated")
-                    raise ValueError(
-                        f"constraint {cname!r} "
-                        f"({mf['constraints'][cname]}) violated by "
-                        f"the incoming batch, e.g. {row} "
-                        f"({table_path}); commit rejected"
-                    )
         buckets_n = (
             mf["n_buckets"]
             if mf
@@ -1705,31 +1791,16 @@ def manifest_upsert(
         prev_touched: set[str] = set()
         merged = new_b
         if mf is not None and not replace:
-            touched = [
-                r.pk_bucket
-                for r in _with_bucket(changed_keys, keys, buckets_n)
-                .select("pk_bucket")
-                .distinct()
-                .collect()
-            ]
+            touched = _bucket_ids(changed_keys, keys, buckets_n)
             # the per-bucket maps of exactly the touched ranges:
             # O(change) sidecar parses on a sharded table
             src = read_manifest(table_path, mf["version"], buckets=touched)
             prev_touched = {
                 str(b) for b in touched if str(b) in src["buckets"]
             }
-            old_dirs = [
-                os.path.join(table_path, src["buckets"][b])
-                for b in sorted(prev_touched, key=int)
-            ]
-            if old_dirs:
-                existing = _apply_deletes(
-                    spark,
-                    _read_segments(spark, src, old_dirs),
-                    table_path,
-                    src,
-                    touched,
-                )  # pending MoR deletes materialize into the rewrite
+            # pending MoR deletes materialize into the rewrite
+            existing = _read_buckets(spark, table_path, src, touched)
+            if existing is not None:
                 kept = existing.join(changed_keys, keys, "left_anti")
                 # additive schema evolution (Delta's mergeSchema): a
                 # batch may ADD columns (old rows read back NULL there)
@@ -1756,15 +1827,29 @@ def manifest_upsert(
                     while fresh in taken:
                         fresh += "x"
                     mapping[c] = fresh
-        seg = os.path.join("data", f"seg-{uuid.uuid4().hex[:12]}")
-        seg_abs = os.path.join(table_path, seg)
         # cluster by bucket: each touched bucket is written by ONE task,
         # so it lands as one file (up to the row cap) instead of one per
-        # upstream partition holding its rows
-        _write_segment(
+        # upstream partition holding its rows. Rewritten buckets get
+        # fresh stats, row counts and bitmaps from the new segment
+        # (keyed by PHYSICAL name: they describe file contents); every
+        # other bucket carries its row
+        seg = _write_bucketed(
+            spark,
+            table_path,
             _to_physical_frame(merged, mapping).repartition("pk_bucket"),
-            seg_abs,
+            mf.get("bloom", {}) if mf is not None else {},
         )
+        # a null key matches no row, so it could never be replaced or
+        # deleted: refuse it before publish, from the footers' counts
+        null_keys = [k for k in keys if seg.null_counts.get(k)]
+        if null_keys:
+            shutil.rmtree(seg.path, ignore_errors=True)
+            raise ValueError(
+                f"merge key column(s) {null_keys} hold nulls in the rows "
+                f"this upsert writes ({table_path}): a null key matches "
+                "no existing row, so it could never be updated or "
+                "deleted; commit refused"
+            )
         # the recorded schema is the RUNNING UNION (prior columns keep
         # their position; a narrow batch must not shed columns earlier
         # commits added — their segments still carry the data)
@@ -1775,19 +1860,6 @@ def manifest_upsert(
             schema = StructType(
                 prev.fields + [f for f in schema.fields if f.name not in have]
             )
-        # rewritten buckets get fresh stats, row counts and bitmaps
-        # from the new segment (stats key by PHYSICAL name: they
-        # describe file contents); every other bucket carries its row
-        footers = _read_footers(
-            seg_abs, [mapping.get(c, c) for c in _stat_columns(schema)]
-        )
-        bloom_cfg = mf.get("bloom", {}) if mf is not None else {}
-        written = _segment_rows(
-            table_path,
-            seg,
-            footers,
-            _collect_blooms(spark, seg_abs, bloom_cfg),
-        )
         if mf is None:
             base, n_live = None, 0
         elif replace:
@@ -1818,17 +1890,15 @@ def manifest_upsert(
                 },
                 "operation": operation,
                 "op_metrics": {
-                    "buckets_written": len(written),
+                    "buckets_written": len(seg.rows),
                     "buckets_carried": n_live - len(prev_touched),
-                    "rows_written": sum(footers.row_counts.values()),
-                    "files_written": footers.files_written,
-                    "bytes_written": footers.bytes_written,
+                    **seg.metrics,
                 },
             },
-            written,
+            seg.rows,
             # touched buckets that existed but got no new dir were fully
             # tombstoned: drop them
-            prev_touched - set(written),
+            prev_touched - set(seg.rows),
         )
 
     return _under_lease(
@@ -1937,9 +2007,7 @@ def _merge_into_once(
     # slim scalars first (zero sidecar parses on sharded tables): the
     # clause validation and batch construction below are all scalar;
     # per-bucket maps load only for the touched buckets (r13)
-    mf = read_manifest(table_path, buckets=[])
-    if mf is None:
-        raise FileNotFoundError(f"no committed manifest under {table_path}")
+    mf = _require_manifest(table_path, buckets=[])
     keys = mf["keys"]
     schema = _data_schema(mf)
     by_source = (
@@ -1953,29 +2021,15 @@ def _merge_into_once(
         snap = read_manifest(table_path, mf["version"])
         touched = [int(b) for b in snap["buckets"]]
     else:
-        touched = [
-            r.pk_bucket
-            for r in _with_bucket(
-                source.select(*keys).distinct(), keys, mf["n_buckets"]
-            )
-            .select("pk_bucket")
-            .distinct()
-            .collect()
-        ]
+        touched = _bucket_ids(
+            source.select(*keys).distinct(), keys, mf["n_buckets"]
+        )
         snap = read_manifest(table_path, mf["version"], buckets=touched)
-    dirs = [
-        os.path.join(table_path, snap["buckets"][str(b)])
-        for b in touched
-        if str(b) in snap["buckets"]
-    ]
-    tgt = (
-        _read_segments(spark, snap, dirs)
-        if dirs
-        else spark.createDataFrame([], schema)
-    )
     # a key with a pending MoR delete reads as NOT MATCHED (a matching
     # source row re-inserts it, never resurrects the old values)
-    tgt = _apply_deletes(spark, tgt, table_path, snap, touched)
+    tgt = _read_buckets(spark, table_path, snap, touched)
+    if tgt is None:
+        tgt = spark.createDataFrame([], schema)
     s, t = source.alias("src"), tgt.alias("tgt")
     joined = s.join(t, on=keys, how="inner")
     data_cols = [f.name for f in schema.fields if f.name not in keys]
@@ -2033,47 +2087,24 @@ def _merge_into_once(
         # (ADVICE r11; Delta likewise errors on a violating explicit
         # value). Inputs the source lacks validate as NULL, same as
         # the write edge.
-        supplied = [
-            (gcol, gexpr)
-            for gcol, gexpr in gen.items()
-            if gcol in ins.columns
-        ]
-        if supplied:
-            # the NULL-fill is loop-invariant and each rule is an
-            # independent predicate: build the frame once and OR the
-            # violations into ONE take(1) action instead of one full
-            # scan of the insert side per supplied column (ADVICE r12);
-            # a marker column names the first rule the row violates
-            filled = ins
-            for tf in schema.fields:
-                if tf.name not in ins.columns:
-                    filled = filled.withColumn(
-                        tf.name, F.lit(None).cast(tf.dataType)
-                    )
-            viol = F.coalesce(
-                *[
-                    F.when(
-                        ~F.col(gcol).eqNullSafe(F.expr(gexpr)),
-                        F.lit(gcol),
-                    )
-                    for gcol, gexpr in supplied
-                ]
+        hit = _first_violation(
+            ins,
+            schema,
+            {
+                gcol: ~F.col(gcol).eqNullSafe(F.expr(gexpr))
+                for gcol, gexpr in gen.items()
+                if gcol in ins.columns
+            },
+        )
+        if hit:
+            gcol, row = hit
+            raise ValueError(
+                f"generated column {gcol!r} = ({gen[gcol]}) "
+                f"violated by a merge insert row, e.g. "
+                f"{row} ({table_path}); omit the "
+                "column to have it computed, or supply matching "
+                "values"
             )
-            bad = (
-                filled.withColumn("__gen_violated", viol)
-                .filter(F.col("__gen_violated").isNotNull())
-                .take(1)
-            )
-            if bad:
-                row = bad[0].asDict()
-                gcol = row.pop("__gen_violated")
-                raise ValueError(
-                    f"generated column {gcol!r} = ({gen[gcol]}) "
-                    f"violated by a merge insert row, e.g. "
-                    f"{row} ({table_path}); omit the "
-                    "column to have it computed, or supply matching "
-                    "values"
-                )
         parts.append(ins.withColumn(tomb, F.lit(False)))
     if by_source:
         # target rows with NO source row for their key; conditions and
@@ -2163,11 +2194,7 @@ def add_table_constraint(
     explicit `col IS NOT NULL` constraint for NOT NULL)."""
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path, buckets=[])  # scalars suffice
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path, buckets=[])  # scalars suffice
         if name in mf.get("constraints", {}):
             raise ValueError(
                 f"constraint {name!r} already exists on {table_path} "
@@ -2204,11 +2231,7 @@ def drop_table_constraint(
     """Metadata-only commit removing a recorded constraint."""
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path, buckets=[])  # scalars suffice
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path, buckets=[])  # scalars suffice
         cons = dict(mf.get("constraints", {}))
         if name not in cons:
             raise ValueError(
@@ -2257,11 +2280,7 @@ def add_bloom_index(
         raise ValueError(f"bloom k must be positive: {k}")
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path)
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path)
         cfg = dict(mf.get("bloom", {}))
         if column in cfg:
             raise ValueError(
@@ -2359,11 +2378,7 @@ def drop_bloom_index(
     """Metadata-only commit removing a bloom index and its bitmaps."""
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path)
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path)
         cfg = dict(mf.get("bloom", {}))
         pcol = _physical_name(mf, column)
         if pcol not in cfg:
@@ -2406,11 +2421,7 @@ def add_generated_column(
     supply their keys — bucket planning runs before generation)."""
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path, buckets=[])  # scalars suffice
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path, buckets=[])  # scalars suffice
         gen = dict(mf.get("generated", {}))
         if column in gen:
             raise ValueError(
@@ -2463,11 +2474,7 @@ def drop_generated_column(
     column itself stays, as plain data)."""
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path, buckets=[])  # scalars suffice
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path, buckets=[])  # scalars suffice
         gen = dict(mf.get("generated", {}))
         if column not in gen:
             raise ValueError(
@@ -2643,11 +2650,7 @@ def rename_column(
     import re as _re
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path, buckets=[])  # scalars suffice
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path, buckets=[])  # scalars suffice
         schema = _data_schema(mf)
         names = [f.name for f in schema.fields]
         if old not in names:
@@ -2715,11 +2718,7 @@ def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
     import re as _re
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path)
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path)
         schema = _data_schema(mf)
         names = [f.name for f in schema.fields]
         if col not in names:
@@ -2823,9 +2822,7 @@ def read_manifest_table(
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         version = version_as_of(table_path, as_of)
-    mf = read_manifest(table_path, version)
-    if mf is None:
-        raise FileNotFoundError(f"no committed manifest under {table_path}")
+    mf = _require_manifest(table_path, version)
     schema = _data_schema(mf)
     items = mf["buckets"].items()
     skip_p = _skip_physical(mf, skip) if skip else skip
@@ -2904,9 +2901,7 @@ def read_manifest_lookup(
     # buckets, then only the COVERING sidecar ranges resolve — a point
     # probe on a sharded 800k-bucket table parses O(keys) metadata,
     # not O(n_buckets). Inline tables assemble fully either way.
-    mf = read_manifest(table_path, version, buckets=[])
-    if mf is None:
-        raise FileNotFoundError(f"no committed manifest under {table_path}")
+    mf = _require_manifest(table_path, version, buckets=[])
     version = mf["version"]  # pin: the covering re-read below must
     # resolve the SAME snapshot even if a commit lands in between
     keys = mf["keys"]
@@ -2942,13 +2937,8 @@ def read_manifest_lookup(
         )
     else:  # exotic key type: plan with the engine's own hash
         lookup = spark.createDataFrame(rows, key_schema)
-        bucket_ids = sorted(
-            r.pk_bucket
-            for r in _with_bucket(lookup, keys, mf["n_buckets"])
-            .select("pk_bucket")
-            .distinct()
-            .collect()
-        )  # bounded by the number of requested keys
+        # bounded by the number of requested keys
+        bucket_ids = sorted(_bucket_ids(lookup, keys, mf["n_buckets"]))
     mf = read_manifest(table_path, version, buckets=bucket_ids)
     stats = mf.get("stats", {})
     fstats = mf.get("file_stats", {})
@@ -3005,9 +2995,7 @@ def manifest_row_count(
     # slim-first (r11): publish stamps the precomputed exact count
     # into the slim manifest, so a sharded table's COUNT parses zero
     # sidecars. Pre-r11 manifests fall through to the assembled maps.
-    mf = read_manifest(table_path, version, buckets=[])
-    if mf is None:
-        raise FileNotFoundError(f"no committed manifest under {table_path}")
+    mf = _require_manifest(table_path, version, buckets=[])
     if "total_rows" in mf:
         return mf["total_rows"]
     # pin the RESOLVED version before the full fallback read (ADVICE
@@ -3070,6 +3058,162 @@ def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
+def _bucket_files(table_path: str, mf: dict) -> dict[str, tuple[int, int]]:
+    """{bucket -> (data files, bytes)} of the snapshot's bucket dirs, in
+    manifest order: one listing per dir, no data read. A dir or file
+    that cannot be listed (swept by a concurrent optimize/vacuum)
+    counts as empty."""
+    out = {}
+    for b, d in mf["buckets"].items():
+        n = size = 0
+        try:
+            with os.scandir(os.path.join(table_path, d)) as entries:
+                for e in entries:
+                    if e.name.endswith(".parquet"):
+                        n += 1
+                        try:
+                            size += e.stat().st_size
+                        except OSError:
+                            pass
+        except OSError:
+            pass
+        out[b] = (n, size)
+    return out
+
+
+def _z_value(
+    current: DataFrame, types: dict, cluster_by: list[str]
+) -> F.Column:
+    """The clustering value of a row: one column sorts directly; 2+
+    columns are linearly quantized to 16 bits each against the frame's
+    global [min, max] (one small agg job), then Morton-interleaved.
+    Skewed data just yields uneven bin occupancy — file SIZES stay
+    balanced because the range partitioner samples the composite key."""
+    if len(cluster_by) == 1:
+        return _orderable_double(cluster_by[0], types[cluster_by[0]])
+    longs = {c: _orderable_double(c, types[c]) for c in cluster_by}
+    bounds = current.agg(
+        *[
+            f
+            for c in cluster_by
+            for f in (
+                F.min(longs[c]).alias(f"__mn_{c}"),
+                F.max(longs[c]).alias(f"__mx_{c}"),
+            )
+        ]
+    ).collect()[0]
+    bins = []
+    for c in cluster_by:
+        mn = bounds[f"__mn_{c}"]
+        mx = bounds[f"__mx_{c}"]
+        if mn is None or mx is None or not mx > mn:
+            bins.append(F.lit(0).cast("long"))
+            continue
+        step = (float(mx) - float(mn)) / 65535.0
+        bins.append(
+            F.least(
+                F.lit(65535),
+                F.greatest(
+                    F.lit(0),
+                    F.floor((longs[c] - F.lit(float(mn))) / F.lit(step)),
+                ),
+            ).cast("long")
+        )
+    return _z_interleave(bins)
+
+
+def _rewrite_buckets(
+    spark: SparkSession,
+    table_path: str,
+    token: int,
+    mf: dict,
+    targets: set[str],
+    n_buckets: int,
+    operation: str,
+    op_metrics: dict,
+    cluster_by: list[str] | None = None,
+    files_per_bucket: int = 1,
+) -> int:
+    """THE bucket rewrite (`optimize_table` targets every bucket,
+    `compact_buckets` some): read the `targets` buckets of the
+    assembled snapshot `mf`, materialize their pending MoR deletes,
+    hash their rows into a layout of `n_buckets` buckets, write one
+    segment and commit it as `operation` with `op_metrics` added to the
+    written metrics. Returns the new version.
+
+    Each output bucket is written by one task: one file (up to the row
+    cap), or with `cluster_by` ~`files_per_bucket` range-partitioned
+    files with per-file stats (see `optimize_table`). What the commit
+    keeps follows from the targets: every other bucket carries by
+    reference (a layout change must therefore target every bucket), a
+    target that writes no row drops out, and only a rewrite that
+    carries nothing starts from the table's scalars and clears
+    `retired_physical` — the rewrite reads live logical columns only,
+    so a dropped column's bytes survive just in carried buckets."""
+    current = _read_buckets(spark, table_path, mf, sorted(targets, key=int))
+    if current is None:
+        current = spark.createDataFrame([], _data_schema(mf))
+    bucketed = _with_bucket(current, mf["keys"], n_buckets)
+    # one task per bucket the targets can fill in the new layout
+    tasks = max(1, len(targets) * n_buckets // mf["n_buckets"])
+    if cluster_by:
+        types = {f.name: f.dataType for f in _data_schema(mf).fields}
+        missing = [c for c in cluster_by if c not in types]
+        if missing:
+            raise ValueError(
+                f"cluster_by columns {missing} not in table schema "
+                f"({table_path})"
+            )
+        zcol = _z_value(current, types, cluster_by)
+        bucketed = (
+            bucketed.withColumn(
+                "_z", F.coalesce(zcol.cast("double"), F.lit(float("-inf")))
+            )
+            .repartitionByRange(
+                tasks * max(1, files_per_bucket), "pk_bucket", "_z"
+            )
+            .sortWithinPartitions("pk_bucket", "_z")
+            .drop("_z")
+        )
+    else:
+        bucketed = bucketed.repartition(tasks, "pk_bucket")
+    # written under PHYSICAL names, preserving each column's physical
+    # identity across the rewrite (Delta keeps field IDs stable through
+    # REORG): CDF/table_changes align old/new sides by physical
+    # identity, so a rewrite between two span endpoints must not re-key
+    # renamed columns. Bloom config keys by physical name too, so it
+    # carries unchanged.
+    seg = _write_bucketed(
+        spark,
+        table_path,
+        _to_physical_frame(bucketed, _mapping(mf)),
+        mf.get("bloom", {}),
+        file_stats=bool(cluster_by),
+    )
+    carried = set(mf["buckets"]) - targets
+    scalars = {
+        "version": mf["version"] + 1,
+        "n_buckets": n_buckets,
+        "operation": operation,
+        "op_metrics": {
+            "buckets_written": len(seg.rows),
+            "buckets_carried": len(carried),
+            **seg.metrics,
+            **op_metrics,
+        },
+    }
+    if not carried:
+        scalars["retired_physical"] = []
+    return _commit_manifest(
+        table_path,
+        token,
+        _read_slim(table_path, mf["version"]) if carried else _scalars(mf),
+        scalars,
+        seg.rows,
+        targets - set(seg.rows),
+    )
+
+
 def optimize_table(
     spark: SparkSession,
     table_path: str,
@@ -3109,133 +3253,23 @@ def optimize_table(
     optimize rewrite, whatever the layout."""
 
     def attempt(token: int) -> int:
-        mf = read_manifest(table_path)
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path)
         if n_buckets is not None and n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        new_n = n_buckets if n_buckets is not None else mf["n_buckets"]
-        current = read_manifest_table(spark, table_path)
-        # stats/file_stats key by PHYSICAL name (they describe file
-        # contents) and the rewrite below writes physical-named files
-        stat_cols = _stat_columns(_physical_schema(mf))
-        if cluster_by:
-            types = {f.name: f.dataType for f in _data_schema(mf).fields}
-            missing = [c for c in cluster_by if c not in types]
-            if missing:
-                raise ValueError(
-                    f"cluster_by columns {missing} not in table schema "
-                    f"({table_path})"
-                )
-            if len(cluster_by) == 1:
-                c = cluster_by[0]
-                zcol = _orderable_double(c, types[c])
-            else:
-                # linear 16-bit quantization per dimension against the
-                # snapshot's global [min, max] (one small agg job), then
-                # Morton interleave. Skewed data just yields uneven bin
-                # occupancy — file SIZES stay balanced because the range
-                # partitioner samples the composite key.
-                longs = {
-                    c: _orderable_double(c, types[c]) for c in cluster_by
-                }
-                bounds = current.agg(
-                    *[
-                        f
-                        for c in cluster_by
-                        for f in (
-                            F.min(longs[c]).alias(f"__mn_{c}"),
-                            F.max(longs[c]).alias(f"__mx_{c}"),
-                        )
-                    ]
-                ).collect()[0]
-                bins = []
-                for c in cluster_by:
-                    mn = bounds[f"__mn_{c}"]
-                    mx = bounds[f"__mx_{c}"]
-                    if mn is None or mx is None or not mx > mn:
-                        bins.append(F.lit(0).cast("long"))
-                        continue
-                    step = (float(mx) - float(mn)) / 65535.0
-                    bins.append(
-                        F.least(
-                            F.lit(65535),
-                            F.greatest(
-                                F.lit(0),
-                                F.floor(
-                                    (longs[c] - F.lit(float(mn)))
-                                    / F.lit(step)
-                                ),
-                            ),
-                        ).cast("long")
-                    )
-                zcol = _z_interleave(bins)
-            merged = (
-                _with_bucket(current, mf["keys"], new_n)
-                .withColumn(
-                    "_z", F.coalesce(zcol.cast("double"), F.lit(float("-inf")))
-                )
-                .repartitionByRange(
-                    new_n * max(1, files_per_bucket),
-                    "pk_bucket",
-                    "_z",
-                )
-                .sortWithinPartitions("pk_bucket", "_z")
-                .drop("_z")
-            )
-        else:
-            # hash-repartition on the bucket column => each bucket's rows
-            # land in exactly one task => exactly one file per bucket dir
-            merged = _with_bucket(
-                current, mf["keys"], new_n
-            ).repartition(new_n, "pk_bucket")
-        seg = os.path.join("data", f"seg-{uuid.uuid4().hex[:12]}")
-        seg_abs = os.path.join(table_path, seg)
-        # Write under PHYSICAL names, preserving each column's assigned
-        # physical identity across the rewrite (Delta keeps field IDs
-        # stable through REORG). CDF/table_changes align old/new sides
-        # by physical identity, so an optimize between two CDF span
-        # endpoints must not re-key renamed columns. Dropped columns DO
-        # purge here (`current` carries only live logical columns), so
-        # retired_physical still clears below.
-        _write_segment(_to_physical_frame(merged, _mapping(mf)), seg_abs)
-        footers = _read_footers(seg_abs, stat_cols)
-        # bloom config keys by physical name and the rewrite preserved
-        # physical names, so the config carries through unchanged
-        written = _segment_rows(
-            table_path,
-            seg,
-            footers,
-            _collect_blooms(spark, seg_abs, mf.get("bloom", {})),
-            file_stats=bool(cluster_by),
-        )
-        # a full rewrite: the table's fields carry, none of its buckets
-        return _commit_manifest(
+        return _rewrite_buckets(
+            spark,
             table_path,
             token,
-            _scalars(mf),
+            mf,
+            set(mf["buckets"]),
+            n_buckets if n_buckets is not None else mf["n_buckets"],
+            "optimize",
             {
-                "version": mf["version"] + 1,
-                "n_buckets": new_n,
-                # physical names survive the rewrite (stable field
-                # identity, like Delta REORG keeping field IDs); dropped
-                # columns are physically purged — APPLY (PURGE) folded
-                # into optimize — so their tombstones can retire
-                "retired_physical": [],
-                "operation": "optimize",
-                "op_metrics": {
-                    "buckets_written": len(written),
-                    "buckets_carried": 0,
-                    "rows_written": sum(footers.row_counts.values()),
-                    "files_written": footers.files_written,
-                    "bytes_written": footers.bytes_written,
-                    "cluster_by": list(cluster_by) if cluster_by else None,
-                    "n_buckets": new_n if n_buckets is not None else None,
-                },
+                "cluster_by": list(cluster_by) if cluster_by else None,
+                "n_buckets": n_buckets,
             },
-            written,
+            cluster_by,
+            files_per_bucket,
         )
 
     return _under_lease(table_path, attempt)
@@ -3393,11 +3427,7 @@ def compact_buckets(
     when range reads matter, same contract as an upsert rewrite.
     Returns the new version, or None when nothing is over threshold."""
     def attempt(token: int) -> int | None:
-        mf = read_manifest(table_path)
-        if mf is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {table_path}"
-            )
+        mf = _require_manifest(table_path)
         if bucket_ids is not None:
             targets = {str(b) for b in bucket_ids}
             unknown = targets - set(mf["buckets"])
@@ -3408,71 +3438,24 @@ def compact_buckets(
                     f"(have: {sorted(mf['buckets'])})"
                 )
         else:
-            targets = set()
-            for b, d in mf["buckets"].items():
-                try:
-                    n_files = sum(
-                        1
-                        for fn in os.listdir(os.path.join(table_path, d))
-                        if fn.endswith(".parquet")
-                    )
-                except OSError:
-                    continue
-                if n_files > _file_debt_floor(mf, b, max_files_per_bucket):
-                    targets.add(b)
-            targets |= set(mf.get("deletes", {}))
+            # listed under the lease: a layout change committed since a
+            # caller's own listing cannot name a bucket this snapshot lacks
+            targets = {
+                b
+                for b, (n_files, _) in _bucket_files(table_path, mf).items()
+                if n_files > _file_debt_floor(mf, b, max_files_per_bucket)
+            } | set(mf.get("deletes", {}))
         if not targets:
             return None
-        dirs = [
-            os.path.join(table_path, mf["buckets"][b])
-            for b in sorted(targets)
-            if b in mf["buckets"]
-        ]
-        cur = _apply_deletes(
+        return _rewrite_buckets(
             spark,
-            _read_segments(spark, mf, dirs),
-            table_path,
-            mf,
-            sorted(targets),
-        )
-        merged = _with_bucket(cur, mf["keys"], mf["n_buckets"]).repartition(
-            max(1, len(targets)), "pk_bucket"
-        )
-        seg = os.path.join("data", f"seg-{uuid.uuid4().hex[:12]}")
-        seg_abs = os.path.join(table_path, seg)
-        _write_segment(_to_physical_frame(merged, _mapping(mf)), seg_abs)
-        stat_cols = [
-            _physical_name(mf, c)
-            for c in _stat_columns(_data_schema(mf))
-        ]
-        footers = _read_footers(seg_abs, stat_cols)
-        # compacted buckets get fresh stats/bitmaps and lose clustering;
-        # an all-deleted target writes nothing and drops out of the map
-        # entirely — same semantics as an upsert rewrite
-        written = _segment_rows(
-            table_path,
-            seg,
-            footers,
-            _collect_blooms(spark, seg_abs, mf.get("bloom", {})),
-        )
-        return _commit_manifest(
             table_path,
             token,
-            _read_slim(table_path, mf["version"]),
-            {
-                "version": mf["version"] + 1,
-                "operation": "compact",
-                "op_metrics": {
-                    "buckets_written": len(written),
-                    "buckets_carried": len(set(mf["buckets"]) - targets),
-                    "buckets_targeted": len(targets),
-                    "rows_written": sum(footers.row_counts.values()),
-                    "files_written": footers.files_written,
-                    "bytes_written": footers.bytes_written,
-                },
-            },
-            written,
-            targets - set(written),
+            mf,
+            targets,
+            mf["n_buckets"],
+            "compact",
+            {"buckets_targeted": len(targets)},
         )
 
     return _under_lease(table_path, attempt)
@@ -3514,9 +3497,7 @@ def maintain_table(
     ceiling, the optimize RESCALES the layout (`n_buckets` grows) so
     post-maintenance buckets sit at about half the ceiling — the same
     check is still pure metadata (the dir listing already in hand)."""
-    mf = read_manifest(table_path)
-    if mf is None:
-        raise FileNotFoundError(f"no committed manifest under {table_path}")
+    mf = _require_manifest(table_path)
     if cluster_by is None:
         for v in reversed(list_versions(table_path)):
             # operation / op_metrics are slim scalars: the walk parses
@@ -3525,34 +3506,18 @@ def maintain_table(
             if past.get("operation") == "optimize":
                 cluster_by = past.get("op_metrics", {}).get("cluster_by")
                 break
-    size_policy = max_bucket_bytes is not None
-    file_debt = False
-    worst_bytes = 0
-    worst_dir = None
-    total_bytes = 0
-    for b, d in mf["buckets"].items():
-        n = 0
-        b_bytes = 0
-        try:
-            for fn in os.listdir(os.path.join(table_path, d)):
-                if fn.endswith(".parquet"):
-                    n += 1
-                    if size_policy:
-                        try:
-                            b_bytes += os.path.getsize(
-                                os.path.join(table_path, d, fn)
-                            )
-                        except OSError:
-                            pass
-        except OSError:
-            pass
-        file_debt |= n > _file_debt_floor(mf, b, max_files_per_bucket)
-        if b_bytes > worst_bytes:
-            worst_bytes = b_bytes
-            worst_dir = d
-        total_bytes += b_bytes
+    # a policy check outside the lease; `compact_buckets` lists again
+    # under it
+    files = _bucket_files(table_path, mf)
+    file_debt = any(
+        n > _file_debt_floor(mf, b, max_files_per_bucket)
+        for b, (n, _) in files.items()
+    )
+    worst = max(files, key=lambda b: files[b][1], default=None)
     rescale_to = None
-    if size_policy and worst_bytes > max_bucket_bytes:
+    if max_bucket_bytes is not None and worst is not None and (
+        files[worst][1] > max_bucket_bytes
+    ):
         # size new buckets by the shared rule, aligned to the current
         # layout; never shrink the layout here. CONVERGES by
         # construction: rescale only when the layout is UNDERSIZED for
@@ -3563,10 +3528,11 @@ def maintain_table(
         # arbitrary (unaligned) count would collapse any CDC stream
         # span containing the rescale to one task.
         n = mf["n_buckets"]
+        total_bytes = sum(size for _, size in files.values())
         sized = sized_buckets(total_bytes, max_bucket_bytes, n)
         if sized > n:
             rescale_to = sized
-        elif worst_dir is not None:
+        else:
             # secondary trigger (ADVICE r7): the layout is NOT
             # undersized for total bytes, yet one bucket is fat. That
             # is either several distinct keys hash-colliding at small n
@@ -3577,7 +3543,9 @@ def maintain_table(
             # separates colliding keys, and a singleton-key bucket stops
             # the doubling with a surfaced warning instead of rewriting
             # the table forever.
-            rescale_to = _collision_rescale(mf, table_path, worst_dir)
+            rescale_to = _collision_rescale(
+                mf, table_path, mf["buckets"][worst]
+            )
     n_delete_files = sum(len(v) for v in mf.get("deletes", {}).values())
     if (
         rescale_to is None
@@ -3631,9 +3599,7 @@ def table_changes(
     driver, per the CDC retention contract."""
     from ..sources.manifest_source import register_manifest_sources
 
-    mf = read_manifest(table_path, to_version, buckets=[])  # slim
-    if mf is None:
-        raise FileNotFoundError(f"no committed manifest under {table_path}")
+    mf = _require_manifest(table_path, to_version, buckets=[])  # slim
     if from_version > 0:  # a vacuumed baseline raises here
         read_manifest(table_path, from_version, buckets=[])
     register_manifest_sources(spark)
@@ -3693,12 +3659,7 @@ def clone_table(
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         target = version_as_of(src_path, as_of)
-    mf = read_manifest(src_path, target)
-    if mf is None:
-        raise FileNotFoundError(
-            f"no committed manifest under {src_path}"
-            + (f" at version {target}" if target is not None else "")
-        )
+    mf = _require_manifest(src_path, target)
     if list_versions(dst_path):
         raise ValueError(
             f"{dst_path} already has a committed manifest: clone into a "

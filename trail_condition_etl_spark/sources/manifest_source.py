@@ -1316,14 +1316,23 @@ class ManifestCDCDataSource(DataSource):
         return ManifestCDCStreamReader(schema, self.options)
 
 
+#: session conf marking a session that has both formats registered
+_SOURCES_REGISTERED = "trail_condition_etl_spark.manifestSourcesRegistered"
+
+
 def register_manifest_sources(spark) -> None:
-    """Idempotent registration of both formats on a session. Also
-    enables the conf-gated Python-source filter pushdown (off by
-    default in Spark 4.1; without it a reader implementing pushFilters
-    is an analysis-time error, not a silent no-pushdown)."""
+    """Idempotent registration of both formats on a session: the first
+    call registers them and marks the session's conf, later calls skip
+    (Spark logs a WARN for every re-registration). Also enables the
+    conf-gated Python-source filter pushdown (off by default in Spark
+    4.1; without it a reader implementing pushFilters is an
+    analysis-time error, not a silent no-pushdown)."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    if spark.conf.get(_SOURCES_REGISTERED, ""):
+        return
     spark.dataSource.register(ManifestDataSource)
     spark.dataSource.register(ManifestCDCDataSource)
+    spark.conf.set(_SOURCES_REGISTERED, "true")
 
 
 # ---------------------------------------------------------------------------
